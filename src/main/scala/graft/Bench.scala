@@ -614,7 +614,9 @@ object Bench {
       case 2 => fmt(if (v > 0) math.max(v, 0.01) else v, 2)
       case 1 => fmt(if (v > 0) math.max(v, 0.1) else v, 1)
       case 0 => fmt(v, 0) // legacy integer fallback rungs, unchanged
-      case _ => if (v >= 0.95) fmt(v, 0) else fmt(math.max(v, 0.1), 1)
+      case _ =>
+        if (v >= 0.95) fmt(v, 0)
+        else fmt(if (v > 0) math.max(v, 0.1) else v, 1)
     }
     val candidates =
       (results, 2, extras) #:: LazyList.from(

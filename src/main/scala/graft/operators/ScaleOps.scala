@@ -3799,9 +3799,8 @@ object ScaleOps {
   // x46 — TIMESTAMP TIME TRAVEL (Delta's TIMESTAMP AS OF): every
   //       commit writes a strictly-monotonic IN-COMMIT timestamp into
   //       its manifest (Delta's inCommitTimestamps — robust to clock
-  //       skew and same-millisecond commits, unlike raw file mtimes,
-  //       which remain the documented fallback for pre-ICT
-  //       manifests), and `readAsOf(ts)` / the batch source's
+  //       skew and same-millisecond commits, unlike raw file mtimes),
+  //       and `readAsOf(ts)` / the batch source's
   //       `timestampAsOf` option binary-search O(log versions)
   //       manifests to the version current at that instant. The gated
   //       query builds create → merge → delete, reads the v1 and v3
@@ -3872,8 +3871,7 @@ object ScaleOps {
   //       so `t.count(v)` = Σ data rows − Σ DV positions is answered
   //       from ONE manifest read — no data file opened
   //       (GraftTableSpec proves it by physically hiding every data
-  //       file; pre-counter manifests and pre-retirement stale DVs
-  //       are DETECTED and fall back to an exact scan). The gated
+  //       file). The gated
   //       query counts the table before and after a MoR delete
   //       through the metadata path against the plain relational
   //       COUNT oracle.

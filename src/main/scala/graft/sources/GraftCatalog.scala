@@ -95,48 +95,6 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
   private val ManagedLine = "managed"
   private val ExternalLine = "external"
 
-  /** the pointer directory serving an EXISTING table: the normalized
-    * path, falling back to the byte-exact path for tables created by
-    * pre-normalization builds under mixed-case directories (the
-    * round-16 advisor's one-way break — normalization must not
-    * strand them; note the fallback read is case-SENSITIVE, exactly
-    * what those legacy pointers were) */
-  private def lookupRoot(ident: Identifier): String =
-    resolveConf(ident)._1
-
-  /** one conf read per lookup: the resolved pointer directory plus
-    * its parsed conf (None = no such table) — callers previously
-    * re-read the conf after lookupRoot's own existence probe, 2-4
-    * filesystem round-trips per analysis-time table load */
-  private def resolveConf(ident: Identifier)
-      : (String, Option[(String, String, StructType, Option[Boolean])]) = {
-    val n = rootOf(ident)
-    val c = readConf(n)
-    if (c.isDefined) return (n, c)
-    val exact = (warehouse +: (ident.namespace() :+ ident.name()).toSeq)
-      .mkString("/")
-    if (exact != n) {
-      val ce = readConf(exact)
-      if (ce.isDefined) return (exact, ce)
-    }
-    (n, None)
-  }
-
-  /** is this pointer an EXTERNAL (read-only, x65) registration?
-    * AUTHORITATIVE source: the pointer's own 4th line
-    * (managed/external), written atomically WITH the pointer since
-    * round 18 — ownership rides the one exclusively-created file, so
-    * no marker-file interleaving can flip a table's mode (the
-    * round-17 advisor's registerPointer/registerExternal race).
-    * LEGACY pointers (3 lines) fall back to the external.conf marker
-    * beside them. Reads/time travel/streams serve on external tables;
-    * every mutation refuses; DROP removes only the pointer. */
-  private def isExternal(root: String, flag: Option[Boolean]): Boolean =
-    flag.getOrElse {
-      val (f, p) = fs(s"$root/external.conf")
-      f.exists(p)
-    }
-
   /** open a handle resolving the pointer's stored key name to the
     * table's CURRENT logical key: the pointer persists the key's
     * PHYSICAL storage name (immutable), so a key rename is complete
@@ -159,26 +117,33 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** (keyCol, storage location, declared schema, mode flag) persisted
-    * at CREATE. The optional trailing line is the round-18 ownership
-    * flag: `managed` / `external` (Some(false)/Some(true)); legacy
-    * 3-line pointers return None and resolve mode from the
-    * external.conf marker (see [[isExternal]]). The schema JSON is a
-    * brace-delimited object, never a bare keyword, so the trailing
-    * line is unambiguous. */
+  /** (keyCol, storage location, declared schema, external?) persisted
+    * at CREATE. The trailing line is the ownership flag, `managed` or
+    * `external` (read-only, x65): written atomically WITH the pointer,
+    * so ownership rides the one exclusively-created file and no
+    * marker-file interleaving can flip a table's mode (the round-17
+    * advisor's registerPointer/registerExternal race). On external
+    * tables reads/time travel/streams serve, every mutation refuses
+    * and DROP removes only the pointer. A pointer without the line
+    * was written by a pre-current catalog and is refused. The schema
+    * JSON is a brace-delimited object, never a bare keyword, so the
+    * trailing line is unambiguous. */
   private def readConf(root: String)
-      : Option[(String, String, StructType, Option[Boolean])] =
+      : Option[(String, String, StructType, Boolean)] =
     ConfIO.readSmallFile(fs(confPath(root))).map { s =>
-      val all = s.linesIterator.toSeq
-      val flag = all.last.trim match {
-        case ExternalLine => Some(true)
-        case ManagedLine  => Some(false)
-        case _            => None
+      val lines = s.linesIterator.toSeq
+      val external = lines.last.trim match {
+        case ExternalLine => true
+        case ManagedLine  => false
+        case _ => throw new IllegalStateException(
+          s"catalog pointer ${confPath(root)} has no managed/external " +
+            "mode line: it was written by a pre-current catalog, which " +
+            "this engine refuses — drop the pointer directory and " +
+            "register the table again")
       }
-      val lines = if (flag.isDefined) all.dropRight(1) else all
       (lines.head.trim, lines(1).trim,
-        DataType.fromJson(lines.drop(2).mkString("\n"))
-          .asInstanceOf[StructType], flag)
+        DataType.fromJson(lines.drop(2).dropRight(1).mkString("\n"))
+          .asInstanceOf[StructType], external)
     }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -191,7 +156,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    resolveConf(ident)._2.isDefined
+    readConf(rootOf(ident)).isDefined
 
   override def loadTable(ident: Identifier): Table =
     loadVersioned(ident, -1L)
@@ -205,18 +170,17 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
 
   /** `TIMESTAMP AS OF <ts>` — Spark passes MICROseconds */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val (key, loc, _, _) = resolveConf(ident)._2
+    val (key, loc, _, _) = readConf(rootOf(ident))
       .getOrElse(throw new NoSuchTableException(ident))
     val t = openHandle(loc, key)
     loadVersioned(ident, t.versionAt(timestampMicros / 1000L))
   }
 
   private def loadVersioned(ident: Identifier, version: Long): Table = {
-    val (root, conf) = resolveConf(ident)
-    val (key, loc, declared, flag) = conf
+    val (key, loc, declared, external) = readConf(rootOf(ident))
       .getOrElse(throw new NoSuchTableException(ident))
     val name = s"$catalogName.${ident.name()}"
-    if (isExternal(root, flag))
+    if (external)
       // no V1 streaming-write fallback: see GraftSqlManagedTable
       new GraftSqlTable(name, loc, key, declared, version,
         external = true)
@@ -400,21 +364,6 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
           case _ => throw e
         }
     }
-    // a stale LEGACY external marker (a crashed pre-round-18 external
-    // registration that never wrote its conf) must not poison this
-    // MANAGED registration — the `managed` conf line is authoritative
-    // for THIS pointer, but clear the leftover so the directory is
-    // clean. Deleted only AFTER winning the exclusive conf create:
-    // deleting first raced a concurrent external registration's
-    // marker-then-conf sequence and could strip a COMPLETED external
-    // registration of its marker (the round-17 advisor's
-    // interleaving — pre-flag pointers would then load writable and
-    // DROP would delete foreign storage). Best-effort: a failure here
-    // leaves a marker the `managed` line already overrides.
-    try f.delete(new org.apache.hadoop.fs.Path(root, "external.conf"),
-      false)
-    catch { case scala.util.control.NonFatal(_) => }
-    ()
   }
 
   /** ATOMIC pointer overwrite (temp + rename-over) — the REPLACE
@@ -494,10 +443,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     // exclusively-created pointer itself, so the registration is
     // atomic and self-describing — no state exists where a pointer
     // reads as MANAGED (writable; DROP would delete the foreign
-    // storage). The previous marker-first two-write sequence raced a
-    // concurrent managed CREATE's stale-marker cleanup (round-17
-    // advisor); the external.conf marker file remains READ as the
-    // legacy fallback for pre-flag pointers but is no longer written.
+    // storage).
     val root = rootOf(ident)
     val (pf, _) = fs(root)
     pf.mkdirs(new org.apache.hadoop.fs.Path(root))
@@ -559,16 +505,15 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
                                     orCreate: Boolean,
                                     orReplace: Boolean): Unit = {
     val key = validatedKey(schema, properties, clusterCols)
-    val (proot, pconf) = resolveConf(ident)
-    pconf match {
+    readConf(rootOf(ident)) match {
       case None =>
         if (!orCreate) throw new NoSuchTableException(ident)
         val loc = bootstrapStorage(ident, schema, key, clusterCols,
           data, GraftCatalog.insertModeOf(properties))
         registerPointer(ident, key, loc, schema)
-      case Some((_, loc, _, flag)) =>
+      case Some((_, loc, _, external)) =>
         if (!orReplace) throw new TableAlreadyExistsException(ident)
-        require(!isExternal(proot, flag),
+        require(!external,
           s"$ident is a READ-ONLY external registration — REPLACE it " +
             "through the owning table")
         val (f, _) = fs(loc)
@@ -634,18 +579,9 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
               val out = f.create(p, true)
               try out.write(bytes) finally out.close()
             }
-            // key.conf was WRITTEN above (not merely deleted): on a
-            // legacy table that never had one, restoring 'what was
-            // saved' would leave the NEW key's record behind — and
-            // the streaming sink resolves its key from that file
-            // (round-17 review finding)
-            if (!saved.exists(_._1.getName == "key.conf")) {
-              f.delete(new org.apache.hadoop.fs.Path(loc, "key.conf"),
-                false)
-              ()
-            }
-            // same discipline for a freshly-written insert.conf on a
-            // table that never had one
+            // insert.conf was WRITTEN above (not merely deleted): on a
+            // table that never had one, restoring 'what was saved'
+            // would leave the NEW discipline behind
             if (newMode == "upsert" &&
                 !saved.exists(_._1.getName == "insert.conf")) {
               f.delete(new org.apache.hadoop.fs.Path(loc, "insert.conf"),
@@ -671,10 +607,9 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     * PHYSICAL name and loads resolve the logical name from the
     * manifest's mapping rows. Anything else names its GRAFT verb. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val (root, conf) = resolveConf(ident)
-    val (key, loc, _, flag) = conf
+    val (key, loc, _, external) = readConf(rootOf(ident))
       .getOrElse(throw new NoSuchTableException(ident))
-    require(!isExternal(root, flag),
+    require(!external,
       s"$ident is a READ-ONLY external registration — ALTER it " +
         "through the owning table")
     // `ALTER TABLE ... CLUSTER BY (c, ...)` — re-declare the standing
@@ -738,14 +673,14 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
   }
 
   override def dropTable(ident: Identifier): Boolean = {
-    val (root, conf) = resolveConf(ident)
-    conf match {
+    val root = rootOf(ident)
+    readConf(root) match {
       case None => false
-      case Some((_, loc, _, flag)) =>
+      case Some((_, loc, _, external)) =>
         val (f, p) = fs(root)
         // an external registration NEVER owns its storage: dropping
         // it removes only the pointer (the owning table is untouched)
-        if (!isExternal(root, flag))
+        if (!external)
           f.delete(new org.apache.hadoop.fs.Path(loc), true)
         f.delete(p, true)
     }
@@ -756,7 +691,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     if (tableExists(newIdent)) throw new TableAlreadyExistsException(newIdent)
     // the pointer directory moves; the storage location (absolute
     // paths in manifests and DV sidecars) never does
-    val (f, op) = fs(lookupRoot(oldIdent))
+    val (f, op) = fs(rootOf(oldIdent))
     val np = new org.apache.hadoop.fs.Path(rootOf(newIdent))
     if (np.getParent != null) f.mkdirs(np.getParent)
     require(f.rename(op, np),
@@ -810,10 +745,6 @@ private[graft] class GraftSqlManagedTable(ident: String, root: String,
   }
 }
 
-/** one reader for the catalog's tiny conf files (pointer conf,
-  * key.conf, markers): existence probe + full read + UTF-8 decode —
-  * previously hand-rolled at three sites that must provably read
-  * the same bytes the same way (round-17 review finding) */
 /** catalog-level helpers shared by the catalog and its tables */
 private[sources] object GraftCatalog {
   /** the declared INSERT discipline (x69): 'append' (default — INSERT
@@ -868,6 +799,10 @@ private[sources] object GraftCatalog {
   }
 }
 
+/** one reader for the catalog's tiny conf files (pointer conf,
+  * key.conf, insert.conf): existence probe + full read + UTF-8 decode —
+  * previously hand-rolled at three sites that must provably read
+  * the same bytes the same way (round-17 review finding) */
 private[sources] object ConfIO {
   def readSmallFile(
       fp: (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path))
@@ -998,8 +933,9 @@ private[graft] class GraftSqlTable(ident: String, root: String,
         val (t, lk) = open(rec)
         (t, lk, rec)
       case None =>
-        // pre-stamp (legacy) tables: the pointer key, healed through
-        // the presence check + key.conf fallback
+        // unstamped roots (a bare GraftTable.create root registered
+        // externally): the pointer key, healed through the presence
+        // check + key.conf fallback
         val (t, lk) = open(keyCol)
         if (present(t, lk, keyCol)) (t, lk, keyCol)
         else keyConfKey().filter(_ != keyCol) match {
@@ -1011,7 +947,7 @@ private[graft] class GraftSqlTable(ident: String, root: String,
           // the current key; loads heal onto it, and the next REPLACE
           // re-run repairs the pointer. (If the old key column happens
           // to SURVIVE into the new schema the stale pointer key is
-          // undetectable on this legacy path — closed by the stamp.)
+          // undetectable on this path — closed by the stamp.)
           case Some(k2) =>
             val (t2, lk2) = open(k2)
             if (present(t2, lk2, k2)) (t2, lk2, k2) else (t, lk, keyCol)
@@ -1069,7 +1005,8 @@ private[graft] class GraftSqlTable(ident: String, root: String,
       if (pinnedVersion == 0) declared
       // manifest-only resolution (O(manifest), zero file opens — a
       // 100 TB table must not existence-check every path to answer
-      // analysis); read(v).schema only for pre-schema-manifest tables
+      // analysis); read(v).schema only on a true per-file type
+      // conflict, which its footer sweep rejects
       else table.schemaAt(pinnedVersion)
         .getOrElse(table.read(pinnedVersion).schema)
     // the compound-key storage column is an implementation detail:
@@ -1193,12 +1130,7 @@ private[graft] class GraftSqlTable(ident: String, root: String,
           new BaseRelation with TableScan {
             override val sqlContext: SQLContext = context
             override val schema: StructType = outSchema
-            override def sizeInBytes: Long = {
-              val b =
-                if (pinnedVersion == 0) 0L
-                else table.bytesOf(pinnedVersion)
-              if (b < 0) super.sizeInBytes else b
-            }
+            override def sizeInBytes: Long = table.bytesOf(pinnedVersion)
             override def buildScan(): RDD[Row] = {
               // a declared-but-empty table has no snapshot to plan:
               // an empty typed frame (read(0) has no columns to select)

@@ -292,8 +292,7 @@ private[sources] class GraftCdfMicroBatchStream(
     // volume is scattered change data, the low-amplification shape.
     if (e - s == 1 && s >= 1) {
       val vol = table.changeVolumeBytes(s, e)
-      if (vol >= 0 &&
-          vol <= GraftCdfMicroBatchStream.DirectWindowBytes) {
+      if (vol <= GraftCdfMicroBatchStream.DirectWindowBytes) {
         val sch = schema
         val rows = feedFor(s, e).queryExecution.toRdd
           .mapPartitions { rs =>
@@ -380,8 +379,7 @@ private[sources] class GraftCdfMicroBatchStream(
 private[sources] object GraftCdfMicroBatchStream {
   /** manifest-estimated change volume up to which a one-version window
     * serves DIRECT (inline rows, no shuttle files). Bounds the
-    * plan-time collect; windows past it — or whose pre-counter
-    * manifests can't size themselves — take the shuttle. */
+    * plan-time collect; windows past it take the shuttle. */
   private[sources] val DirectWindowBytes: Long = 32L << 20
 }
 

@@ -279,13 +279,10 @@ private[sources] class GraftTableRelation(
     * without this a V1 relation reports the session default (a huge
     * sentinel), so a join against a small graft view would NEVER
     * broadcast and every star-schema query against the format would
-    * pay a shuffle it doesn't need. Manifests without recorded sizes
-    * (pre-counter tables) keep the conservative default. */
-  override def sizeInBytes: Long = {
-    val b = GraftTable.open(sqlContext.sparkSession, root, keyCol)
+    * pay a shuffle it doesn't need. */
+  override def sizeInBytes: Long =
+    GraftTable.open(sqlContext.sparkSession, root, keyCol)
       .bytesOf(pinnedVersion)
-    if (b < 0) super.sizeInBytes else b
-  }
 
   /** every filter re-checked by Spark above the scan: applying them
     * inside the inner plan (below) is purely an optimization */

@@ -29,8 +29,8 @@ import org.apache.spark.sql.graftglue.PredicateTree
   *
   * Storage model (the x18/x28 layout): immutable data files under
   * `root/data/<uuid>/part-*`, one manifest parquet per version under
-  * `root/commits/v{N}`. A slot is either a FULL manifest (v1, legacy
-  * tables, and every MaxManifestChain-cadence checkpoint) or a DELTA
+  * `root/commits/v{N}`. A slot is either a FULL manifest (v1 and
+  * every MaxManifestChain-cadence checkpoint) or a DELTA
   * against the previous version — adds + `rm` rows + the complete txn
   * checkpoint set + a `delta` marker — so steady-state commit I/O is
   * O(change), not O(files), and readers fold back at most
@@ -160,8 +160,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
       .foldLeft(0L)(math.max)
 
   /** the OLDEST version slot still in the log (= head when the table
-    * has one version; > 1 after `expire` GC'd the pre-checkpoint
-    * prefix — Delta's logRetentionDuration cleanup). Versions below it
+    * has one version; > 1 after `expire` GC'd the log prefix below a
+    * checkpoint — Delta's logRetentionDuration cleanup). Versions below it
     * are gone from history/time-travel entirely. */
   def oldestVersion: Long = {
     val vs = io.list(commitsDir).map(_.getPath.getName)
@@ -175,35 +175,28 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   /** the slot's PHYSICAL rows (delta slots: adds + `rm`/`delta` marker
     * rows; full slots: the whole manifest), plus the commit-level txn
-    * id and in-commit stamp every row carries. Columns a manifest
-    * predates (a pre-string-stats `sstats`, a pre-v2 `stats`) degrade
-    * to the empty map — an upgraded reader opens any older table, it
-    * just plans without the missing bounds (the same degradation
-    * dvPositions uses for pre-counter DV refs). Memoized per handle:
-    * slots are immutable per (root, version). */
+    * id and in-commit stamp every row carries — decoded in-process
+    * (a slot is KB-MB of metadata, not worth a Spark job per touch;
+    * see [[SlotIO]]) and validated by
+    * [[GraftTable.requireReadable]]. Memoized per handle, verdict
+    * included: slots are immutable per (root, version). */
   private def rawSlotRows(v: Long): (Seq[FileRef], Long, Long) = {
     val hit = rawCache.get(v)
     if (hit != null) return hit
-    val out = readSlot(v)
-    rawCache.put(v, out)
-    out
-  }
-
-  private def readSlot(v: Long): (Seq[FileRef], Long, Long) = {
-    // DRIVER-LOCAL decode (round-18, guide §1: a slot is KB-MB of
-    // metadata — the old spark.read+collect paid a whole Spark job of
-    // driver latency per slot touch; see [[SlotIO]])
     val (rows, commitTxn, commitTs) =
       SlotIO.read(s"$commitsDir/v$v", spark.sessionState.newHadoopConf())
-    (rows.sortBy(r => (r.kind, r.file)), commitTxn, commitTs)
+    GraftTable.requireReadable(root, v, rows, commitTs)
+    val out = (rows.sortBy(r => (r.kind, r.file)), commitTxn, commitTs)
+    rawCache.put(v, out)
+    out
   }
 
   /** the folded snapshot a version denotes, plus its delta-chain depth
     * and commit-level (txn id, in-commit stamp) — the read half of the
     * DELTA-ENCODED manifest format (Delta's log-of-actions idea,
     * folded into the slot files; see [[tryCommit]] for the writer):
-    * a slot is either FULL (the entire manifest — v1, legacy slots,
-    * and every [[GraftTable.MaxManifestChain]]-cadence or
+    * a slot is either FULL (the entire manifest — v1 and every
+    * [[GraftTable.MaxManifestChain]]-cadence or
     * bigger-than-half-rewrite checkpoint) or a DELTA against the
     * previous version — added refs, `kind = "rm"` rows naming removed
     * files, the canonical txn-checkpoint rows (always complete, so
@@ -213,7 +206,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * fold along the walk is memoized, so a handle pays each slot read
     * once. Removes apply before adds: a ref whose fields changed for
     * the same file (a re-stamped zgen, a rewritten stats row) encodes
-    * as rm + add and folds to the new ref. */
+    * as rm + add and folds to the new ref. Every slot on the walk
+    * passed the reader gate when it was read. */
   private[table] def manifestSnap(v: Long): GraftTable.Snap = {
     val hit = snapCache.get(v)
     if (hit != null) return hit
@@ -229,9 +223,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
         GraftTable.Snap((carried ++ fresh).sortBy(r => (r.kind, r.file)),
           marker.hi, cTxn, cTs)
     }
-    // reader feature gate: validated once per version per handle (the
-    // memo carries the verdict); see GraftTable.requireReadable
-    GraftTable.requireReadable(root, v, snap.refs)
     snapCache.put(v, snap)
     snap
   }
@@ -265,13 +256,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
     manifestOf(v).filter(_.kind == "bloom").map(_.file).sorted
 
   /** version `v`'s data bytes off the manifest counters — one manifest
-    * read, no data file opened; −1 when a pre-counter manifest can't
-    * say (callers keep their conservative default) */
+    * read, no data file opened */
   def bytesOf(version: Long = -1L): Long = {
     val v = if (version < 0) head else version
     if (v == 0) return 0L
-    val sizes = manifestOf(v).filter(_.kind == "data").map(_.bytes)
-    if (sizes.exists(_ < 0)) -1L else sizes.sum
+    manifestOf(v).filter(_.kind == "data").map(_.bytes).sum
   }
 
   /** snapshot read — head by default, any retained version by number.
@@ -331,18 +320,16 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * manifest records ARE the resolution record: every reader derives
     * the same widened snapshot schema from the same rows.
     *
-    * None — and the reader falls back to the legacy footer sweep —
-    * when any ref predates the recorded schema. A TRUE type conflict
-    * (no lossless widening, e.g. string vs long) also returns None
-    * but now logs LOUDLY first: silently re-entering the O(files)
-    * sweep was the round-13 latent scale hazard, and the sweep's
-    * mergeSchema will reject the merge anyway — the log line names
-    * the column and both types so the operator sees WHY. */
+    * None for a data-less snapshot, and for a TRUE type conflict (no
+    * lossless widening, e.g. string vs long) — logged LOUDLY first:
+    * the caller's O(files) mergeSchema footer sweep will reject the
+    * same conflict, and the log line names the column and both types
+    * so the operator sees WHY. */
   private[table] def schemaOf(refs: Seq[FileRef])
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types.{DataType, StructField, StructType}
     val data = refs.filter(_.kind == "data")
-    if (data.isEmpty || data.exists(_.schemaJson.isEmpty)) return None
+    if (data.isEmpty) return None
     val fields =
       scala.collection.mutable.LinkedHashMap.empty[String, StructField]
     for (json <- data.map(_.schemaJson).distinct) {
@@ -408,9 +395,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * what a catalog must answer `schema()` from, because deriving it
     * by analyzing a full-snapshot read existence-checks every data
     * file path at 100 TB scale (and breaks the file-hiding pruning
-    * specs for free). None when any ref predates recorded per-file
-    * schemas — callers fall back to `read(v).schema` (the legacy
-    * footer sweep). */
+    * specs for free). None on a true per-file type conflict —
+    * callers fall back to `read(v).schema`, whose footer sweep
+    * rejects it. */
   def schemaAt(version: Long = -1L)
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types.{StructField, StructType}
@@ -438,8 +425,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   }
 
   /** rows of `files` under the manifest-resolved snapshot schema —
-    * ZERO footer reads on a current-format table; `mergeSchema` only
-    * as the pre-schema-manifest legacy fallback */
+    * ZERO footer reads; `mergeSchema` only on a true per-file type
+    * conflict, where the sweep rejects the read */
   private def readFiles(refs: Seq[FileRef], files: Seq[String]): DataFrame =
     schemaOf(refs) match {
       case Some(s) => spark.read.schema(s).parquet(files: _*)
@@ -454,66 +441,32 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * rows all target live files, so `Σ data rows − Σ dv positions` is
     * exact): a 100 TB table answers in one manifest read, no data file
     * opened (spec-pinned by physically hiding every data file).
-    * Falls back to a real scan-count only when a pre-counter manifest
-    * lacks the numbers or a pre-retirement DV targets a removed file
-    * (both detected, never guessed). */
+    * Positions are disjoint across DVs (deletes match DV-applied rows)
+    * and retirement keeps every DV's targets live. */
   def count(version: Long = -1L): Long = {
     val v = if (version < 0) head else version
     if (v == 0) return 0L
     val refs = manifestOf(v)
-    val data = refs.filter(_.kind == "data")
-    val dvs = refs.filter(_.kind == "dv")
-    val counted = data.forall(_.rows >= 0L) && dvs.forall(_.hi >= 0L)
-    if (!counted) return read(v).count()
-    val dataRows = data.map(_.rows).sum
-    if (dvs.isEmpty) dataRows
-    else {
-      // a DV position is counted iff its target file is in THIS
-      // version (retirement maintains that for new commits; positions
-      // are disjoint across DVs because deletes match DV-applied rows)
-      val live = data.map(_.file).toSet
-      if (dvTargets(dvs.map(_.file)).forall(live))
-        dataRows - dvs.map(_.hi).sum
-      else read(v).count() // stale pre-retirement DV: exact fallback
-    }
+    refs.filter(_.kind == "data").map(_.rows).sum -
+      refs.filter(_.kind == "dv").map(_.hi).sum
   }
 
   /** version `v`'s commit timestamp (epoch millis): the manifest's
-    * IN-COMMIT stamp when it has one (strictly monotonic across
-    * versions — Delta's inCommitTimestamps), else the commit slot's
-    * filesystem mtime (Delta's own pre-ICT fallback; approximately
-    * monotonic, exactly as approximate there) */
-  def commitTimestampOf(v: Long): Long = {
-    val stamped = manifestOf(v).foldLeft(-1L)((m, r) => math.max(m, r.ts))
-    if (stamped >= 0) stamped
-    else io.mtime(s"$commitsDir/v$v").getOrElse(
-      throw new IllegalArgumentException(s"version $v does not exist"))
-  }
+    * IN-COMMIT stamp, strictly monotonic across versions (Delta's
+    * inCommitTimestamps) */
+  def commitTimestampOf(v: Long): Long = manifestSnap(v).commitTs
 
   /** the version current AS OF `tsMillis` — the greatest version whose
     * commit timestamp is <= the probe (Delta's TIMESTAMP AS OF
     * resolution): a binary search over O(log versions) manifest
-    * reads, sound because in-commit stamps are strictly monotonic.
-    *
-    * A table with PRE-ICT versions (their timestamp is the commit
-    * slot's filesystem mtime — clock skew or a copied/restored commit
-    * dir can make those NON-monotonic) falls back to a linear
-    * max-version-with-ts<=probe scan instead: O(versions) mtime
-    * reads, but never a silently wrong resolution (the round-13
-    * advisor's case). Because every post-upgrade commit stamps
-    * `max(now, base.max + 1)`, stamps — once present — are present
-    * and monotonic in every later version, so "version 1 is stamped"
-    * certifies the whole log for the fast path. */
+    * reads, sound because every commit stamps `max(now, base + 1)`. */
   def versionAt(tsMillis: Long): Long = {
     val h = head
     require(h > 0, "empty table has no versions")
     val v0 = oldestVersion // > 1 after log GC: older stamps are gone
     require(tsMillis >= commitTimestampOf(v0),
-      s"timestamp $tsMillis predates the oldest retained version $v0 " +
+      s"timestamp $tsMillis is before the oldest retained version $v0 " +
         s"(committed ${commitTimestampOf(v0)})")
-    val allStamped = manifestOf(v0).exists(_.ts >= 0)
-    if (!allStamped)
-      return (v0 to h).filter(commitTimestampOf(_) <= tsMillis).max
     var lo = v0
     var hi = h
     while (lo < hi) { // invariant: ts(lo) <= probe
@@ -530,8 +483,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   /** one-row metadata summary of the head (Delta's DESCRIBE DETAIL) —
     * everything from the manifest and table properties, no data file
-    * opened (rows ride [[count]]'s metadata path; a pre-counter
-    * manifest falls back to its exact scan) */
+    * opened (rows ride [[count]]'s metadata path) */
   def detail(): DataFrame = {
     val h = head
     val refs = if (h == 0) Seq.empty[FileRef] else manifestOf(h)
@@ -539,7 +491,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     Seq((root, h, oldestVersion, data.size,
         refs.count(_.kind == "dv"), refs.count(_.kind == "bloom"),
         if (h == 0) 0L else count(h),
-        data.map(_.bytes).filter(_ >= 0).sum,
+        data.map(_.bytes).sum,
         if (h == 0) -1L else commitTimestampOf(h),
         bloomConfig().map(_._1.mkString(",")).getOrElse(""),
         checks().keys.toSeq.sorted.mkString(","),
@@ -692,8 +644,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   }
 
   /** the LOGICAL column names of a manifest's snapshot — the physical
-    * schema (manifest-recorded; legacy fallback resolves lazily, no
-    * job) with the mapping applied */
+    * schema (manifest-recorded; a true type conflict resolves through
+    * the footer sweep) with the mapping applied */
   private def logicalCols(refs: Seq[FileRef]): Seq[String] = {
     val data = refs.filter(_.kind == "data")
     // a data-less snapshot's columns are its DECLARATIONS (a catalog
@@ -790,14 +742,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
   }
 
   /** the snapshot's key-record stamp ([[GraftTable.keyRecRow]]):
-    * None on pre-stamp (legacy) tables and on versions below the
-    * stamp's introduction — callers fall back to the pointer/key.conf
-    * heuristics there */
+    * None on unstamped roots (a bare `GraftTable.create` root,
+    * registered externally) — callers fall back to the
+    * pointer/key.conf heuristics there */
   private[graft] def keyRecordAt(version: Long = -1L): Option[String] = {
     val v = if (version < 0) head else version
     // head 0 = no commit yet: there is no manifest to read a stamp
     // from (manifestOf(0) would fail on the missing slot) — callers
-    // fall to their pre-stamp heuristics
+    // fall to their key.conf heuristics
     if (v == 0L) None else GraftTable.parseKeyRec(manifestOf(v))
   }
 
@@ -946,11 +898,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
         "storage name behind a rename or drop) — pick a fresh one")
     require(!GraftTable.parseAddColRows(base).exists(_.name == name),
       s"column '$name' is already declared")
-    val data = base.filter(_.kind == "data")
-    require(data.forall(_.schemaJson.nonEmpty),
-      "addColumn requires manifest-recorded per-file schemas; this " +
-        "table has pre-schema-manifest files — compact() once to " +
-        "rewrite them under the recorded schema")
     val ord = base.iterator.filter(_.kind == "addcol")
       .map(_.lo).foldLeft(-1L)(math.max) + 1
     withFeature(base, "addcol") :+ GraftTable.addColRow(
@@ -1002,11 +949,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
       .withColumn("__pos", col("_metadata.row_index"))
 
   /** total recorded positions across DV refs (each DV ref's `hi`
-    * carries its footer row count since round 11) — Long.MaxValue when
-    * any ref predates the counter, forcing the broadcast-free path */
-  private def dvPositions(refs: Seq[FileRef]): Long =
-    if (refs.nonEmpty && refs.forall(_.hi >= 0)) refs.map(_.hi).sum
-    else Long.MaxValue
+    * carries its footer row count) */
+  private def dvPositions(refs: Seq[FileRef]): Long = refs.map(_.hi).sum
 
   /** the distinct data files a DV sidecar list targets. DV files are
     * immutable once committed, so the set for a given list never
@@ -1156,11 +1100,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * through the struct fields so a case-mismatched reference still
     * finds its recorded bounds. An unresolvable name stays as-is —
     * its lookups miss and the file stays a candidate. Then LOGICAL
-    * maps to PHYSICAL (x53; a dotted path maps its root). Legacy
-    * manifests with no recorded schema resolve NOTHING: they carry no
-    * nested stats, and collapsing a dotted name to its leaf (the
-    * pre-round-18 behavior) could alias a same-named top-level
-    * column's bounds — the wrong-prune class this round closed. */
+    * maps to PHYSICAL (x53; a dotted path maps its root). A snapshot
+    * with no resolvable schema (a true type conflict) resolves
+    * NOTHING: collapsing a dotted name to its leaf could alias a
+    * same-named top-level column's bounds — a wrong prune. */
   private def statsTree(n: PredicateTree.Node,
                         refs: Seq[FileRef]): PredicateTree.Node =
     schemaOf(refs) match {
@@ -1677,15 +1620,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
       element_at(typedLit(kindByCol), col("idx_col")))))
   }
 
-  /** sidecar rows under the CURRENT schema: pre-`hash_kind` rows (a
-    * legacy sidecar, or a fold that mixed them in) read with a NULL
-    * kind, which refinement never consults — degradation is
-    * weaker pruning, never a wrong prune */
-  private def readSidecars(files: Seq[String]): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true").parquet(files: _*)
-    if (df.columns.contains("hash_kind")) df
-    else df.withColumn("hash_kind", lit(null).cast("string"))
-  }
+  /** bloom sidecar rows: (data_file, idx_col, bloom, hash_kind) */
+  private def readSidecars(files: Seq[String]): DataFrame =
+    spark.read.parquet(files: _*)
 
   /** stage a bloom sidecar parquet of (data_file, idx_col, bloom) rows
     * under its own uuid dir + staging marker (vacuum-safe like any
@@ -1779,16 +1716,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
       .where(col("idx_col").isin(eqCols.toSeq: _*))
       .select(col("data_file"), col("idx_col"), col("bloom"),
         col("hash_kind"))
-      .as[(String, String, Array[Byte], Option[String])]
+      .as[(String, String, Array[Byte], String)]
       .groupByKey(_._1)
       .flatMapGroups { (f, it) =>
         val (t, refs, ev) = ctx.value
         refs.get(f) match {
           case None => Iterator.empty // not a candidate file
           case Some(r) =>
-            // rows without a recorded hash kind (legacy sidecars) are
-            // never consulted — they might answer cross-kind probes
-            val blooms = it.collect { case (_, c, bytes, Some(kind)) =>
+            val blooms = it.map { case (_, c, bytes, kind) =>
               c -> (kind,
                 org.apache.spark.util.sketch.BloomFilter.readFrom(bytes))
             }.toMap
@@ -1901,9 +1836,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * forgetting replay guards. [[committedTxns]] then reads ONE
     * manifest per guarded mutation instead of every manifest in the
     * log — the round-11 O(versions)-reads-per-streaming-batch cost,
-    * gone. A pre-upgrade base manifest (no marker row) falls back to
-    * the legacy full-log scan exactly once: the next commit writes the
-    * checkpointed form. */
+    * gone. */
   private def commitLoop(txn: Long = -1L)(
       compose: Seq[FileRef] => Option[(Seq[FileRef], Seq[Staged])]): Long = {
     while (true) {
@@ -2091,15 +2024,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
     (noDv ++ st.refs, staged :+ st)
   }
 
-  /** the committed-txn set a manifest's rows witness: its checkpoint
-    * rows when it has them, the legacy full-log scan when it predates
-    * the checkpoint (upgrade path — paid once, the next commit
-    * checkpoints) */
+  /** the committed-txn set a manifest's checkpoint rows witness */
   private def txnsIn(manifest: Seq[FileRef]): Set[Long] =
-    if (manifest.isEmpty) Set.empty
-    else if (manifest.exists(r => r.kind == "txn" && r.lo == -1L))
-      manifest.collect { case r if r.kind == "txn" && r.lo >= 0 => r.lo }.toSet
-    else legacyTxnScan()
+    manifest.collect { case r if r.kind == "txn" && r.lo >= 0 => r.lo }.toSet
 
   /** append-only commit: new files, every existing file by reference */
   /** the write-relevant METADATA a staged frame was prepared against:
@@ -2171,24 +2098,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   /** every batch id any committed version recorded — ONE slot read
     * (every slot, delta or full, carries the COMPLETE txn checkpoint
-    * row set, so replay detection never folds the chain); legacy
-    * pre-checkpoint tables fall back to the full-log scan until their
-    * next commit */
+    * row set, so replay detection never folds the chain) */
   private def committedTxns(): Set[Long] = {
     val h = head
     if (h == 0) Set.empty else txnsIn(rawSlotRows(h)._1)
-  }
-
-  /** the pre-checkpoint path: union the `txn` column over EVERY
-    * manifest (O(versions) reads — what the checkpoint rows replace) */
-  private def legacyTxnScan(): Set[Long] = {
-    val vs = io.list(commitsDir)
-      .filter(_.getPath.getName.matches("v\\d+"))
-      .map(_.getPath.toString)
-    if (vs.isEmpty) Set.empty
-    else spark.read.parquet(vs: _*)
-      .select(col("txn")).where(col("txn") >= 0).distinct()
-      .collect().map(_.getLong(0)).toSet
   }
 
   /** COW upsert by key. Planning: stats-pruned candidates (broadcast
@@ -2758,11 +2671,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
         case None => data
       }
       // size off the manifest's byte counters — zero FileSystem RPCs
-      // for post-counter tables (one length() round trip per file per
-      // OPTIMIZE adds up on object stores); only pre-counter refs
-      // still ask the filesystem
-      val small = scoped.filter(r =>
-        (if (r.bytes >= 0) r.bytes else io.length(r.file)) < smallFileBytes)
+      // (one length() round trip per file per OPTIMIZE adds up on
+      // object stores)
+      val small = scoped.filter(_.bytes < smallFileBytes)
       if (small.size <= math.max(1, targetFiles))
         Some(foldBloomSidecars(base, Seq.empty))
       else {
@@ -2884,14 +2795,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
       (a(0).toInt, a(1).toLong, a(2).toInt)
     }
 
-  /** post-ingest hook: ONE manifest scan (zero FileSystem RPCs on
-    * post-counter tables) decides; a no-op without the policy or
-    * below threshold. Never recursive — compact() has no hook. */
+  /** post-ingest hook: ONE manifest scan (zero FileSystem RPCs)
+    * decides; a no-op without the policy or below threshold. Never
+    * recursive — compact() has no hook. */
   private def maybeAutoCompact(): Unit = try {
     autoCompact() match {
       case Some((minSmall, smallBytes, target)) =>
-        val small = headRefs.count(r => r.kind == "data" &&
-          (if (r.bytes >= 0) r.bytes else io.length(r.file)) < smallBytes)
+        val small = headRefs.count(r =>
+          r.kind == "data" && r.bytes < smallBytes)
         // `small > target` too: compact() always commits a version
         // (mutator contract), and a fold that cannot shrink anything
         // would be pure version churn re-armed on every append
@@ -3055,8 +2966,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * logRetentionDuration cleanup) — without it the commits dir grows
     * O(all-time commits). Time travel, `history()`, and `versionAt`
     * then start at [[oldestVersion]]; `restore` below it fails with
-    * "expired from the log". Legacy pre-checkpoint tables keep their
-    * full log until a post-upgrade commit checkpoints the txn set. */
+    * "expired from the log". */
   def expire(keepLast: Int, staleStagingMs: Long = Long.MaxValue,
              minAgeMs: Long = 0L, dryRun: Boolean = false): Seq[String] = {
     require(keepLast >= 1,
@@ -3146,20 +3056,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // this sweep preserved — a head that moved mid-sweep must not
     // shift the anchor past files already vacuumed (or below files
     // never retained)
-    if (!dryRun && hSweep > 0 && cutoff > ov) {
-      // a LEGACY head (no txn checkpoint rows) means replay guards
-      // still scan the full log — GC only after a post-upgrade commit
-      // has checkpointed the txn set into the head slot
-      val headCkpted = rawSlotRows(hSweep)._1
-        .exists(r => r.kind == "txn" && r.lo == -1L)
-      if (headCkpted) {
-        (ov until anchor).foreach { v =>
-          val slot = s"$commitsDir/v$v"
-          val old = io.mtime(slot).forall(m => now - m >= minAgeMs)
-          if (old) io.deleteTree(slot)
-        }
+    if (!dryRun && hSweep > 0 && cutoff > ov)
+      (ov until anchor).foreach { v =>
+        val slot = s"$commitsDir/v$v"
+        val old = io.mtime(slot).forall(m => now - m >= minAgeMs)
+        if (old) io.deleteTree(slot)
       }
-    }
     out.result().sorted
   }
 
@@ -3186,9 +3088,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * DESCRIBE HISTORY shape) — per-version SNAPSHOT totals off the
     * folded manifests, built driver-side in one ascending walk that
     * reads each slot exactly once (the per-handle fold memo), never a
-    * job per version. A counter a version's manifest predates (`rows`,
-    * `bytes`, `ts`) surfaces NULL, exactly as the pre-fold
-    * mergeSchema read did. */
+    * job per version. A data-less version's `n_rows`/`bytes` read
+    * NULL. */
   def history(): DataFrame = {
     val h = head
     if (h == 0)
@@ -3200,18 +3101,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
       val snap = manifestSnap(v)
       val data = snap.refs.filter(_.kind == "data")
       val dvs = snap.refs.filter(_.kind == "dv")
-      // live rows = Σ data rows − Σ dv positions, NULL when every data
-      // counter predates the column (SQL SUM-over-NULLs semantics)
-      val dataRows = data.map(_.rows).filter(_ >= 0)
+      // live rows = Σ data rows − Σ dv positions; bytes of every file
+      // the snapshot references (data, DV and bloom sidecars)
       val nRows: Option[Long] =
-        if (dataRows.isEmpty) None
-        else Some(dataRows.sum - dvs.map(_.rows).filter(_ >= 0).sum)
-      val byteVals = snap.refs.filter(_.kind != "txn")
-        .map(_.bytes).filter(_ >= 0)
-      val bytes: Option[Long] =
-        if (byteVals.isEmpty) None else Some(byteVals.sum)
-      (v, data.size, dvs.size, snap.commitTxn, nRows, bytes,
-        if (snap.commitTs >= 0) Some(snap.commitTs) else None)
+        if (data.isEmpty) None
+        else Some(data.map(_.rows).sum - dvs.map(_.rows).sum)
+      val bytes = snap.refs.collect {
+        case r if r.kind == "data" || r.kind == "dv" || r.kind == "bloom" =>
+          r.bytes
+      }
+      (v, data.size, dvs.size, snap.commitTxn, nRows,
+        if (bytes.isEmpty) None else Some(bytes.sum),
+        Option(snap.commitTs))
     }
     out.toDF("version", "n_data_files", "n_dv_files", "txn",
         "n_rows", "bytes", "commit_ts")
@@ -3364,9 +3265,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * sidecar's own size would under-estimate a big MoR delete by the
     * row-width factor). The cdf source's direct-vs-shuttle choice keys
     * on this as an upper-bound proxy for the net feed: changed rows
-    * live in exactly those files/positions. −1 when any involved ref
-    * predates the byte/row counters — callers must then take the
-    * conservative (shuttle) path. */
+    * live in exactly those files/positions. */
   def changeVolumeBytes(fromV: Long, toV: Long): Long = {
     val from = manifestOf(fromV)
     val to = manifestOf(toV)
@@ -3376,18 +3275,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
       .toMap
     val fdv = from.collect { case r if r.kind == "dv" => r.file }.toSet
     val toData = to.filter(_.kind == "data")
-    val dataBytes = toData.map(_.bytes)
-    val dataRows = toData.map(_.rows)
-    val avgRowBytes =
-      if (dataBytes.exists(_ < 0) || dataRows.exists(_ < 0)) -1L
-      else math.max(64L, dataBytes.sum / math.max(1L, dataRows.sum))
+    val avgRowBytes = math.max(64L,
+      toData.map(_.bytes).sum / math.max(1L, toData.map(_.rows).sum))
     val newDvPositions = to.collect {
       case r if r.kind == "dv" && !fdv(r.file) => r.hi } // footer counts
-    val vols = (f.keySet -- t.keySet).toSeq.map(f) ++
-      (t.keySet -- f.keySet).toSeq.map(t) ++
-      newDvPositions.map(p =>
-        if (p < 0 || avgRowBytes < 0) -1L else p * avgRowBytes)
-    if (vols.exists(_ < 0)) -1L else vols.sum
+    (f.keySet -- t.keySet).toSeq.map(f).sum +
+      (t.keySet -- f.keySet).toSeq.map(t).sum +
+      newDvPositions.sum * avgRowBytes
   }
 
   // test seam: a completed-but-uncommitted stage IS the mid-commit state
@@ -3513,7 +3407,8 @@ object GraftTable {
     * closes structurally, including the two cases the key.conf
     * heuristic could not detect (the old key column surviving into
     * the new schema, and a reordered same-part-set compound key).
-    * key.conf remains the pre-stamp legacy fallback. */
+    * key.conf remains the fallback for roots with no stamp (a bare
+    * `GraftTable.create` root registered externally). */
   private[table] def keyRecRow(record: String): FileRef =
     FileRef("keyrec:" + java.util.Base64.getEncoder.encodeToString(
       record.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
@@ -3551,10 +3446,42 @@ object GraftTable {
   private[table] def featureRow(name: String): FileRef =
     FileRef(s"feature:$name", "feature", -1L, -1L)
 
-  /** fail loudly if snapshot `v` needs capabilities this reader lacks */
+  /** fail loudly unless slot `v` of the table at `root` (its `refs`
+    * and in-commit stamp `commitTs`) is readable here.
+    *
+    * THE FORMAT RULE: this engine reads only the current table format,
+    * and refuses anything older instead of reading it degraded. A
+    * current slot has all 13 slot columns ([[SlotIO.read]] checks
+    * them), a `txn:ckpt` checkpoint row and an in-commit stamp; each
+    * of its data refs records its schema and row/byte counters, and
+    * each DV ref its position count. Every engine that writes those
+    * also writes all of them, so no table mixes formats; a table that
+    * fails the rule names its root, the version and what is missing.
+    *
+    * Newer tables fail the same way: unknown row kinds and unsupported
+    * reader feature flags name what the reader lacks. Checked once per
+    * slot per handle (the slot memo carries the verdict); every slot a
+    * fold walks passes through here, so a folded snapshot is checked
+    * whole. */
   private[table] def requireReadable(root: String, v: Long,
-                                     refs: Seq[FileRef]): Unit =
+                                     refs: Seq[FileRef],
+                                     commitTs: Long): Unit = {
+    if (!refs.exists(r => r.kind == "txn" && r.lo == -1L))
+      refuse(root, v.toString, "its slot has no txn:ckpt checkpoint row")
+    if (commitTs < 0)
+      refuse(root, v.toString, "its slot has no in-commit timestamp")
     refs.foreach { r =>
+      if (r.kind == "data") {
+        val missing = Seq("schema" -> r.schemaJson.isEmpty,
+          "row count" -> (r.rows < 0), "byte count" -> (r.bytes < 0))
+          .collect { case (what, true) => what }
+        if (missing.nonEmpty)
+          refuse(root, v.toString, s"data file ${r.file} has no recorded " +
+            missing.mkString(", "))
+      }
+      if (r.kind == "dv" && r.hi < 0)
+        refuse(root, v.toString,
+          s"deletion vector ${r.file} has no recorded position count")
       if (!KnownKinds(r.kind))
         throw new IllegalStateException(
           s"table $root version $v carries manifest rows of unknown " +
@@ -3570,6 +3497,16 @@ object GraftTable {
               "below the version that introduced it")
       }
     }
+  }
+
+  /** the refusal [[requireReadable]] and [[SlotIO.read]] raise for a
+    * table in a pre-current format */
+  private[table] def refuse(root: String, version: String,
+                            what: String): Nothing =
+    throw new IllegalStateException(
+      s"table $root version $version is older than the current table " +
+        s"format: $what. This engine reads only the current format; " +
+        "rewrite the table with it")
 
   /** rename/drop work on identifier-shaped names only (the `col:` row
     * encoding and the projection both depend on it); shared with the

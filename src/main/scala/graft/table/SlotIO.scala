@@ -6,10 +6,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
@@ -26,14 +28,14 @@ import graft.table.GraftTable.FileRef
   * gaps for ~2 s of task work). Delta Lake reads its JSON log exactly
   * this way: on the driver, with Spark jobs reserved for data.
   *
-  * The on-disk format is UNCHANGED and bidirectionally compatible: the
+  * The on-disk format is bidirectionally compatible with Spark's: the
   * writer produces the same columns, logical types and nullability
-  * Spark's parquet writer emitted for the old `toDF` tuple schema
+  * Spark's parquet writer emits for the `toDF` tuple schema
   * (standard-mode MAP key_value encoding, snappy), so slots written by
   * either writer read identically through either reader — pinned by
-  * SlotIOSpec round-trips in both directions. The reader tolerates the
-  * same legacy column absences [[GraftTable.readSlot]] did (pre-stats,
-  * pre-ts, pre-txn slots degrade to empty maps / -1 sentinels).
+  * SlotIOSpec round-trips in both directions. The reader requires all
+  * 13 slot columns; a slot without them is refused (see
+  * [[GraftTable.requireReadable]]).
   */
 private[table] object SlotIO {
 
@@ -129,12 +131,18 @@ private[table] object SlotIO {
     } finally w.close()
   }
 
+  /** the current slot format's column names — a part file missing any
+    * of them was written by a pre-current engine and is refused */
+  private val SlotColumns: Seq[String] =
+    SlotSchema.getFields.asScala.map(_.getName).toSeq
+
   /** read a slot — either a directory of part files (rename arbiter)
     * or one bare parquet FILE at the slot name (conditional-put
     * arbiter), the same duality `spark.read.parquet` absorbed — with
-    * no Spark job. Returns the decoded refs (unsorted: the caller
-    * sorts, matching the old readSlot) plus the commit-level (txn, ts)
-    * maxima. */
+    * no Spark job. Each part file opens ONCE: its footer schema is
+    * checked against the current slot columns, then the same reader
+    * decodes its row groups. Returns the decoded refs (unsorted: the
+    * caller sorts) plus the commit-level (txn, ts) maxima. */
   def read(dir: String, conf: Configuration): (Seq[FileRef], Long, Long) = {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
@@ -144,92 +152,64 @@ private[table] object SlotIO {
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
     val refs = Vector.newBuilder[FileRef]
     var commitTxn = -1L
-    var anyTxn = false
-    // intern per-file schema strings (see readSlot's note: a snapshot
-    // has a handful of DISTINCT schemas across up to 10⁵-10⁶ refs)
+    // intern per-file schema strings: a snapshot has a handful of
+    // DISTINCT schemas across up to 10⁵-10⁶ refs
     val interned = scala.collection.mutable.HashMap.empty[String, String]
     parts.foreach { p =>
-      val in = HadoopInputFile.fromPath(p, conf)
-      val fileSchema = {
-        val fr = ParquetFileReader.open(in)
-        try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-      }
-      val names = fileSchema.getFields.asScala.map(_.getName).toSet
-      val hasStats = names("stats")
-      val hasSStats = names("sstats")
-      val hasCounts = names("rows") && names("bytes")
-      val hasTs = names("ts")
-      val hasNStats = names("nstats")
-      val hasZgen = names("zgen")
-      val hasSchema = names("schema_json")
-      val hasTxn = names("txn")
-      if (hasTxn) anyTxn = true
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), p).withConf(conf).build()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
       try {
-        var g = reader.read()
-        while (g != null) {
-          def has(f: String): Boolean = g.getFieldRepetitionCount(f) > 0
-          def str(f: String): String =
-            if (has(f)) g.getString(f, 0) else null
-          def lng(f: String, dflt: Long): Long =
-            if (has(f)) g.getLong(f, 0) else dflt
-          def mapEntries(f: String): Seq[Group] = {
-            if (!has(f)) return Nil
-            val m = g.getGroup(f, 0)
-            if (m.getType.asGroupType().getFieldCount == 0) Nil
-            else {
-              val kvField = m.getType.asGroupType().getFieldName(0)
-              (0 until m.getFieldRepetitionCount(kvField))
-                .map(i => m.getGroup(kvField, i))
-            }
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val missing = SlotColumns.filterNot(schema.containsField)
+        if (missing.nonEmpty)
+          GraftTable.refuse(d.getParent.getParent.toString,
+            d.getName.stripPrefix("v"),
+            s"its manifest slot has no ${missing.mkString(", ")} column(s)")
+        val columns = new ColumnIOFactory().getColumnIO(schema)
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val rows = columns.getRecordReader(pages,
+            new GroupRecordConverter(schema))
+          var i = 0L
+          while (i < pages.getRowCount) {
+            val g = rows.read()
+            commitTxn = math.max(commitTxn, g.getLong("txn", 0))
+            refs += decode(g, interned)
+            i += 1
           }
-          val stats =
-            if (!hasStats) Map.empty[String, (Long, Long)]
-            else mapEntries("stats").flatMap { kv =>
-              if (kv.getFieldRepetitionCount("value") == 0) None
-              else {
-                val v = kv.getGroup("value", 0)
-                Some(kv.getString("key", 0) ->
-                  (v.getLong("_1", 0), v.getLong("_2", 0)))
-              }
-            }.toMap
-          val sstats =
-            if (!hasSStats) Map.empty[String, (String, String)]
-            else mapEntries("sstats").flatMap { kv =>
-              if (kv.getFieldRepetitionCount("value") == 0) None
-              else {
-                val v = kv.getGroup("value", 0)
-                Some(kv.getString("key", 0) ->
-                  (v.getString("_1", 0), v.getString("_2", 0)))
-              }
-            }.toMap
-          val nstats =
-            if (!hasNStats) Map.empty[String, Long]
-            else mapEntries("nstats").map(kv =>
-              kv.getString("key", 0) -> kv.getLong("value", 0)).toMap
-          val schemaJson =
-            if (!hasSchema) ""
-            else {
-              val s = str("schema_json")
-              if (s == null) "" else interned.getOrElseUpdate(s, s)
-            }
-          refs += FileRef(str("file"), str("kind"),
-            lng("lo", -1L), lng("hi", -1L),
-            stats, sstats,
-            rows = if (hasCounts) lng("rows", -1L) else -1L,
-            bytes = if (hasCounts) lng("bytes", -1L) else -1L,
-            ts = if (hasTs) lng("ts", -1L) else -1L,
-            nstats = nstats,
-            zgen = if (hasZgen) lng("zgen", -1L) else -1L,
-            schemaJson = schemaJson)
-          if (hasTxn) commitTxn = math.max(commitTxn, lng("txn", -1L))
-          g = reader.read()
+          pages = reader.readNextRowGroup()
         }
       } finally reader.close()
     }
     val out = refs.result()
     val commitTs = out.foldLeft(-1L)((m, r) => math.max(m, r.ts))
-    (out, if (anyTxn) commitTxn else -1L, commitTs)
+    (out, commitTxn, commitTs)
+  }
+
+  /** one slot row → its ref. Map columns are optional groups of
+    * `key_value` entries; a null map decodes as empty. */
+  private def decode(g: Group,
+                     interned: scala.collection.mutable.HashMap[String, String])
+      : FileRef = {
+    def entries(f: String): Seq[Group] =
+      if (g.getFieldRepetitionCount(f) == 0) Nil
+      else {
+        val m = g.getGroup(f, 0)
+        (0 until m.getFieldRepetitionCount(0)).map(m.getGroup(0, _))
+      }
+    def pair(kv: Group): Group = kv.getGroup("value", 0)
+    val schemaJson = g.getString("schema_json", 0)
+    FileRef(g.getString("file", 0), g.getString("kind", 0),
+      g.getLong("lo", 0), g.getLong("hi", 0),
+      stats = entries("stats").map(kv => kv.getString("key", 0) ->
+        (pair(kv).getLong("_1", 0), pair(kv).getLong("_2", 0))).toMap,
+      sstats = entries("sstats").map(kv => kv.getString("key", 0) ->
+        (pair(kv).getString("_1", 0), pair(kv).getString("_2", 0))).toMap,
+      rows = g.getLong("rows", 0),
+      bytes = g.getLong("bytes", 0),
+      ts = g.getLong("ts", 0),
+      nstats = entries("nstats").map(kv =>
+        kv.getString("key", 0) -> kv.getLong("value", 0)).toMap,
+      zgen = g.getLong("zgen", 0),
+      schemaJson = interned.getOrElseUpdate(schemaJson, schemaJson))
   }
 }

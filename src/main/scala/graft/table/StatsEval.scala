@@ -115,7 +115,7 @@ private[table] final case class StatsEval(keyCol: String) {
           // IS NULL can match iff the file HAS nulls; IS NOT NULL iff
           // it has non-null rows (exact counts — Iceberg's metrics)
           if (isNull) n > 0
-          else r.rows < 0 || n < r.rows
+          else n < r.rows
       }
       case Unknown => true
     }

@@ -74,8 +74,6 @@ private[table] final class TableIO(conf: Configuration) {
     if (!f.exists(d)) Seq.empty else f.listStatus(d).toSeq
   }
 
-  def length(p: String): Long = fs(p).getFileStatus(new Path(p)).getLen
-
   /** modification time, None when the path does not exist */
   def mtime(p: String): Option[Long] = {
     val f = fs(p)

@@ -262,6 +262,30 @@ class BenchLineSpec extends AnyFunSuite {
     }
   }
 
+  test("an exact 0.0 prints 0.0 on the adaptive rung, never the floor") {
+    // the sub-second mix above lands on the adaptive rung (whole
+    // seconds print as integers); a timing of exactly 0 must print
+    // 0.0 there, like every other rung, not a fabricated 0.1
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val results = names.zipWithIndex.map { case (n, i) =>
+      n -> (if (i == 0) 0.0 else i % 6 match {
+        case 0 | 1 => 0.32
+        case 2 | 3 => 3.7
+        case _ => 9.6
+      })
+    }
+    val (_, last) = Bench.buildLines(results, extras, fullExtras,
+      "/data/testdata/sf0.1", extrasCompact = extrasC,
+      extrasUltra = extrasU, extrasUltra2 = extrasU2)
+    import scala.jdk.CollectionConverters._
+    val qs = mapper.readTree(last).get("queries").fields().asScala
+      .map(e => e.getValue.asText).toSeq
+    assert(qs.size === results.size)
+    assert(qs.contains("4") && qs.contains("10"),
+      s"expected the adaptive rung (integer seconds): $last")
+    assert(qs.count(_ == "0.0") == 1 && !qs.contains("0.1"), last)
+  }
+
   test("prefix fallback disambiguates shared prefixes") {
     // enough 30-char names to blow the 1800 budget and force the
     // prefix fallback, with three sharing the "q23" prefix

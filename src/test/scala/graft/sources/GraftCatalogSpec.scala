@@ -852,27 +852,11 @@ class GraftCatalogSpec extends AnyFunSuite {
       "one statement = exactly one version commit per table")
   }
 
-  test("legacy mixed-case pointers resolve through the exact-path fallback") {
-    spark.sql("DROP TABLE IF EXISTS gcat.lcold")
-    spark.sql("CREATE TABLE gcat.lcold (k BIGINT) " +
-      "TBLPROPERTIES ('key' = 'k')")
-    spark.sql("INSERT INTO gcat.lcold VALUES (1), (2)")
-    // simulate a pre-normalization build: the pointer directory sits
-    // under the MIXED-CASE name the user typed back then
-    val wh = spark.conf.get("spark.sql.catalog.gcat.warehouse")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$wh/lcold"),
-      java.nio.file.Paths.get(s"$wh/LcOld"))
-    assert(spark.sql("SELECT * FROM gcat.LcOld").count() == 2,
-      "the byte-exact identifier must keep resolving")
-    spark.sql("DROP TABLE gcat.LcOld")
-  }
-
   test("a stale external marker cannot poison a managed CREATE") {
-    // a crashed/raced external registration leaves external.conf with
-    // no catalog.conf beside it; the next MANAGED create at the same
-    // identifier must clear it — or the new table would load
-    // read-only and DROP would leak its storage
+    // a crashed/raced external registration of an older build leaves
+    // external.conf with no catalog.conf beside it; a MANAGED create at
+    // the same identifier must not load read-only (which would also
+    // make DROP leak its storage) — the pointer's own mode line rules
     spark.sql("DROP TABLE IF EXISTS gcat.stale")
     val wh = spark.conf.get("spark.sql.catalog.gcat.warehouse")
     java.nio.file.Files.createDirectories(
@@ -892,7 +876,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   test("pointer mode rides the conf line: marker races cannot flip it") {
     // round 18: ownership (managed/external) is the pointer's own 4th
     // line, written inside the ONE exclusive create — external.conf
-    // is read only as the legacy fallback for pre-flag pointers
+    // is never read
     val wh = spark.conf.get("spark.sql.catalog.gcat.warehouse")
     def rewrite(p: java.nio.file.Path, s: String): Unit = {
       java.nio.file.Files.deleteIfExists(
@@ -932,8 +916,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("READ-ONLY"), e.getMessage)
     spark.sql("DROP TABLE gcat.mx2")
     assert(spark.table("gcat.mxs").count() == 1)
-    // LEGACY pre-flag pointers (3 lines) keep resolving their mode
-    // from the marker beside them
+    // LEGACY pre-flag pointers (3 lines) are refused outright — with
+    // the marker beside them or not, no load guesses their mode
     spark.sql("DROP TABLE IF EXISTS gcat.mx3")
     spark.sql(s"CREATE TABLE gcat.mx3 LOCATION '${locationOf("mxs")}'")
     val confP = java.nio.file.Paths.get(s"$wh/mx3/catalog.conf")
@@ -942,40 +926,16 @@ class GraftCatalogSpec extends AnyFunSuite {
     rewrite(confP, legacy)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$wh/mx3/external.conf"), "readonly")
-    val e2 = intercept[Exception] {
-      spark.sql("ALTER TABLE gcat.mx3 ADD COLUMN extra STRING")
+    Seq("SELECT * FROM gcat.mx3", "ALTER TABLE gcat.mx3 ADD COLUMN " +
+        "extra STRING", "DROP TABLE gcat.mx3").foreach { stmt =>
+      val e2 = intercept[Exception](spark.sql(stmt).collect())
+      assert(e2.getMessage.contains(s"catalog pointer $wh/mx3/catalog.conf") &&
+        e2.getMessage.contains("no managed/external mode line"),
+        e2.getMessage)
     }
-    assert(e2.getMessage.contains("READ-ONLY"), e2.getMessage)
-    spark.sql("DROP TABLE gcat.mx3")
     assert(spark.table("gcat.mxs").count() == 1,
-      "legacy external drop must leave the owner's storage")
-  }
-
-  test("a FAILED replace on a key.conf-less legacy table leaves none") {
-    // key.conf is written BEFORE the replace commit; on failure the
-    // restore must DELETE it when the table never had one — the
-    // streaming sink resolves its key from that file, and a stale
-    // new-key record against the surviving old schema would key
-    // batches on a column the table doesn't have
-    spark.sql("DROP TABLE IF EXISTS gcat.lg")
-    spark.sql("CREATE TABLE gcat.lg (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('key' = 'k')")
-    spark.sql("INSERT INTO gcat.lg VALUES (1, 10)")
-    val loc = locationOf("lg")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$loc/key.conf"))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$loc/.key.conf.crc"))
-    intercept[Exception] {
-      spark.sql("CREATE OR REPLACE TABLE gcat.lg " +
-        "TBLPROPERTIES ('key' = 'id') AS " +
-        "SELECT id, CAST(1 AS BIGINT) / 0 AS boom FROM RANGE(3)")
-    }
-    assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$loc/key.conf")),
-      "the failed replace must not leave the NEW key's record behind")
-    assert(spark.table("gcat.lg").count() == 1,
-      "the legacy table survives under its old key")
+      "a refused pointer must leave the owner's storage")
+    graft.util.Scratch.deleteTree(java.nio.file.Paths.get(s"$wh/mx3"))
   }
 
   test("a post-commit auto-compact failure never fails the ingest") {

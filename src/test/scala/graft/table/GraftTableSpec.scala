@@ -738,10 +738,10 @@ class GraftTableSpec extends AnyFunSuite {
     assert(t.read().where(col("k") === 3).head.getString(1) == "U3")
   }
 
-  test("pre-checkpoint manifests (no sstats, no txn rows) still open and guard") {
+  test("pre-checkpoint manifests (no sstats, no txn rows) are refused") {
     // hand-write a v1 manifest in the ROUND-10 schema — no sstats
-    // column, no txn checkpoint rows — exactly what a table created
-    // by the previous release looks like on disk
+    // column, no txn checkpoint rows — what a table created by that
+    // release looks like on disk
     val root = graft.util.Scratch.dir("graft-tbl-legacy")
     val dataDir = s"$root/data/legacy-uuid"
     rows(1, 2, 3).coalesce(1).write.parquet(dataDir)
@@ -754,28 +754,17 @@ class GraftTableSpec extends AnyFunSuite {
         typedLit(Map("k" -> (1L, 3L))))
       .coalesce(1).write.parquet(s"$root/commits/v1")
     val t = GraftTable.open(spark, root, "k")
-    // reads degrade gracefully: no sstats column ⇒ empty map, no throw
-    assert(keys(t.read()) == Seq(1L, 2L, 3L))
-    assert(t.manifestOf(1).forall(_.sstats.isEmpty))
-    // the legacy txn (column-recorded, pre-checkpoint) still guards...
-    assert(t.streamAppend(rows(9), 7L) == 1, "legacy txn must be seen")
-    // ...and the first new commit writes checkpoint rows going forward
-    assert(t.merge(Seq((2L, "U2")).toDF("k", "v"), txn = 8L) == 2)
-    assert(t.manifestOf(2).exists(r => r.kind == "txn" && r.lo == 7L),
-      "the upgrade commit must carry legacy txns forward")
-    assert(t.merge(Seq((9L, "X")).toDF("k", "v"), txn = 7L) == 2,
-      "a legacy txn replay after upgrade must still no-op")
-    assert(t.read().where(col("k") === 2).head.getString(1) == "U2")
-    // a pre-counter manifest can't answer count() from metadata: the
-    // detected fallback scans and stays exact
-    assert(t.count(1) == 3, "legacy count must fall back to a scan")
-    assert(t.count() == t.read().count())
-    // a pre-ICT manifest has no commit stamp: timestamp travel falls
-    // back to the commit slot's mtime (Delta's own pre-ICT behavior)
-    // and the upgrade commit's in-commit stamp still orders after it
-    assert(t.commitTimestampOf(1) > 0, "mtime fallback must answer")
-    assert(t.commitTimestampOf(2) >= t.commitTimestampOf(1))
-    assert(t.versionAt(t.commitTimestampOf(2)) == 2)
+    // every entry point refuses loudly — reads, replay guards, guarded
+    // merges, counts, timestamp travel — naming root, version and the
+    // missing columns; none degrades to a scan or an mtime
+    Seq[() => Any](() => t.read(), () => t.streamAppend(rows(9), 7L),
+        () => t.merge(Seq((2L, "U2")).toDF("k", "v"), txn = 8L),
+        () => t.count(1), () => t.commitTimestampOf(1)).foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains(s"table $root version 1") &&
+        e.getMessage.contains("no sstats, rows, bytes, ts"), e.getMessage)
+    }
+    assert(t.head == 1, "a refused table takes no commit")
   }
 
   test("a rewrite retires the deletion-vector rows it made stale") {
@@ -942,11 +931,18 @@ class GraftTableSpec extends AnyFunSuite {
     assert(got.count() == 102)
     assert(got.where(col("k") === 5000L).head.getString(1) == "s5000")
     assert(got.where(col("w").isNotNull).count() == 1)
-    // a LEGACY manifest (pre-schema rows) still opens via the footer
-    // fallback: schemaOf declines, read() merges footers
-    assert(t.schemaOf(t.manifestOf(t.head)
-      .map(r => if (r.kind == "data") r.copy(schemaJson = "") else r))
-      .isEmpty)
+    // a data ref with NO recorded schema is refused, never read
+    // through a footer sweep: publish the head's refs schema-less as
+    // the next version and open it on a fresh handle
+    SlotIO.write(s"${t.root}/commits/v${t.head + 1}", t.manifestOf(t.head)
+      .map(r => if (r.kind == "data") r.copy(schemaJson = "") else r),
+      txn = -1L, ts = System.currentTimeMillis(),
+      spark.sessionState.newHadoopConf())
+    val e = intercept[IllegalStateException] {
+      GraftTable.open(spark, t.root, "k").read()
+    }
+    assert(e.getMessage.contains(s"table ${t.root} version ${t.head}") &&
+      e.getMessage.contains("has no recorded schema"), e.getMessage)
   }
 
   test("type widening (int→long, float→double) resolves from the manifest, zero footer reads") {
@@ -987,11 +983,11 @@ class GraftTableSpec extends AnyFunSuite {
     intercept[Exception] { c.read().collect() }
   }
 
-  test("versionAt on a pre-ICT (mtime-stamped) log scans linearly, never mis-bisects") {
+  test("versionAt on a pre-ICT (mtime-stamped) log is refused") {
     // hand-write LEGACY manifests (no ts column) whose slot mtimes are
     // NON-monotonic — clock skew, or a copied/restored commit dir. A
     // binary search over these silently resolves to the wrong version;
-    // the fallback must return the GREATEST version with ts <= probe.
+    // the reader refuses the log instead of trusting the mtimes.
     val root = graft.util.Scratch.dir("graft-tbl-preict")
     val commits = s"$root/commits"
     (1 to 3).foreach { v =>
@@ -1008,12 +1004,11 @@ class GraftTableSpec extends AnyFunSuite {
     setMtime(2, now - 100000)
     setMtime(3, now - 500000)
     val t = GraftTable.open(spark, root, "k")
-    // probe between v3's and v2's stamps: versions with ts <= probe
-    // are {1, 3} → greatest = 3 (a binary search would probe v2,
-    // see ts > probe, and wrongly collapse to 1)
-    assert(t.versionAt(now - 300000) == 3)
-    assert(t.versionAt(now - 600000) == 1)
-    assert(t.versionAt(now) == 3)
+    Seq(now - 300000, now - 600000, now).foreach { probe =>
+      val e = intercept[IllegalStateException](t.versionAt(probe))
+      assert(e.getMessage.contains(s"table $root version 1") &&
+        e.getMessage.contains("bytes, ts, nstats"), e.getMessage)
+    }
   }
 
   test("cluster rejects a column the Morton curve cannot normalize") {

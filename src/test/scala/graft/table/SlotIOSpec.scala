@@ -11,8 +11,8 @@ import graft.table.GraftTable.FileRef
   * per slot does not justify a Spark job of driver latency per touch.
   * The on-disk format is UNCHANGED; these round-trips prove it in both
   * directions (SlotIO-written slots read identically through Spark's
-  * parquet reader, Spark-written legacy slots — including pre-stats
-  * narrow ones — decode identically through SlotIO). */
+  * parquet reader, Spark-written current slots decode identically
+  * through SlotIO), and a narrower pre-current slot is refused. */
 class SlotIOSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -60,7 +60,7 @@ class SlotIOSpec extends AnyFunSuite {
     assert(empty.getAs[Map[String, Any]]("nstats").isEmpty)
   }
 
-  test("Spark-written slots (current and legacy-narrow) decode via SlotIO") {
+  test("Spark-written current-format slots decode via SlotIO") {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     // current tuple projection, exactly what the old tryCommit wrote
@@ -75,15 +75,22 @@ class SlotIOSpec extends AnyFunSuite {
       refs.map(_.copy(ts = -1L)).sortBy(_.file))
     assert(got.forall(_.ts == 99L))
     assert(txn == 5L && ts == 99L)
-    // legacy narrow slot (pre-stats, pre-txn era): absent columns
-    // degrade to the same sentinels readSlot always used
-    val narrow = graft.util.Scratch.dir("graft-slotio-narrow") + "/v1"
+  }
+
+  test("a legacy-narrow slot is refused, naming root, version and columns") {
+    import spark.implicits._
+    val conf = spark.sessionState.newHadoopConf()
+    // pre-stats, pre-txn era slot: only the first four columns
+    val root = graft.util.Scratch.dir("graft-slotio-narrow")
     Seq(("/d/a.parquet", "data", 1L, 9L))
       .toDF("file", "kind", "lo", "hi")
-      .coalesce(1).write.parquet(narrow)
-    val (nGot, nTxn, nTs) = SlotIO.read(narrow, conf)
-    assert(nGot == Seq(FileRef("/d/a.parquet", "data", 1L, 9L)))
-    assert(nTxn == -1L && nTs == -1L)
+      .coalesce(1).write.parquet(s"$root/commits/v1")
+    val e = intercept[IllegalStateException] {
+      SlotIO.read(s"$root/commits/v1", conf)
+    }
+    assert(e.getMessage.contains(s"table $root version 1") &&
+      e.getMessage.contains("no txn, stats, sstats, rows, bytes, ts, " +
+        "nstats, zgen, schema_json column"), e.getMessage)
   }
 
   test("a full GraftTable lifecycle on SlotIO slots stays green") {
