@@ -3193,7 +3193,7 @@ object ScaleOps {
   //       root's own manifests; every mutation refuses with the
   //       managed-storage message, and DROP removes only the
   //       pointer (GraftCatalogSpec pins all three). The key
-  //       resolves from the root's key.conf. The gated lifecycle
+  //       resolves from the root's manifest stamp. The gated lifecycle
   //       creates an owner table, registers it externally, and
   //       reads head + an old version through the registration.
   // ---------------------------------------------------------------------

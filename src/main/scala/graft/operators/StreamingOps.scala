@@ -1230,8 +1230,8 @@ object StreamingOps {
     * registered `graft` sink, so every micro-batch is the SAME
     * exactly-once `streamAppend` txn commit w18/w19/w22 gate — batch
     * id as idempotency token, replay detected inside the commit CAS
-    * loop — and the key column resolves from the storage root's
-    * `key.conf` (no option needed). Oracle: the plain batch
+    * loop — and the key column resolves from the manifest's key
+    * stamp (no option needed). Oracle: the plain batch
     * aggregate — however the stream was sliced, the committed table
     * IS the input; the batch read goes through the same catalog. */
   private def w26(spark: SparkSession, dir: String): DataFrame = {

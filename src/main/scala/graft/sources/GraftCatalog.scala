@@ -58,6 +58,7 @@ import graft.table.GraftTable
   * read-only (no write capabilities), exactly like Delta's `@v`
   * reads. */
 class GraftCatalog extends TableCatalog with StagingTableCatalog {
+  import GraftCatalog.storageKeyOf
 
   private var catalogName: String = _
   private var warehouse: String = _
@@ -95,23 +96,6 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
   private val ManagedLine = "managed"
   private val ExternalLine = "external"
 
-  /** open a handle resolving the pointer's stored key name to the
-    * table's CURRENT logical key: the pointer persists the key's
-    * PHYSICAL storage name (immutable), so a key rename is complete
-    * the instant its alterColumns commit publishes — no pointer
-    * rewrite, no crash window (the round-15 advisor's non-atomic
-    * re-point). Pointers that predate this scheme stored the logical
-    * name; `logicalKeyName` resolves those to themselves. */
-  private def openHandle(loc: String, storedKey: String): GraftTable = {
-    // compound keys ('a,b') always key the handle on the synthesized
-    // __gkey storage column (never renamed — ALTER refuses)
-    if (CompoundKey.partsOf(storedKey).isDefined)
-      return GraftTable.open(spark, loc, CompoundKey.KeyName)
-    val t0 = GraftTable.open(spark, loc, storedKey)
-    val lk = t0.logicalKeyName
-    if (lk == storedKey) t0 else GraftTable.open(spark, loc, lk)
-  }
-
   private def fs(path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
@@ -129,8 +113,12 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     * JSON is a brace-delimited object, never a bare keyword, so the
     * trailing line is unambiguous. */
   private def readConf(root: String)
-      : Option[(String, String, StructType, Boolean)] =
-    ConfIO.readSmallFile(fs(confPath(root))).map { s =>
+      : Option[(String, String, StructType, Boolean)] = {
+    val (f, p) = fs(confPath(root))
+    Option.when(f.exists(p)) {
+      val in = f.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }.map { s =>
       val lines = s.linesIterator.toSeq
       val external = lines.last.trim match {
         case ExternalLine => true
@@ -145,6 +133,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         DataType.fromJson(lines.drop(2).dropRight(1).mkString("\n"))
           .asInstanceOf[StructType], external)
     }
+  }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = (warehouse +: namespace.toSeq).mkString("/")
@@ -172,7 +161,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val (key, loc, _, _) = readConf(rootOf(ident))
       .getOrElse(throw new NoSuchTableException(ident))
-    val t = openHandle(loc, key)
+    // versionAt reads only the in-commit stamps: the key is immaterial
+    val t = GraftTable.open(spark, loc, storageKeyOf(key))
     loadVersioned(ident, t.versionAt(timestampMicros / 1000L))
   }
 
@@ -260,12 +250,9 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     key
   }
 
-  /** the handle's key + the storage-side schema + the write wrap for
-    * a declared key: identity for single keys; compound keys key the
-    * handle on the synthesized `__gkey` column and wrap every
-    * insert-shaped frame with its encoding */
-  private[sources] def storageKeyOf(key: String): String =
-    if (CompoundKey.partsOf(key).isDefined) CompoundKey.KeyName else key
+  /** the storage-side schema for a declared key: identity for single
+    * keys; compound keys add the synthesized `__gkey` column, which
+    * every insert-shaped frame is wrapped with */
   private[sources] def storageSchemaOf(key: String,
                                        schema: StructType): StructType =
     if (CompoundKey.partsOf(key).isDefined)
@@ -274,11 +261,12 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         nullable = true))
     else schema
 
-  /** bootstrap a FRESH storage directory: the declared-schema commit,
-    * the standing clustering, the key record (w26's sink reads it),
-    * and — for an atomic CTAS — the initial data, all BEFORE the
-    * table is registered. A failure deletes the orphan and rethrows;
-    * nothing is ever registered half-built. */
+  /** bootstrap a FRESH storage directory: the declared-schema commit
+    * (stamped with the key and INSERT discipline — w26's sink and
+    * every load read them from the manifest), the standing
+    * clustering, and — for an atomic CTAS — the initial data, all
+    * BEFORE the table is registered. A failure deletes the orphan and
+    * rethrows; nothing is ever registered half-built. */
   private def bootstrapStorage(ident: Identifier, schema: StructType,
                                key: String, clusterCols: Seq[String],
                                data: Option[DataFrame],
@@ -293,7 +281,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
       val parts = CompoundKey.partsOf(key)
       val t = GraftTable.open(spark, loc, storageKeyOf(key))
       t.declareColumns(storageSchemaOf(key, schema),
-        keyRecord = Some(key))
+        keyRecord = Some(key), upsert = insertMode == "upsert")
       // compound tables default their standing clustering to the key
       // parts — what makes __gkey's per-file string bounds tight from
       // the first insert (the merge-pruning story)
@@ -301,22 +289,6 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         if (clusterCols.nonEmpty) clusterCols
         else parts.getOrElse(Seq.empty)
       if (cluster.nonEmpty) t.setClusterBy(cluster)
-      // the storage root's own key record (the key's immutable
-      // PHYSICAL name — or the compound part list): toTable rides the
-      // V1 fallback, which hands the sink ONLY the location — the
-      // sink resolves the key from here (w26)
-      val out = f.create(new org.apache.hadoop.fs.Path(loc, "key.conf"),
-        true)
-      try out.write(key.getBytes("UTF-8")) finally out.close()
-      // the INSERT discipline (round 18, x69): 'insert' = 'upsert'
-      // records that INSERT INTO routes through the keyed merge —
-      // a side-config in the checks/cluster family (advisory
-      // routing, saved/restored through REPLACE like the rest)
-      if (insertMode == "upsert") {
-        val io = f.create(
-          new org.apache.hadoop.fs.Path(loc, "insert.conf"), true)
-        try io.write("upsert".getBytes("UTF-8")) finally io.close()
-      }
       data.foreach { df =>
         val keyed = parts.fold(df)(p => CompoundKey.withKey(df, p))
         if (insertMode == "upsert")
@@ -406,9 +378,9 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     * colleague's table). Reads, time travel, and `readStream.table`
     * serve through the foreign root's own manifests; every mutation
     * refuses with the managed-storage message, and DROP removes only
-    * the pointer. The key resolves from the root's `key.conf` (every
-    * catalog bootstrap writes it); roots created bare through the
-    * handle pass `TBLPROPERTIES ('key' = ...)` instead. A WRITABLE
+    * the pointer. The key resolves from the root's manifest stamp
+    * (every catalog bootstrap writes one); roots created bare through
+    * the handle pass `TBLPROPERTIES ('key' = ...)` instead. A WRITABLE
     * external table stays refused on principle: graft manifests and
     * DV sidecars hold absolute paths under managed storage, and two
     * catalogs mutating one root would race each other's pointers. */
@@ -428,15 +400,14 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         "manifest: declare no columns")
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     val loc = new org.apache.hadoop.fs.Path(loc0).toString
-    val key = Option(properties.get("key")).getOrElse {
-      ConfIO.readSmallFile(fs(s"$loc/key.conf")).map(_.trim).getOrElse(
-        throw new IllegalArgumentException(
-          s"$loc0 carries no key.conf — register a bare graft root " +
-            "with TBLPROPERTIES ('key' = '<column>')"))
-    }
-    // prove the root opens under that key BEFORE anything registers —
+    // prove the root opens under its key BEFORE anything registers —
     // a typo'd location or key must not land a broken pointer
-    val handle = openHandle(loc, key)
+    val resolved = GraftCatalog.resolveKey(spark, loc,
+        Option(properties.get("key"))).getOrElse(
+      throw new IllegalArgumentException(
+        s"$loc0 carries no key stamp — register a bare graft root " +
+          "with TBLPROPERTIES ('key' = '<column>')"))
+    val handle = resolved.table
     val snap = handle.schemaAt(handle.head)
       .getOrElse(handle.read().schema)
     // ONE commit point (round 18): the `external` mode line rides the
@@ -451,7 +422,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
       val out = pf.create(new org.apache.hadoop.fs.Path(confPath(root)),
         false)
       try out.write(
-        s"$key\n$loc\n${snap.json}\n$ExternalLine".getBytes("UTF-8"))
+        s"${resolved.stored}\n$loc\n${snap.json}\n$ExternalLine"
+          .getBytes("UTF-8"))
       finally out.close()
     } catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
@@ -496,8 +468,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     * replace, then re-registers the pointer atomically (temp +
     * rename-over) — the pointer changes only when the key or declared
     * schema did, and a crash before that leaves a fully-functional
-    * table whose next load self-heals mutations by re-running the
-    * REPLACE (reads are version-pinned and unaffected). */
+    * table: loads take the new key from the replace commit's stamp,
+    * and re-running the REPLACE repairs the pointer. */
   private[sources] def commitStaged(ident: Identifier, schema: StructType,
                                     clusterCols: Seq[String],
                                     properties: util.Map[String, String],
@@ -523,8 +495,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         // table configured, so they restore on any failure; only a
         // crash in this window loses them (documented, advisory-only)
         val saved = Seq("checks.conf", "schema.conf", "bloom.conf",
-            "autocompact.conf", "cluster.conf", "key.conf",
-            "insert.conf").flatMap { c =>
+            "autocompact.conf", "cluster.conf").flatMap { c =>
           val p = new org.apache.hadoop.fs.Path(loc, c)
           if (!f.exists(p)) None
           else {
@@ -543,50 +514,26 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         val cluster =
           if (clusterCols.nonEmpty) clusterCols
           else parts.getOrElse(Seq.empty)
-        // the NEW key record lands BEFORE the replace commit (and
-        // restores with the other side-configs on failure): a crash
-        // AFTER the commit but before the pointer rewrite then heals
-        // at load — the pointer's stale key is absent from the new
-        // schema and GraftSqlTable falls back to this record (the
-        // round-16 advisor's broken-loads window). The inverse
-        // window (key.conf new, commit never landed) keeps loads on
-        // the still-valid pointer key.
-        val newMode = GraftCatalog.insertModeOf(properties)
+        // the NEW key and INSERT discipline are stamped by the replace
+        // commit itself: a crash after it but before the pointer
+        // rewrite leaves loads on the new key (they read the stamp of
+        // the version they serve), and a failure before it leaves the
+        // old table's stamps in force
+        val upsert = GraftCatalog.insertModeOf(properties) == "upsert"
+        def replace(b: DataFrame): Long =
+          t.replaceTable(b, storageSchemaOf(key, schema), cluster,
+            keyRecord = Some(key), upsert = upsert)
         try {
-          val out = f.create(
-            new org.apache.hadoop.fs.Path(loc, "key.conf"), true)
-          try out.write(key.getBytes("UTF-8")) finally out.close()
-          // the NEW insert discipline lands with the other side-
-          // configs (the saved-loop above already cleared the old
-          // one; restore-on-failure puts it back)
-          if (newMode == "upsert") {
-            val io = f.create(
-              new org.apache.hadoop.fs.Path(loc, "insert.conf"), true)
-            try io.write("upsert".getBytes("UTF-8")) finally io.close()
-          }
           val keyed = parts.fold(df0)(p => CompoundKey.withKey(df0, p))
-          if (newMode == "upsert")
+          if (upsert)
             GraftCatalog.withUniqueKeys(keyed, storageKeyOf(key),
-              "RTAS into an 'insert'='upsert' table")((b, _) =>
-              t.replaceTable(b, storageSchemaOf(key, schema), cluster,
-                keyRecord = Some(key)))
-          else t.replaceTable(keyed,
-            storageSchemaOf(key, schema), cluster,
-            keyRecord = Some(key))
+              "RTAS into an 'insert'='upsert' table")((b, _) => replace(b))
+          else replace(keyed)
         } catch { case scala.util.control.NonFatal(e) =>
           try {
             saved.foreach { case (p, bytes) =>
               val out = f.create(p, true)
               try out.write(bytes) finally out.close()
-            }
-            // insert.conf was WRITTEN above (not merely deleted): on a
-            // table that never had one, restoring 'what was saved'
-            // would leave the NEW discipline behind
-            if (newMode == "upsert" &&
-                !saved.exists(_._1.getName == "insert.conf")) {
-              f.delete(new org.apache.hadoop.fs.Path(loc, "insert.conf"),
-                false)
-              ()
             }
           } catch {
             case scala.util.control.NonFatal(c) => e.addSuppressed(c)
@@ -612,6 +559,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     require(!external,
       s"$ident is a READ-ONLY external registration — ALTER it " +
         "through the owning table")
+    lazy val resolved = GraftCatalog.resolveKey(spark, loc, Some(key)).get
     // `ALTER TABLE ... CLUSTER BY (c, ...)` — re-declare the standing
     // ingest clustering (x60's machinery; `CLUSTER BY NONE` clears it).
     // Advisory layout, so it composes with (and applies before) any
@@ -619,7 +567,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     val (clusterChanges, rest) = changes.partition(
       _.isInstanceOf[TableChange.ClusterBy])
     if (clusterChanges.nonEmpty) {
-      val t = openHandle(loc, key)
+      val t = resolved.table
       clusterChanges.foreach { c =>
         val cols = c.asInstanceOf[TableChange.ClusterBy]
           .clusteringColumns.toSeq.map { r =>
@@ -651,12 +599,12 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         s"graft ALTER supports column add/rename/drop; for $other use " +
           "the GRAFT SQL verbs (CONSTRAINT, INDEX, AUTOCOMPACT, ...)")
     }.toSeq
-    val t = openHandle(loc, key)
+    val t = resolved.table
     // compound keys: the synthesized __gkey column and the encodings
-    // inside it are invariants — a part may RENAME (the pointer holds
+    // inside it are invariants — a part may RENAME (the stamp holds
     // physical names) but never DROP, and __gkey itself never alters
-    CompoundKey.partsOf(key).foreach { parts =>
-      val logical = parts.map(t.logicalNameOf).toSet + CompoundKey.KeyName
+    resolved.parts.foreach { parts =>
+      val logical = parts.toSet + CompoundKey.KeyName
       colChanges.foreach {
         case GraftTable.DropCol(n) => require(!logical(n),
           s"cannot drop '$n': it is a compound-key component")
@@ -709,7 +657,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
   * txn protocol (w22's sink; batch id = idempotency token, replay
   * detection inside the commit CAS loop). The fallback carries only
   * the location, so the sink resolves the key column from the
-  * storage root's `key.conf` (written at CREATE; the key's
+  * manifest's key stamp (written at CREATE and REPLACE; the key's
   * immutable PHYSICAL name). A true V2 StreamingWrite would need
   * executor-side writers minting data files + manifest stats — a
   * second write path for zero additional semantics.
@@ -747,6 +695,54 @@ private[graft] class GraftSqlManagedTable(ident: String, root: String,
 
 /** catalog-level helpers shared by the catalog and its tables */
 private[sources] object GraftCatalog {
+  /** the handle's key for a declared key: compound keys key on the
+    * synthesized `__gkey` storage column */
+  def storageKeyOf(key: String): String =
+    if (CompoundKey.partsOf(key).isDefined) CompoundKey.KeyName else key
+
+  /** a table's key, resolved: the handle its verbs run on, the key's
+    * CURRENT logical name (`__gkey` for compound keys), the stored
+    * declaration (the key's PHYSICAL name or the compound part list),
+    * and the compound parts by current logical name */
+  final case class ResolvedKey(table: GraftTable, logical: String,
+                               stored: String, parts: Option[Seq[String]])
+
+  /** THE key resolver: the key comes from the manifest's key stamp of
+    * the version served ([[GraftTable.keyRecordAt]]), or — on an
+    * unstamped root, a bare `GraftTable.create` root registered
+    * externally — from `pointerKey`; None when neither exists. Keys
+    * are stored PHYSICAL (immutable), so a key rename is complete the
+    * instant its alterColumns commit publishes; compound keys key the
+    * handle on the synthesized `__gkey` column (never renamed — ALTER
+    * refuses). One probe handle serves the stamp read and usually the
+    * final handle: a second open would re-fold the manifest. */
+  def resolveKey(spark: SparkSession, root: String,
+                 pointerKey: Option[String],
+                 version: Long = -1L): Option[ResolvedKey] = {
+    // without a pointer key, probe only a root that HAS a commit log:
+    // `open` creates <root>/commits, and a fresh or mistyped root must
+    // refuse without leaving directories behind
+    if (pointerKey.isEmpty) {
+      val commits = new org.apache.hadoop.fs.Path(root, "commits")
+      if (!commits.getFileSystem(spark.sessionState.newHadoopConf())
+            .exists(commits)) return None
+    }
+    val probeKey = pointerKey.fold(CompoundKey.KeyName)(storageKeyOf)
+    val probe = GraftTable.open(spark, root, probeKey)
+    def open(k: String) =
+      if (k == probeKey) probe else GraftTable.open(spark, root, k)
+    probe.keyRecordAt(version).orElse(pointerKey).map { stored =>
+      val t0 = open(storageKeyOf(stored))
+      CompoundKey.partsOf(stored) match {
+        case Some(parts) => ResolvedKey(t0, CompoundKey.KeyName, stored,
+          Some(parts.map(t0.logicalNameOf)))
+        case None =>
+          val lk = t0.logicalKeyName
+          ResolvedKey(if (lk == stored) t0 else open(lk), lk, stored, None)
+      }
+    }
+  }
+
   /** the declared INSERT discipline (x69): 'append' (default — INSERT
     * INTO is a raw append; duplicate keys are reachable and the
     * row-level DML verbs handle them row-addressed) or 'upsert'
@@ -799,24 +795,6 @@ private[sources] object GraftCatalog {
   }
 }
 
-/** one reader for the catalog's tiny conf files (pointer conf,
-  * key.conf, insert.conf): existence probe + full read + UTF-8 decode —
-  * previously hand-rolled at three sites that must provably read
-  * the same bytes the same way (round-17 review finding) */
-private[sources] object ConfIO {
-  def readSmallFile(
-      fp: (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path))
-      : Option[String] = {
-    val (f, p) = fp
-    if (!f.exists(p)) return None
-    val len = f.getFileStatus(p).getLen.toInt
-    val bytes = new Array[Byte](len)
-    val in = f.open(p)
-    try in.readFully(0L, bytes) finally in.close()
-    Some(new String(bytes, "UTF-8"))
-  }
-}
-
 /** a catalog table: reads through the V1 snapshot plan (V1Scan shim),
   * writes through the transactional handle (V1Write); TRUNCATE is one
   * `overwriteAll` commit of the empty typed frame — history stays
@@ -837,13 +815,12 @@ private[graft] class GraftSqlTable(ident: String, root: String,
     * row-level SQL rules (MERGE INTO / UPDATE, x59) — they compile the
     * statement onto the handle's stats-pruned mutation verbs */
   private[graft] def graftHandle: GraftTable = table
-  private[graft] def graftKey: String = logicalKey
+  private[graft] def graftKey: String = resolved.logical
   private[graft] def isTimeTravel: Boolean = version >= 0
   private[graft] def isExternalReadOnly: Boolean = external
   private[graft] def identName: String = ident
   /** compound-key part names (CURRENT logical), when 'key'='a,b' */
-  private[graft] lazy val graftKeyParts: Option[Seq[String]] =
-    CompoundKey.partsOf(effKey).map(_.map(table.logicalNameOf))
+  private[graft] def graftKeyParts: Option[Seq[String]] = resolved.parts
   /** wrap an insert-shaped frame with the synthesized key (identity
     * for single-key tables) */
   private[graft] def withStorageKey(df: DataFrame): DataFrame =
@@ -876,105 +853,13 @@ private[graft] class GraftSqlTable(ident: String, root: String,
   private def spark = SparkSession.active
   /** ONE handle per loaded table: Spark calls schema()/stats many
     * times during analysis, and a fresh handle per call would re-fold
-    * the manifest each time. The pointer's `keyCol` is the key's
-    * PHYSICAL storage name; the handle speaks the current LOGICAL
-    * name, resolved once from the manifest's mapping rows. */
-  private lazy val (table: GraftTable, logicalKey: String,
-      effKey: String) = {
-    // ONE probe handle serves the stamp read and (usually) the final
-    // handle — a second open would re-fold the manifest per load
-    val probeKey =
-      if (CompoundKey.partsOf(keyCol).isDefined) CompoundKey.KeyName
-      else keyCol
-    val probe = GraftTable.open(spark, root, probeKey)
-    def open(k: String): (GraftTable, String) =
-      if (CompoundKey.partsOf(k).isDefined)
-        // compound: the handle keys on the synthesized storage column
-        (if (probeKey == CompoundKey.KeyName) probe
-         else GraftTable.open(spark, root, CompoundKey.KeyName),
-          CompoundKey.KeyName)
-      else {
-        val t0 =
-          if (k == probeKey) probe else GraftTable.open(spark, root, k)
-        val lk = t0.logicalKeyName
-        (if (lk == k) t0 else GraftTable.open(spark, root, lk), lk)
-      }
-    // manifest-only presence check (the head fold is needed below
-    // anyway): is the key's logical name in the head schema? A
-    // COMPOUND pointer checks every PART (the synthesized __gkey
-    // survives any compound REPLACE, so checking it alone would make
-    // a stale compound pointer undetectable — round-17 review
-    // finding); a reordered same-part-set compound key remains the
-    // documented undetectable residual.
-    def present(t: GraftTable, lk: String, k: String): Boolean = {
-      val h = t.head
-      h == 0 || t.schemaAt(h).forall { sch =>
-        CompoundKey.partsOf(k) match {
-          case Some(parts) =>
-            (parts.map(t.logicalNameOf) :+ CompoundKey.KeyName)
-              .forall(sch.fieldNames.contains)
-          case None => sch.fieldNames.contains(lk)
-        }
-      }
-    }
-    // round 18: the manifest's OWN key stamp (written by the same
-    // commit that declared/replaced the schema — GraftTable.keyRecRow)
-    // is authoritative when present: the load resolves the key from
-    // the version it serves, so a key-changing REPLACE that crashed
-    // before the pointer rewrite heals STRUCTURALLY — including the
-    // two shapes the key.conf heuristic below cannot see (the old key
-    // column surviving into the new schema; a reordered same-part-set
-    // compound key). The probe handle reads only the manifest, so its
-    // key name is immaterial.
-    val stamped: Option[String] =
-      probe.keyRecordAt(if (version >= 0) version else -1L)
-    stamped match {
-      case Some(rec) =>
-        val (t, lk) = open(rec)
-        (t, lk, rec)
-      case None =>
-        // unstamped roots (a bare GraftTable.create root registered
-        // externally): the pointer key, healed through the presence
-        // check + key.conf fallback
-        val (t, lk) = open(keyCol)
-        if (present(t, lk, keyCol)) (t, lk, keyCol)
-        else keyConfKey().filter(_ != keyCol) match {
-          // the one REPLACE crash window the pointer cannot cover: a
-          // key-changing REPLACE writes key.conf, commits on the
-          // storage, then rewrites the pointer — a crash between the
-          // last two leaves the pointer naming a key the new schema no
-          // longer carries. key.conf (written BEFORE the commit) names
-          // the current key; loads heal onto it, and the next REPLACE
-          // re-run repairs the pointer. (If the old key column happens
-          // to SURVIVE into the new schema the stale pointer key is
-          // undetectable on this path — closed by the stamp.)
-          case Some(k2) =>
-            val (t2, lk2) = open(k2)
-            if (present(t2, lk2, k2)) (t2, lk2, k2) else (t, lk, keyCol)
-          case None => (t, lk, keyCol)
-        }
-    }
-  }
-
-  /** the declared INSERT discipline (x69): true routes INSERT INTO
-    * through the keyed merge — recorded at CREATE/REPLACE in the
-    * storage root's insert.conf (the checks/cluster side-config
-    * family), absent = the raw-append default */
-  private lazy val insertUpsert: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(root, "insert.conf")
-    ConfIO.readSmallFile(
-      (p.getFileSystem(spark.sessionState.newHadoopConf()), p))
-      .exists(_.trim == "upsert")
-  }
-
-  /** the storage root's own key record (written at CREATE and before
-    * every REPLACE commit; the w26 streaming sink reads the same) */
-  private def keyConfKey(): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(root, "key.conf")
-    ConfIO.readSmallFile(
-      (p.getFileSystem(spark.sessionState.newHadoopConf()), p))
-      .map(_.trim)
-  }
+    * the manifest each time. The key comes from the manifest stamp of
+    * the version served — so a key-changing REPLACE that crashed
+    * before the pointer rewrite, or a RESTORE past a REPLACE, loads
+    * under the right key — and from the pointer on unstamped roots. */
+  private lazy val resolved =
+    GraftCatalog.resolveKey(spark, root, Some(keyCol), version).get
+  private def table: GraftTable = resolved.table
 
   /** the version READS serve, resolved ONCE at load time: a query's
     * analysis and its (lazy) execution must see the same snapshot
@@ -1048,7 +933,7 @@ private[graft] class GraftSqlTable(ident: String, root: String,
     * location */
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
-    m.put("key", effKey)
+    m.put("key", resolved.stored)
     m.put(TableCatalog.PROP_PROVIDER, "graft")
     m.put(TableCatalog.PROP_LOCATION, root)
     if (external) m.put("external", "readonly")
@@ -1106,7 +991,7 @@ private[graft] class GraftSqlTable(ident: String, root: String,
             checkpointLocation: String): org.apache.spark.sql.connector
               .read.streaming.MicroBatchStream =
           new GraftCdfMicroBatchStream(
-            root = root, keyCol = logicalKey,
+            root = root, keyCol = resolved.logical,
             // startingVersion wins when both given (it IS a version,
             // no resolution step); startingTimestamp (epoch millis,
             // the format route's convention) resolves through the
@@ -1162,6 +1047,9 @@ private[graft] class GraftSqlTable(ident: String, root: String,
           new InsertableRelation {
             override def insert(data: DataFrame, legacyOverwrite: Boolean): Unit = {
               val t = table
+              // the declared INSERT discipline (x69), read from the head
+              // snapshot the write lands on
+              val upsert = t.upsertAt()
               val df = withStorageKey(data)
               val storageKey =
                 if (graftKeyParts.isDefined) CompoundKey.KeyName
@@ -1169,11 +1057,11 @@ private[graft] class GraftSqlTable(ident: String, root: String,
               if (overwrite || legacyOverwrite) {
                 // the invariant covers INSERT OVERWRITE too: the
                 // replacement corpus itself must hold one row per key
-                if (insertUpsert)
+                if (upsert)
                   GraftCatalog.withUniqueKeys(df, storageKey,
                     s"INSERT OVERWRITE $ident")((b, _) => t.overwriteAll(b))
                 else t.overwriteAll(df)
-              } else if (insertUpsert) {
+              } else if (upsert) {
                 // x69: the declared INSERT discipline — one row per
                 // key is a table invariant, so the batch routes
                 // through the keyed merge (stats-pruned: only files

@@ -72,13 +72,10 @@ class GraftTableSourceProvider extends RelationProvider
     opt(parameters, k).getOrElse(
       throw new IllegalArgumentException(s"graft requires option '$k'"))
 
-  /** keyCol option, or the MANIFEST's key stamp (round 18 — the same
-    * `kind = "keyrec"` row catalog loads resolve from, so the sink and
-    * the catalog can never disagree about a table's key; this also
-    * closes the residual-(b) window where a sink started between a
-    * key-changing REPLACE's key.conf write and its commit would have
-    * keyed batches one key ahead), falling back to the storage root's
-    * `key.conf` record for pre-stamp tables. Resolved to (handle key,
+  /** the keyCol option (the format route wins), or the catalog's one
+    * key resolver over the MANIFEST's key stamp — the same `keyrec`
+    * row catalog loads resolve from, so the sink and the catalog can
+    * never disagree about a table's key. Resolved to (handle key,
     * optional wrap parts by current logical name). */
   private def resolveKey(sqlContext: SQLContext,
                          parameters: Map[String, String],
@@ -86,40 +83,11 @@ class GraftTableSourceProvider extends RelationProvider
     opt(parameters, "keyCol") match {
       case Some(k) => (k, None)
       case None =>
-        val spark = sqlContext.sparkSession
-        val hconf = spark.sessionState.newHadoopConf()
-        // probe the stamp only when the root HAS a commit log:
-        // `open` creates <root>/commits as a side effect, and a
-        // fresh (or mistyped) root must fall to the friendly keyCol
-        // refusal below without leaving directories behind
-        val commits = new org.apache.hadoop.fs.Path(root, "commits")
-        val probe =
-          if (commits.getFileSystem(hconf).exists(commits))
-            Some(GraftTable.open(spark, root, CompoundKey.KeyName))
-          else None
-        val stamped = probe.flatMap(_.keyRecordAt(-1L))
-        val stored = stamped.getOrElse {
-          val kp = new org.apache.hadoop.fs.Path(root, "key.conf")
-          val fs = kp.getFileSystem(hconf)
-          require(fs.exists(kp), "graft needs option 'keyCol' (or a " +
-            "catalog-created table, whose storage root records its key)")
-          val len = fs.getFileStatus(kp).getLen.toInt
-          val bytes = new Array[Byte](len)
-          val in = fs.open(kp)
-          try in.readFully(0L, bytes) finally in.close()
-          new String(bytes, "UTF-8").trim
-        }
-        // logicalNameOf only needs A handle on this root — reuse the
-        // probe instead of re-opening (each open re-folds the
-        // manifest)
-        def handle: GraftTable = probe.getOrElse(
-          GraftTable.open(spark, root, CompoundKey.KeyName))
-        CompoundKey.partsOf(stored) match {
-          case Some(parts) =>
-            (CompoundKey.KeyName, Some(parts.map(handle.logicalNameOf)))
-          case None =>
-            (handle.logicalNameOf(stored), None)
-        }
+        val r = GraftCatalog.resolveKey(sqlContext.sparkSession, root, None)
+          .getOrElse(throw new IllegalArgumentException(
+            "graft needs option 'keyCol' (or a catalog-created table, " +
+              "whose manifest records its key)"))
+        (r.logical, r.parts)
     }
 
   /** V1 streaming-source SCHEMA only: Spark's streaming relation
@@ -199,22 +167,20 @@ class GraftTableSourceProvider extends RelationProvider
     val root = required(parameters, "path")
     // `writeStream.toTable("gcat.t")` arrives here through Spark's V1
     // fallback with ONLY the storage location: the key resolves from
-    // the root's `key.conf` (its immutable PHYSICAL name — or the
+    // the manifest's key stamp (its immutable PHYSICAL name — or the
     // compound part list, whose synthesized key the sink fills per
     // batch). An explicit keyCol option (the format route) wins.
+    val (key, wrapParts) = resolveKey(sqlContext, parameters, root)
+    val sink = new GraftStreamSink(sqlContext, root, key, wrapParts)
     // An 'insert'='upsert' table (x69) holds one row per key as an
     // INVARIANT — a streaming APPEND cannot keep it (batches repeat
     // keys, replays re-land them), so it refuses loudly here instead
-    // of silently breaking the declared discipline.
-    val ip = new org.apache.hadoop.fs.Path(root, "insert.conf")
-    require(!ConfIO.readSmallFile(
-        (ip.getFileSystem(sqlContext.sparkSession.sessionState
-          .newHadoopConf()), ip)).exists(_.trim == "upsert"),
+    // of silently breaking the discipline its head snapshot declares.
+    require(!sink.table.upsertAt(),
       "streaming append would break an 'insert'='upsert' table's " +
         "one-row-per-key invariant — stream into a staging table and " +
         "MERGE, or foreachBatch + merge(batch, txn = batchId)")
-    val (key, wrapParts) = resolveKey(sqlContext, parameters, root)
-    new GraftStreamSink(sqlContext, root, key, wrapParts)
+    sink
   }
 }
 
@@ -225,7 +191,7 @@ private[sources] class GraftStreamSink(sqlContext: SQLContext,
     wrapParts: Option[Seq[String]] = None) extends Sink {
   // one handle for the query's lifetime: reuses its memoized
   // metadata (DV target sets) across batches
-  private val table =
+  private[sources] val table =
     GraftTable.open(sqlContext.sparkSession, root, keyCol)
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {

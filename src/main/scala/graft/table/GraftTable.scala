@@ -715,9 +715,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * the same write-time fill — so a CREATE-time default and an
     * ADD-COLUMN-time default behave identically (the round-15 advisor
     * hole: accepted-then-silently-dropped). Only valid as the very
-    * first commit. */
+    * first commit. `keyRecord` and `upsert` stamp the catalog's key
+    * and INSERT discipline into the same commit
+    * ([[GraftTable.keyRecRow]], [[GraftTable.UpsertRow]]). */
   def declareColumns(schema: org.apache.spark.sql.types.StructType,
-                     keyRecord: Option[String] = None): Long = {
+                     keyRecord: Option[String] = None,
+                     upsert: Boolean = false): Long = {
     val cols = schema.fields.toSeq.map { f =>
       val d =
         if (f.metadata.contains("CURRENT_DEFAULT"))
@@ -732,25 +735,33 @@ final class GraftTable private (spark: SparkSession, val root: String,
           "columns one at a time with addColumn")
       schema.fieldNames.foreach(n => require(n.matches(GraftTable.ColIdent),
         s"column names are identifiers: '$n'"))
-      // the key stamp rides the SAME declaring commit (round 18):
-      // every version of a catalog table is key-self-describing
+      // the key and discipline stamps ride the SAME declaring commit:
+      // every version of a catalog table is self-describing
       Some((withFeature(cols.zipWithIndex.map {
         case (c, i) => GraftTable.addColRow(c, ordinal = i.toLong)
-      }, "addcol") ++ keyRecord.map(GraftTable.keyRecRow),
+      }, "addcol") ++ GraftTable.catalogStamps(keyRecord, upsert),
         Seq.empty))
     }
   }
 
   /** the snapshot's key-record stamp ([[GraftTable.keyRecRow]]):
     * None on unstamped roots (a bare `GraftTable.create` root,
-    * registered externally) — callers fall back to the
-    * pointer/key.conf heuristics there */
-  private[graft] def keyRecordAt(version: Long = -1L): Option[String] = {
+    * registered externally) and before the first commit — callers
+    * fall back to the catalog pointer's key there */
+  private[graft] def keyRecordAt(version: Long = -1L): Option[String] =
+    stampRows(version).flatMap(GraftTable.parseKeyRec)
+
+  /** whether the snapshot declares the catalog's `'insert' =
+    * 'upsert'` discipline ([[GraftTable.UpsertRow]]) */
+  private[graft] def upsertAt(version: Long = -1L): Boolean =
+    stampRows(version).exists(_.exists(r =>
+      r.kind == "prop" && r.file == GraftTable.UpsertRow.file))
+
+  /** the manifest the catalog stamps are read from; None at head 0
+    * (no commit yet: manifestOf(0) would fail on the missing slot) */
+  private def stampRows(version: Long): Option[Seq[FileRef]] = {
     val v = if (version < 0) head else version
-    // head 0 = no commit yet: there is no manifest to read a stamp
-    // from (manifestOf(0) would fail on the missing slot) — callers
-    // fall to their key.conf heuristics
-    if (v == 0L) None else GraftTable.parseKeyRec(manifestOf(v))
+    if (v == 0L) None else Some(manifestOf(v))
   }
 
   /** every declared column's write-time default, by CURRENT LOGICAL
@@ -2596,10 +2607,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * advisory side-configs (checks/schema-mode/bloom/auto-compact)
     * BEFORE calling — old-schema constraints cannot validate
     * new-schema files (the SQL catalog's REPLACE does this). The
-    * handle's key column is the NEW schema's key. */
+    * handle's key column is the NEW schema's key; `keyRecord` and
+    * `upsert` are the catalog stamps, as in [[declareColumns]]. */
   def replaceTable(df: DataFrame, declared: org.apache.spark.sql.types.StructType,
                    clusterBy: Seq[String] = Seq.empty,
-                   keyRecord: Option[String] = None): Long = {
+                   keyRecord: Option[String] = None,
+                   upsert: Boolean = false): Long = {
     require(declared.fieldNames.contains(keyCol),
       s"key column '$keyCol' is not in the replacement schema " +
         s"(${declared.fieldNames.mkString(", ")})")
@@ -2633,12 +2646,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val v = commitLoop() { _ =>
       // the replacement ignores the base snapshot entirely: fresh
       // declarations + staged files ARE the table (txn rows are
-      // re-attached canonically by the loop); the NEW key stamp rides
-      // the same commit — a stale stamp surviving a key-changing
-      // replace would be worse than none, so an unstamped replace
-      // (bare-handle callers) drops any prior stamp with the base
+      // re-attached canonically by the loop); the NEW stamps ride the
+      // same commit — a stale stamp surviving a key-changing replace
+      // would be worse than none, so an unstamped replace (bare-handle
+      // callers) drops any prior stamp with the base
       Some((withFeature(addRows, "addcol") ++ st.refs
-        ++ keyRecord.map(GraftTable.keyRecRow), Seq.empty))
+        ++ GraftTable.catalogStamps(keyRecord, upsert), Seq.empty))
     }
     st.markers.foreach(io.delete)
     v
@@ -3404,15 +3417,27 @@ object GraftTable {
     * key from the manifest of the version it serves, and the one
     * crash window the pointer cannot cover (a key-changing REPLACE
     * that commits on storage but dies before the pointer rewrite)
-    * closes structurally, including the two cases the key.conf
-    * heuristic could not detect (the old key column surviving into
-    * the new schema, and a reordered same-part-set compound key).
-    * key.conf remains the fallback for roots with no stamp (a bare
+    * closes structurally, including the old key column surviving
+    * into the new schema and a reordered same-part-set compound key.
+    * The stamp is the only stored copy of the key besides the
+    * pointer, whose key serves roots with no stamp (a bare
     * `GraftTable.create` root registered externally). */
   private[table] def keyRecRow(record: String): FileRef =
     FileRef("keyrec:" + java.util.Base64.getEncoder.encodeToString(
       record.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
       "keyrec", -1L, -1L)
+
+  /** the catalog's `'insert' = 'upsert'` discipline (x69) as a
+    * `prop` row, written next to the key stamp by the commit that
+    * declares or replaces the schema — so RESTORE to a pre-REPLACE
+    * version brings the old discipline back with the old key, and
+    * the row carries through every rewrite like any `prop` row */
+  private[table] val UpsertRow: FileRef =
+    FileRef("prop:insert:upsert", "prop", -1L, -1L)
+
+  private[table] def catalogStamps(keyRecord: Option[String],
+                                   upsert: Boolean): Seq[FileRef] =
+    keyRecord.map(keyRecRow).toSeq ++ (if (upsert) Seq(UpsertRow) else Nil)
 
   private[table] def parseKeyRec(refs: Seq[FileRef]): Option[String] =
     refs.find(_.kind == "keyrec").map(r => new String(

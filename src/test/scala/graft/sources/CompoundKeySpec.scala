@@ -254,9 +254,8 @@ class CompoundKeySpec extends AnyFunSuite {
 
   test("a key-changing compound REPLACE crash heals at load") {
     // the REPLACE crash window (storage committed, pointer rewrite
-    // lost): a compound pointer must detect its staleness by PART
-    // presence — the synthesized __gkey survives every compound
-    // replace, so checking it alone would keep the stale key
+    // lost): the synthesized __gkey survives every compound replace,
+    // so only the parts tell the keys apart — and the stamp names them
     spark.sql("DROP TABLE IF EXISTS ck.kw")
     spark.sql("CREATE TABLE ck.kw (a BIGINT, b BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('key' = 'a,b')")
@@ -270,8 +269,8 @@ class CompoundKeySpec extends AnyFunSuite {
     java.nio.file.Files.write(confP, oldConf)
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$wh/kw/.catalog.conf.crc"))
-    // loads heal onto key.conf's 'c,d': new schema serves, keyed
-    // mutation works on the healed parts
+    // loads heal onto the replace commit's key stamp 'c,d': new
+    // schema serves, keyed mutation works on the healed parts
     assert(spark.table("ck.kw").columns.toSeq == Seq("c", "d", "n"))
     assert(spark.table("ck.kw").count() == 2)
     spark.sql("DELETE FROM ck.kw WHERE c = 5 AND d = 5")

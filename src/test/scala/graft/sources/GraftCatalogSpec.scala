@@ -31,6 +31,15 @@ class GraftCatalogSpec extends AnyFunSuite {
     lines.next(); lines.next().trim
   }
 
+  /** the key and INSERT discipline live only in the manifest: no
+    * storage root carries a side file for either */
+  private def assertNoKeySideFiles(name: String): Unit =
+    Seq("key.conf", "insert.conf").foreach { f =>
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"${locationOf(name)}/$f")),
+        s"$name's storage root holds $f")
+    }
+
   test("create/insert/select with version and timestamp time travel") {
     spark.sql("DROP TABLE IF EXISTS gcat.t1")
     spark.sql("CREATE TABLE gcat.t1 (k BIGINT, v STRING) " +
@@ -429,6 +438,56 @@ class GraftCatalogSpec extends AnyFunSuite {
     intercept[Exception] {
       spark.sql("INSERT INTO gcat.rf VALUES (3, -1)")
     }
+    // the replacements below divide by a ROW value, so they fail in
+    // the staged commit itself (a constant divisor fails in planning,
+    // before the commit runs): one that would have DECLARED upsert
+    // leaves the raw append discipline in force
+    intercept[Exception] {
+      spark.sql("CREATE OR REPLACE TABLE gcat.rf " +
+        "TBLPROPERTIES ('key' = 'id', 'insert' = 'upsert') AS " +
+        "SELECT id, CAST(1 AS BIGINT) / (id - 1) AS boom FROM RANGE(3)")
+    }
+    spark.sql("INSERT INTO gcat.rf VALUES (1, 11)")
+    assert(spark.table("gcat.rf").count() == 3,
+      "the failed replace must not arm the new INSERT discipline")
+    // ...and one that would have dropped upsert keeps it armed
+    spark.sql("DROP TABLE IF EXISTS gcat.rfu")
+    spark.sql("CREATE TABLE gcat.rfu (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('key' = 'k', 'insert' = 'upsert')")
+    spark.sql("INSERT INTO gcat.rfu VALUES (1, 10), (2, 20)")
+    intercept[Exception] {
+      spark.sql("CREATE OR REPLACE TABLE gcat.rfu " +
+        "TBLPROPERTIES ('key' = 'id') AS " +
+        "SELECT id, CAST(1 AS BIGINT) / (id - 1) AS boom FROM RANGE(3)")
+    }
+    spark.sql("INSERT INTO gcat.rfu VALUES (1, 11)")
+    val gotU = spark.table("gcat.rfu").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(spark.table("gcat.rfu").count() == 2 &&
+      gotU == Map(1L -> 11L, 2L -> 20L),
+      s"the failed replace must not strip the survivor's upsert " +
+        s"discipline (got $gotU)")
+  }
+
+  test("RESTORE past a REPLACE brings back the old INSERT discipline") {
+    spark.sql("DROP TABLE IF EXISTS gcat.rr")
+    spark.sql("CREATE TABLE gcat.rr (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('key' = 'k', 'insert' = 'upsert')")   // v1
+    spark.sql("INSERT INTO gcat.rr VALUES (1, 10)")          // v2
+    spark.sql("CREATE OR REPLACE TABLE gcat.rr " +
+      "TBLPROPERTIES ('key' = 'id') AS " +
+      "SELECT id, id * 2 AS twice FROM RANGE(3)")           // v3
+    val es = graft.util.ExtSession(spark) // the GRAFT verbs' parser
+    es.sql(s"GRAFT RESTORE '${locationOf("rr")}' TO 2")      // v4
+    // the restored version serves its own key and schema...
+    assert(spark.table("gcat.rr").columns.toSeq == Seq("k", "v"))
+    // ...and its own INSERT discipline: a re-ingested key replaces
+    spark.sql("INSERT INTO gcat.rr VALUES (1, 11)")
+    val got = spark.table("gcat.rr").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(spark.table("gcat.rr").count() == 1 && got == Map(1L -> 11L),
+      s"the restored upsert table must replace the row, not append a " +
+        s"duplicate (got $got)")
   }
 
   test("atomic CTAS: the pointer registers only after the data landed") {
@@ -579,8 +638,8 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("external registration covers bare roots and streaming reads") {
-    // a BARE root created through the handle (no catalog, no
-    // key.conf) registers with an explicit TBLPROPERTIES key
+    // a BARE root created through the handle (no catalog, no key
+    // stamp) registers with an explicit TBLPROPERTIES key
     spark.sql("DROP TABLE IF EXISTS gcat.xbare")
     val root = graft.util.Scratch.dir("graft-ext-bare")
     val t = GraftTable.create(spark, root, "k",
@@ -635,15 +694,9 @@ class GraftCatalogSpec extends AnyFunSuite {
     java.nio.file.Files.write(confP, oldConf)
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$wh/kw1/.catalog.conf.crc"))
-    // round 18: healing is STRUCTURAL — the replace commit stamped
-    // the key into the manifest itself, so delete key.conf outright
-    // to prove the heal does not ride the legacy heuristic
-    val loc1 = locationOf("kw1")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$loc1/key.conf"))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$loc1/.key.conf.crc"))
-    // loads heal onto the manifest stamp: reads serve the new schema
+    // healing is STRUCTURAL — the replace commit stamped the key into
+    // the manifest itself, and loads resolve the key from that stamp
+    // alone: reads serve the new schema
     assert(spark.table("gcat.kw1").columns.toSeq == Seq("ck", "n"))
     assert(spark.table("gcat.kw1").count() == 2)
     // ...and writes + keyed mutations run on the healed key
@@ -654,8 +707,8 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("the manifest key stamp heals the un-heuristic-able crashes") {
-    // the two key-changing-REPLACE crash shapes key.conf could never
-    // detect (round-17 residuals a/b), closed structurally by the
+    // the two key-changing-REPLACE crash shapes a schema-presence
+    // check could never detect (round-17 residuals a/b), closed by the
     // kind="keyrec" manifest row the declaring/replacing commit
     // itself writes: (1) the OLD key column SURVIVES into the new
     // schema — the stale pointer key still passes the presence
@@ -667,11 +720,6 @@ class GraftCatalogSpec extends AnyFunSuite {
       java.nio.file.Files.write(confP, oldConf)
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"$wh/$name/.catalog.conf.crc"))
-      val loc = locationOf(name)
-      java.nio.file.Files.deleteIfExists(          // no legacy crutch
-        java.nio.file.Paths.get(s"$loc/key.conf"))
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$loc/.key.conf.crc"))
     }
     val es = graft.util.ExtSession(spark) // MERGE needs the rules
     // (1) old key column survives: key k → v, column k stays
@@ -739,6 +787,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS gcat.up1")
     spark.sql("CREATE TABLE gcat.up1 (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('key' = 'k', 'insert' = 'upsert')")
+    assertNoKeySideFiles("up1")
     spark.sql("INSERT INTO gcat.up1 VALUES (1, 10), (2, 20)")
     spark.sql("INSERT INTO gcat.up1 VALUES (2, 22), (3, 30)")
     val got = spark.table("gcat.up1").collect()
@@ -757,6 +806,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS gcat.up2")
     spark.sql("CREATE TABLE gcat.up2 (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('key' = 'k')")
+    assertNoKeySideFiles("up2")
     spark.sql("INSERT INTO gcat.up2 VALUES (1, 1)")
     spark.sql("INSERT INTO gcat.up2 VALUES (1, 2)")
     assert(spark.table("gcat.up2").count() == 2)
@@ -769,6 +819,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // RTAS can flip the discipline off (and back on)
     spark.sql("CREATE OR REPLACE TABLE gcat.up1 " +
       "TBLPROPERTIES ('key' = 'k') AS SELECT 1L AS k, 1L AS v")
+    assertNoKeySideFiles("up1")
     spark.sql("INSERT INTO gcat.up1 VALUES (1, 2)")
     assert(spark.table("gcat.up1").count() == 2,
       "a replace without the property reverts to raw append")
@@ -782,6 +833,21 @@ class GraftCatalogSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(spark.table("gcat.up4").count() == 2 &&
       got4(("x", 1L)) == 11L, s"compound upsert (got $got4)")
+    assertNoKeySideFiles("up4")
+    // CTAS and REPLACE in both disciplines leave no side files either
+    spark.sql("DROP TABLE IF EXISTS gcat.up6")
+    spark.sql("CREATE TABLE gcat.up6 " +
+      "TBLPROPERTIES ('key' = 'k', 'insert' = 'upsert') AS " +
+      "SELECT 1L AS k, 1L AS v")
+    assertNoKeySideFiles("up6")
+    spark.sql("DROP TABLE IF EXISTS gcat.up7")
+    spark.sql("CREATE TABLE gcat.up7 TBLPROPERTIES ('key' = 'k') AS " +
+      "SELECT 1L AS k, 1L AS v")
+    assertNoKeySideFiles("up7")
+    spark.sql("CREATE OR REPLACE TABLE gcat.up7 " +
+      "TBLPROPERTIES ('key' = 'k', 'insert' = 'upsert') AS " +
+      "SELECT 2L AS k, 2L AS v")
+    assertNoKeySideFiles("up7")
   }
 
   test("the upsert invariant covers INSERT OVERWRITE and streaming") {

@@ -86,7 +86,7 @@ class GraftStreamSinkSpec extends AnyFunSuite {
     def drainToTable(): Unit = {
       // NO path, NO keyCol: the catalog identifier is the whole
       // configuration (location from the pointer, key from the
-      // storage root's key.conf, through the V1 fallback). format
+      // manifest's key stamp, through the V1 fallback). format
       // must name the provider — Spark's writeToV1Table refuses a
       // writer whose source differs from the table's provider.
       val q = spark.readStream.schema(rows(1 to 1).schema)
@@ -118,18 +118,17 @@ class GraftStreamSinkSpec extends AnyFunSuite {
   }
 
   test("the sink resolves its key from the manifest stamp (round 18)") {
-    // residual (b), closed: a sink started between a key-changing
-    // REPLACE's key.conf write and its commit used to key batches one
-    // key ahead — the sink now reads the SAME kind="keyrec" stamp the
-    // catalog loads resolve, so sink and catalog cannot disagree.
-    // Prove it by making key.conf actively WRONG and deleting it.
+    // the sink reads the SAME kind="keyrec" stamp the catalog loads
+    // resolve, so sink and catalog cannot disagree. The engine writes
+    // no key.conf side file; plant a WRONG one to prove a stray file
+    // is ignored.
     spark.sql("DROP TABLE IF EXISTS gsink.ks")
     spark.sql("CREATE TABLE gsink.ks (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('key' = 'k')")
     val wh = spark.conf.get("spark.sql.catalog.gsink.warehouse")
     val loc = java.nio.file.Files.readString(java.nio.file.Paths.get(
       s"$wh/ks/catalog.conf")).linesIterator.drop(1).next().trim
-    // the residual-(b) shape: key.conf one key AHEAD of the manifest
+    // a stray key.conf naming a different key than the manifest
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$loc/.key.conf.crc"))
     java.nio.file.Files.writeString(
