@@ -80,8 +80,10 @@ case class GraftMergeCommand(root: String, key: String, txn: Long,
 }
 
 /** `GRAFT CREATE '<root>' KEY <col> [RANGE CLUSTER INTO <n> FILES]
-  * USING <query>` — create a table whose version 1 is the query's
-  * rows. The optional clause range-clusters the layout on the key
+  * USING <query>` — create a table whose first data version (v1, or
+  * the one after properties declared on the empty root) is the
+  * query's rows; returns that version. The optional clause
+  * range-clusters the layout on the key
   * (repartitionByRange + sortWithinPartitions), so every later
   * stats-pruned mutation reads only key-overlapping files — the
   * clustered-create a SQL-only pipeline otherwise could not ask
@@ -97,8 +99,7 @@ case class GraftCreateCommand(root: String, key: String,
         src.repartitionByRange(n, col(key)).sortWithinPartitions(key)
       case None => src
     }
-    graft.table.GraftTable.create(session, root, key, laid)
-    Seq(Row(1L))
+    Seq(Row(graft.table.GraftTable.create(session, root, key, laid).head))
   }
 }
 

@@ -262,9 +262,9 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     else schema
 
   /** bootstrap a FRESH storage directory: the declared-schema commit
-    * (stamped with the key and INSERT discipline — w26's sink and
-    * every load read them from the manifest), the standing
-    * clustering, and — for an atomic CTAS — the initial data, all
+    * (stamped with the key, INSERT discipline and standing clustering
+    * — w26's sink, every load and every ingest read them from the
+    * manifest) and — for an atomic CTAS — the initial data, all
     * BEFORE the table is registered. A failure deletes the orphan and
     * rethrows; nothing is ever registered half-built. */
   private def bootstrapStorage(ident: Identifier, schema: StructType,
@@ -281,14 +281,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
       val parts = CompoundKey.partsOf(key)
       val t = GraftTable.open(spark, loc, storageKeyOf(key))
       t.declareColumns(storageSchemaOf(key, schema),
-        keyRecord = Some(key), upsert = insertMode == "upsert")
-      // compound tables default their standing clustering to the key
-      // parts — what makes __gkey's per-file string bounds tight from
-      // the first insert (the merge-pruning story)
-      val cluster =
-        if (clusterCols.nonEmpty) clusterCols
-        else parts.getOrElse(Seq.empty)
-      if (cluster.nonEmpty) t.setClusterBy(cluster)
+        keyRecord = Some(key), upsert = insertMode == "upsert",
+        clusterBy = clusterOf(clusterCols, parts))
       data.foreach { df =>
         val keyed = parts.fold(df)(p => CompoundKey.withKey(df, p))
         if (insertMode == "upsert")
@@ -462,14 +456,27 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     new GraftStagedTable(this, ident, schema, clusterColsOf(partitions),
       properties, orCreate = true, orReplace = true)
 
-  /** the staged commit (see the section comment above). REPLACE
-    * resets advisory side-configs FIRST (old-schema constraints
-    * cannot validate new-schema files), then lands the one-commit
-    * replace, then re-registers the pointer atomically (temp +
-    * rename-over) — the pointer changes only when the key or declared
-    * schema did, and a crash before that leaves a fully-functional
-    * table: loads take the new key from the replace commit's stamp,
-    * and re-running the REPLACE repairs the pointer. */
+  /** the standing clustering a declaring commit stamps: the declared
+    * columns, else — for compound tables — the key parts, which is
+    * what makes __gkey's per-file string bounds tight from the first
+    * insert (the merge-pruning story) */
+  private def clusterOf(clusterCols: Seq[String],
+                        parts: Option[Seq[String]]): Seq[String] =
+    if (clusterCols.nonEmpty) clusterCols else parts.getOrElse(Seq.empty)
+
+  /** the staged commit (see the section comment above). REPLACE is
+    * ONE replaceTable commit: it resets the manifest's table
+    * properties (constraints, schema mode, clustering) by carrying
+    * only those the statement declares — old-schema constraints
+    * cannot validate new-schema files — so a failed replace, which
+    * commits nothing, leaves the old table's properties in force.
+    * The bloom-index and auto-compaction side configs reset before
+    * the commit and restore on a failure. The pointer re-registers
+    * atomically (temp + rename-over) after the commit — it changes
+    * only when the key or declared schema did, and a crash before
+    * that leaves a fully-functional table: loads take the new key
+    * from the replace commit's stamp, and re-running the REPLACE
+    * repairs the pointer. */
   private[sources] def commitStaged(ident: Identifier, schema: StructType,
                                     clusterCols: Seq[String],
                                     properties: util.Map[String, String],
@@ -489,13 +496,11 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
           s"$ident is a READ-ONLY external registration — REPLACE it " +
             "through the owning table")
         val (f, _) = fs(loc)
-        // advisory side-configs reset BEFORE the commit (old-schema
-        // constraints cannot validate new-schema files at stage
-        // time) — but a FAILED replace must leave the surviving old
-        // table configured, so they restore on any failure; only a
-        // crash in this window loses them (documented, advisory-only)
-        val saved = Seq("checks.conf", "schema.conf", "bloom.conf",
-            "autocompact.conf", "cluster.conf").flatMap { c =>
+        // the advisory side configs reset BEFORE the commit (a replace
+        // resets table configuration) — but a FAILED replace must
+        // leave the surviving old table configured, so they restore on
+        // any failure; only a crash in this window loses them
+        val saved = Seq("bloom.conf", "autocompact.conf").flatMap { c =>
           val p = new org.apache.hadoop.fs.Path(loc, c)
           if (!f.exists(p)) None
           else {
@@ -511,17 +516,15 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         val t = GraftTable.open(spark, loc, storageKeyOf(key))
         val df0 = data.getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], schema))
-        val cluster =
-          if (clusterCols.nonEmpty) clusterCols
-          else parts.getOrElse(Seq.empty)
-        // the NEW key and INSERT discipline are stamped by the replace
-        // commit itself: a crash after it but before the pointer
-        // rewrite leaves loads on the new key (they read the stamp of
-        // the version they serve), and a failure before it leaves the
-        // old table's stamps in force
+        // the NEW key, INSERT discipline and clustering are stamped by
+        // the replace commit itself: a crash after it but before the
+        // pointer rewrite leaves loads on the new key (they read the
+        // stamp of the version they serve), and a failure before it
+        // leaves the old table's stamps in force
         val upsert = GraftCatalog.insertModeOf(properties) == "upsert"
         def replace(b: DataFrame): Long =
-          t.replaceTable(b, storageSchemaOf(key, schema), cluster,
+          t.replaceTable(b, storageSchemaOf(key, schema),
+            clusterOf(clusterCols, parts),
             keyRecord = Some(key), upsert = upsert)
         try {
           val keyed = parts.fold(df0)(p => CompoundKey.withKey(df0, p))
@@ -918,12 +921,13 @@ private[graft] class GraftSqlTable(ident: String, root: String,
 
   override def schema(): StructType = resolvedSchema
 
-  /** the standing clustering, reported as identity transforms (what
-    * CREATE accepted) — DESCRIBE shows it, and Spark's static
-    * PARTITION clause resolution (`INSERT INTO t PARTITION (c = 5)`)
-    * works against it; resolved once per loaded table */
+  /** the served version's standing clustering, reported as identity
+    * transforms (what CREATE accepted) — DESCRIBE shows it, and
+    * Spark's static PARTITION clause resolution (`INSERT INTO t
+    * PARTITION (c = 5)`) works against it; resolved once per loaded
+    * table */
   private lazy val reportedPartitioning: Array[Transform] =
-    table.clusterBy().map(p =>
+    table.clusterBy(pinnedVersion).map(p =>
       org.apache.spark.sql.connector.expressions.Expressions.identity(
         table.logicalNameOf(p))).toArray
   override def partitioning(): Array[Transform] = reportedPartitioning

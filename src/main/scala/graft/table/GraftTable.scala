@@ -563,10 +563,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   /** the head manifest (empty when no commit yet) — the mapping every
     * NEW write converts through */
-  private def headRefs: Seq[FileRef] = {
-    val h = head
-    if (h == 0) Seq.empty else manifestOf(h)
-  }
+  private def headRefs: Seq[FileRef] = refsAt(-1L)
 
   /** physical frame → the user-visible logical frame: renamed physical
     * columns alias to their logical names, dropped physical columns
@@ -715,12 +712,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * the same write-time fill — so a CREATE-time default and an
     * ADD-COLUMN-time default behave identically (the round-15 advisor
     * hole: accepted-then-silently-dropped). Only valid as the very
-    * first commit. `keyRecord` and `upsert` stamp the catalog's key
-    * and INSERT discipline into the same commit
-    * ([[GraftTable.keyRecRow]], [[GraftTable.UpsertRow]]). */
+    * first commit. `keyRecord`, `upsert` and `clusterBy` stamp the
+    * catalog's key, INSERT discipline and standing clustering into
+    * the same commit ([[GraftTable.catalogStamps]]). */
   def declareColumns(schema: org.apache.spark.sql.types.StructType,
                      keyRecord: Option[String] = None,
-                     upsert: Boolean = false): Long = {
+                     upsert: Boolean = false,
+                     clusterBy: Seq[String] = Seq.empty): Long = {
     val cols = schema.fields.toSeq.map { f =>
       val d =
         if (f.metadata.contains("CURRENT_DEFAULT"))
@@ -729,17 +727,19 @@ final class GraftTable private (spark: SparkSession, val root: String,
       validateDefault(f.name, f.dataType, d)
       GraftTable.AddedCol(f.name, f.dataType, d)
     }
+    clusterBy.foreach(c => require(schema.fieldNames.contains(c),
+      s"cluster column '$c' is not in the declared schema"))
     commitLoop() { base =>
       require(base.isEmpty,
         "declareColumns bootstraps an EMPTY table; declare more " +
           "columns one at a time with addColumn")
       schema.fieldNames.foreach(n => require(n.matches(GraftTable.ColIdent),
         s"column names are identifiers: '$n'"))
-      // the key and discipline stamps ride the SAME declaring commit:
-      // every version of a catalog table is self-describing
+      // the catalog stamps ride the SAME declaring commit: every
+      // version of a catalog table is self-describing
       Some((withFeature(cols.zipWithIndex.map {
         case (c, i) => GraftTable.addColRow(c, ordinal = i.toLong)
-      }, "addcol") ++ GraftTable.catalogStamps(keyRecord, upsert),
+      }, "addcol") ++ GraftTable.catalogStamps(keyRecord, upsert, clusterBy),
         Seq.empty))
     }
   }
@@ -749,19 +749,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * registered externally) and before the first commit — callers
     * fall back to the catalog pointer's key there */
   private[graft] def keyRecordAt(version: Long = -1L): Option[String] =
-    stampRows(version).flatMap(GraftTable.parseKeyRec)
+    GraftTable.parseKeyRec(refsAt(version))
 
   /** whether the snapshot declares the catalog's `'insert' =
     * 'upsert'` discipline ([[GraftTable.UpsertRow]]) */
   private[graft] def upsertAt(version: Long = -1L): Boolean =
-    stampRows(version).exists(_.exists(r =>
-      r.kind == "prop" && r.file == GraftTable.UpsertRow.file))
+    GraftTable.hasProp(refsAt(version), GraftTable.UpsertRow)
 
-  /** the manifest the catalog stamps are read from; None at head 0
-    * (no commit yet: manifestOf(0) would fail on the missing slot) */
-  private def stampRows(version: Long): Option[Seq[FileRef]] = {
+  /** a version's manifest (head by default); empty at head 0 (no
+    * commit yet: manifestOf(0) would fail on the missing slot) */
+  private def refsAt(version: Long): Seq[FileRef] = {
     val v = if (version < 0) head else version
-    if (v == 0L) None else Some(manifestOf(v))
+    if (v == 0L) Seq.empty else manifestOf(v)
   }
 
   /** every declared column's write-time default, by CURRENT LOGICAL
@@ -858,14 +857,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
                 dataType: org.apache.spark.sql.types.DataType,
                 defaultSql: Option[String] = None): Long = {
     validateDefault(name, dataType, defaultSql)
-    val v = commitLoop() (base =>
+    commitLoop() (base =>
       Some((applyAddColumn(base, name, dataType, defaultSql), Seq.empty)))
-    // an enforce-mode table's recorded schema must gain the column, or
-    // every post-add write would be rejected as drift; re-capturing
-    // from the head snapshot (which now includes the declaration) also
-    // re-stamps the property fingerprint
-    if (schemaMode() == "enforce") setSchemaMode("enforce")
-    v
   }
 
   /** eager default validation — fail loudly at declare time, not
@@ -929,16 +922,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
       case GraftTable.AddCol(n, t, d) => validateDefault(n, t, d)
       case _ => ()
     }
-    val v = commitLoop() { base =>
+    commitLoop() { base =>
       Some((changes.foldLeft(base) {
         case (b, GraftTable.RenameCol(o, n)) => applyRenameColumn(b, o, n)
         case (b, GraftTable.DropCol(n))      => applyDropColumn(b, n)
         case (b, GraftTable.AddCol(n, t, d)) => applyAddColumn(b, n, t, d)
       }, Seq.empty))
     }
-    if (changes.exists(_.isInstanceOf[GraftTable.AddCol]) &&
-        schemaMode() == "enforce") setSchemaMode("enforce")
-    v
   }
 
   // ---- read plumbing --------------------------------------------------
@@ -1189,8 +1179,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * lexicographic bounds in `sstats`). An all-NULL column simply
     * records no stats (always a candidate — planning may weaken,
     * correctness cannot). */
-  private def stage(df: DataFrame): Staged = {
-    enforceSchema(df) // BEFORE the write: nothing to clean up
+  private def stage(base: Seq[FileRef], df: DataFrame): Staged = {
+    enforceSchema(base, df) // BEFORE the write: nothing to clean up
     stageCounter.incrementAndGet()
     io.mkdirs(dataDir)
     val uuid = java.util.UUID.randomUUID().toString
@@ -1243,7 +1233,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // CHECK constraints gate the commit HERE: a violation discards the
     // staged files (vacuum-safe — marker cleared after the delete) and
     // throws before any manifest exists
-    try validateChecks(files, df.schema)
+    try validateChecks(files, df.schema, GraftTable.parseChecks(base))
     catch { case e: Throwable =>
       io.deleteTree(sub); io.delete(marker); throw e
     }
@@ -1253,7 +1243,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // (merge of the distinct per-file schemas — Delta's metaData
     // action, per-file-provenanced) instead of sweeping every footer
     val schemaJson = df.schema.json
-    val pk = physKeyOf(headRefs) // staged frames are PHYSICAL (x53)
+    val pk = physKeyOf(base) // staged frames are PHYSICAL (x53)
     val dataStaged = Staged(sub, files.map { f =>
       val st = perFile.get(f)
       val (lo, hi) = st.flatMap(_.intStats.get(pk))
@@ -1313,11 +1303,31 @@ final class GraftTable private (spark: SparkSession, val root: String,
       marker)
   }
 
-  // ---- bloom file index -----------------------------------------------
+  // ---- table properties -----------------------------------------------
+  //
+  // CHECK constraints, the schema mode and the standing clustering are
+  // `kind = "prop"` manifest rows that carry their own content (see
+  // [[GraftTable.checkRow]]) — the manifest is their only copy. The
+  // commit that changes a property writes its row, and every write
+  // reads the rows from the base it composes against, so a change
+  // claims a version slot: an in-flight writer loses its CAS race and
+  // re-stages against the new set ([[metaStamp]]), never rebases rows
+  // validated against the old one (Delta versions its metadata in the
+  // log for the same reason). Time travel, RESTORE, clones and REPLACE
+  // carry the properties of the version they serve with no extra code.
 
-  // ---- CHECK constraints ------------------------------------------------
-
-  private def checksConfPath = s"$root/checks.conf"
+  /** ONE metadata commit swapping the base's property rows whose file
+    * `drop` selects for `add(base)` — none when the base already holds
+    * exactly those rows. On a root with no commit yet this is a
+    * metadata-only v1. Returns the head after the change. */
+  private def commitProps(drop: String => Boolean)(
+      add: Seq[FileRef] => Seq[FileRef]): Long =
+    commitLoop() { base =>
+      val (old, kept) = base.partition(r => r.kind == "prop" && drop(r.file))
+      val fresh = add(base)
+      if (old.map(_.file).toSet == fresh.map(_.file).toSet) None
+      else Some((kept ++ fresh, Seq.empty))
+    }
 
   /** declare a CHECK CONSTRAINT (Delta's `ALTER TABLE ... ADD
     * CONSTRAINT ... CHECK`): every row a mutation stages FROM NOW ON
@@ -1332,8 +1342,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * exactly where Delta pays it, and the shape that holds when a
     * 100 TB table ingests a GB batch. Existing rows are not
     * re-validated (add constraints before data, or validate
-    * retroactively with `readWhere(!expr)`). */
-  def addCheck(name: String, exprSql: String): Unit = {
+    * retroactively with `readWhere(!expr)`). Re-adding a name
+    * replaces the constraint. */
+  def addCheck(name: String, exprSql: String): Long = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"constraint names are [A-Za-z0-9_]+: '$name'")
     require(!exprSql.contains("\n") && exprSql.nonEmpty,
@@ -1341,71 +1352,25 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // fail loudly NOW on a syntax error, not mid-ingest (Spark 4's
     // functions.expr defers parsing to analysis — call the parser)
     spark.sessionState.sqlParser.parseExpression(exprSql)
-    val before = checks()
-    val kept = before.filterNot(_._1 == name)
-    val content = (kept.toSeq :+ (name -> exprSql)).sortBy(_._1)
-      .map { case (n, e) => s"$n=$e" }.mkString("", "\n", "\n")
-    io.writeUtf8(checksConfPath, content)
-    if (before.get(name) != Some(exprSql)) commitPropStamp("checks", content)
+    commitProps(GraftTable.isCheckRow(name))(_ =>
+      Seq(GraftTable.checkRow(name, exprSql)))
   }
 
-  /** drop a CHECK constraint by name (no-op when absent) */
-  def dropCheck(name: String): Unit = {
-    val before = checks()
-    if (!before.contains(name)) return // nothing changes, nothing stamps
-    val kept = before.filterNot(_._1 == name).toSeq.sortBy(_._1)
-    val content =
-      if (kept.isEmpty) { io.delete(checksConfPath); "" }
-      else {
-        val c = kept.map { case (n, e) => s"$n=$e" }.mkString("", "\n", "\n")
-        io.writeUtf8(checksConfPath, c)
-        c
-      }
-    commitPropStamp("checks", content)
-  }
+  /** drop a CHECK constraint by name (no commit when absent) */
+  def dropCheck(name: String): Long =
+    commitProps(GraftTable.isCheckRow(name))(_ => Nil)
 
-  /** VERSION a metadata property change into the manifest (round-15
-    * verdict #7 — the rebase-vs-metadata-commits hole): constraints
-    * and the schema mode live in side files that stage() validates
-    * against, so a constraint added between a racing writer's stage
-    * and its publish was invisible to the commit race — the loser's
-    * already-validated rows would rebase in un-revalidated (Delta
-    * versions its metadata in the log exactly to close this). Each
-    * change now also commits a `kind = "prop"` fingerprint row: the
-    * change claims a version slot, every in-flight writer therefore
-    * LOSES its CAS race, and [[canRebase]] treats a fingerprint
-    * difference as a real conflict — the forced re-compose re-stages
-    * and re-validates against the new set. No-op on an empty table
-    * (nothing can be in flight against no base; the conf file alone
-    * governs, exactly as before). */
-  private def commitPropStamp(kind: String, content: String): Unit =
-    if (head > 0) {
-      val stamp = GraftTable.propRow(kind, content)
-      commitLoop() { base =>
-        val kept = base.filterNot(r => r.kind == "prop" &&
-          r.file.startsWith(s"prop:$kind:"))
-        Some((kept :+ stamp, Seq.empty))
-      }
-      ()
-    }
+  /** the head's CHECK constraints, name → boolean SQL expression */
+  def checks(): Map[String, String] = GraftTable.parseChecks(headRefs)
 
-  /** the table's CHECK constraints, name → boolean SQL expression */
-  def checks(): Map[String, String] =
-    io.readUtf8(checksConfPath).map { s =>
-      s.linesIterator.map(_.trim).filter(_.contains("="))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-        .toMap
-    }.getOrElse(Map.empty)
-
-  /** validate freshly staged files against every constraint whose
-    * columns the staged schema carries (a delta narrower than the
+  /** validate freshly staged files against every constraint of `cs`
+    * whose columns the staged schema carries (a delta narrower than the
     * table — a DV sidecar, a pre-evolution feed — skips constraints it
     * cannot express, matching Delta's per-write scoping); throws with
     * the constraint name and one offending row on violation */
   private def validateChecks(files: Seq[String],
-                             schema: org.apache.spark.sql.types.StructType)
-      : Unit = {
-    val cs = checks()
+                             schema: org.apache.spark.sql.types.StructType,
+                             cs: Map[String, String]): Unit = {
     if (cs.isEmpty || files.isEmpty) return
     val names = schema.fieldNames.toSet
     // pre-analysis reference collection: walk the PARSED (unresolved)
@@ -1430,64 +1395,44 @@ final class GraftTable private (spark: SparkSession, val root: String,
     }
   }
 
-  // ---- schema mode ------------------------------------------------------
-
-  private def schemaModePath = s"$root/schema.conf"
-
   /** set the table's SCHEMA MODE (Delta's schema enforcement):
     *  - `"evolve"` (the default, and the pre-existing behavior): any
     *    staged schema commits; readers union schemas and fill NULL —
     *    x27/x35's O(metadata) column add;
     *  - `"enforce"`: a mutation whose staged schema differs from the
-    *    RECORDED one — missing columns, new columns, or a changed
-    *    type — ABORTS before any manifest exists, exactly like the
-    *    CHECK gate. The recorded schema is captured HERE from the
-    *    head snapshot (or by the first enforced write on an empty
-    *    table) and kept as a table property, so per-mutation
-    *    validation is one small property read — never a footer sweep
-    *    (Delta keeps the schema in its log for the same reason). The
+    *    one its base manifest records ([[schemaOf]]) — missing
+    *    columns, new columns, or a changed type — ABORTS before any
+    *    manifest exists, exactly like the CHECK gate. An empty base
+    *    accepts any schema (the first write defines it). Validation
+    *    reads only the manifest — never a footer sweep (Delta keeps
+    *    the schema in its log for the same reason). The
     *    accidental-drift protection Delta turns on by default; here
     *    it is opt-in because evolution-by-append is a first-class
     *    workflow this engine ships. */
-  def setSchemaMode(mode: String): Unit = {
+  def setSchemaMode(mode: String): Long = {
     require(mode == "evolve" || mode == "enforce",
       s"schema mode is 'evolve' or 'enforce' (got '$mode')")
-    if (mode == "evolve") {
-      val had = io.readUtf8(schemaModePath).isDefined
-      io.delete(schemaModePath)
-      if (had) commitPropStamp("schema", "")
-    } else {
-      val h = head
-      // recorded under PHYSICAL names: enforcement compares against
-      // staged frames, which stage physically (renames don't drift it)
-      val json =
-        if (h == 0) "" else readPhysical(manifestOf(h)).schema.json
-      io.writeUtf8(schemaModePath, "enforce\n" + json)
-      commitPropStamp("schema", "enforce\n" + json)
-    }
+    commitProps(_ == GraftTable.EnforceRow.file)(_ =>
+      if (mode == "enforce") Seq(GraftTable.EnforceRow) else Nil)
   }
 
-  /** the persisted schema mode — "evolve" unless set */
+  /** the head's schema mode — "evolve" unless set */
   def schemaMode(): String =
-    if (io.readUtf8(schemaModePath).exists(_.startsWith("enforce")))
-      "enforce"
+    if (GraftTable.hasProp(headRefs, GraftTable.EnforceRow)) "enforce"
     else "evolve"
 
-  /** under `enforce`, reject a staged schema that differs from the
-    * recorded one (names AND types; column order is immaterial —
-    * readers are name-based) */
-  private def enforceSchema(df: DataFrame): Unit = {
-    val confOpt = io.readUtf8(schemaModePath)
-    if (!confOpt.exists(_.startsWith("enforce"))) return
-    val conf = confOpt.get
-    val json = conf.linesIterator.drop(1).mkString("\n").trim
-    if (json.isEmpty) { // empty table at set time: this write defines it
-      io.writeUtf8(schemaModePath, "enforce\n" + df.schema.json)
-      return
-    }
-    val want = org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fields.map(f => f.name -> f.dataType).toMap
+  /** under `enforce`, reject a staged schema that differs from the one
+    * `base` records (names AND types; column order is immaterial —
+    * readers are name-based). Staged frames and [[schemaOf]] both
+    * speak PHYSICAL names, so renames never drift it. */
+  private def enforceSchema(base: Seq[FileRef], df: DataFrame): Unit = {
+    if (!GraftTable.hasProp(base, GraftTable.EnforceRow) ||
+        !base.exists(_.kind == "data")) return
+    val recorded = schemaOf(base).getOrElse(throw new IllegalStateException(
+      s"schema mode 'enforce' cannot check this write: table $root's " +
+        "files record irreconcilable column types (logged above) — " +
+        "rewrite the offending files to one type"))
+    val want = recorded.fields.map(f => f.name -> f.dataType).toMap
     val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
     if (want != got) {
       val missing = want.keySet -- got.keySet
@@ -1502,6 +1447,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
           "setSchemaMode(\"evolve\") to allow schema drift")
     }
   }
+
+  // ---- bloom file index -----------------------------------------------
 
   private def bloomConfPath = s"$root/bloom.conf"
 
@@ -2039,16 +1986,22 @@ final class GraftTable private (spark: SparkSession, val root: String,
   private def txnsIn(manifest: Seq[FileRef]): Set[Long] =
     manifest.collect { case r if r.kind == "txn" && r.lo >= 0 => r.lo }.toSet
 
-  /** append-only commit: new files, every existing file by reference */
   /** the write-relevant METADATA a staged frame was prepared against:
     * declared defaults (addcol rows, materialized by `fillDefaults`)
-    * and the constraint/schema-mode fingerprints (validated by
-    * `stage`). A stage-once writer whose base grew a DIFFERENT set
-    * must re-stage — its fills and validation ran against the old
-    * one. Same set [[canRebase]] treats as a forced re-compose. */
-  private def metaStamp(refs: Seq[FileRef]): Set[String] =
-    refs.iterator.filter(r => r.kind == "prop" || r.kind == "addcol")
-      .map(_.file).toSet
+    * and the table properties (constraints and schema mode validated
+    * by `stage`, the clustering `layoutFor` applied). A stage-once
+    * writer whose base grew a DIFFERENT set must re-stage — its fills
+    * and validation ran against the old one. Same set [[canRebase]]
+    * treats as a forced re-compose. */
+  private def metaStamp(refs: Seq[FileRef]): Set[String] = {
+    val rows = refs.iterator.filter(r => r.kind == "prop" ||
+      r.kind == "addcol").map(_.file).toSet
+    // an empty enforced base accepts any schema, so a write staged
+    // against one re-stages once a racing first write defines it
+    if (rows(GraftTable.EnforceRow.file) && !refs.exists(_.kind == "data"))
+      rows + "enforce:empty"
+    else rows
+  }
 
   /** the STAGE-ONCE commit loop append/streamAppend/overwriteAll
     * share: fill declared defaults against the head, stage once,
@@ -2067,7 +2020,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     while (true) {
       val hr = headRefs
       val stamp = metaStamp(hr)
-      val st = stage(toPhysical(hr, layoutFor(hr, fillDefaults(hr, df))))
+      val st = stage(hr, toPhysical(hr, layoutFor(hr, fillDefaults(hr, df))))
       var stale = false
       var done = false
       val v = commitLoop(txn) { base =>
@@ -2338,7 +2291,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
           Some(under.exceptAll(old.select(
             touched.columns.map(col).toSeq: _*)))
       }
-      val st = stage(toPhysical(base,
+      val st = stage(base, toPhysical(base,
         carried.foldLeft(kept)(_ unionByName _)
           .unionByName(fillDefaults(base, post),
             allowMissingColumns = true)))
@@ -2406,6 +2359,38 @@ final class GraftTable private (spark: SparkSession, val root: String,
     matchedFilesPlan(base, cand, allKeys, nKeys)
       .collect().map(_.getString(0)).toSeq.sorted
 
+  /** the predicate verbs' shared planning (delete / update /
+    * overwriteWhere): stats-prune the base's data files, bloom-refine
+    * the candidates, then scan ONLY the candidates for the files
+    * holding a row where `predicate` is TRUE (one Spark job, none when
+    * nothing survives pruning). The predicate speaks LOGICAL names:
+    * its skeleton `tree0` maps to physical for stats/bloom pruning,
+    * and rows evaluate on the logically-projected scan (x53). Also
+    * returns the foreign-add conflict test for the rebase check: a
+    * winner's file whose stats may satisfy the predicate (our
+    * mutation, serialized LAST, would have to cover its rows) — the
+    * same evaluator pruning trusts, so a false "may match" costs a
+    * re-stage, never a wrong rebase. */
+  private def matchPredicate(base: Seq[FileRef], tree0: PredicateTree.Node,
+                             predicate: Column)
+      : (Seq[String], Seq[FileRef] => Boolean) = {
+    val tree = statsTree(tree0, base)
+    val data = base.filter(_.kind == "data")
+    val cand = bloomRefine(base, data,
+      data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
+    val matched =
+      if (cand.isEmpty) Seq.empty[String]
+      else toLogical(base, scan(base, cand)).where(predicate)
+        .select(col("__file")).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+    (matched, wAdded => wAdded.exists(r => eval.mayMatch(tree, r)))
+  }
+
+  /** the LOGICAL rows of `files` (DV-applied, no provenance) — what a
+    * predicate verb rewrites */
+  private def touchedRows(base: Seq[FileRef], files: Seq[String]): DataFrame =
+    toLogical(base, scan(base, files).drop("__file", "__pos"))
+
   /** row-level DELETE: removes rows where `predicate` is TRUE (SQL
     * three-valued semantics — NULL-evaluating rows always survive).
     *
@@ -2422,25 +2407,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     require(mode == "cow" || mode == "mor", s"unknown delete mode: $mode")
     val tree0 = PredicateTree.parse(predicate)
     commitLoopMutate() { base =>
-      // the predicate speaks LOGICAL names: its skeleton maps to
-      // physical for stats/bloom pruning, and row evaluation happens
-      // on the logically-projected scan (x53)
-      val tree = statsTree(tree0, base)
-      // foreign-add conflict = a winner's file whose stats may satisfy
-      // the predicate (our delete, serialized LAST, would have to cover
-      // its rows); the stats evaluator is the same one candidate
-      // pruning trusts, so a false "may match" costs a re-stage, never
-      // a wrong rebase
-      val addConflicts = (wAdded: Seq[FileRef]) =>
-        wAdded.exists(r => eval.mayMatch(tree, r))
-      val data = base.filter(_.kind == "data")
-      val cand = bloomRefine(base, data,
-        data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else toLogical(base, scan(base, cand)).where(predicate)
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
+      val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       val ms = matched.toSet
       if (matched.isEmpty)
         // commits an empty version (mutator contract); its only
@@ -2448,9 +2415,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
         Some(GraftTable.Mutation(Set.empty, Seq.empty, Seq.empty,
           Set.empty, addConflicts))
       else if (mode == "cow") {
-        val st = stage(toPhysical(base,
-          toLogical(base, scan(base, matched).drop("__file", "__pos"))
-            .where(coalesce(!predicate, lit(true)))))
+        val st = stage(base, toPhysical(base,
+          touchedRows(base, matched).where(coalesce(!predicate, lit(true)))))
         Some(GraftTable.Mutation(ms, st.refs, Seq(st), ms, addConflicts))
       } else {
         val st = stageDv(toLogical(base, scan(base, matched))
@@ -2483,10 +2449,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     val tree0 = PredicateTree.parse(predicate)
     commitLoopMutate() { base =>
-      val tree = statsTree(tree0, base)
-      val addConflicts = (wAdded: Seq[FileRef]) =>
-        wAdded.exists(r => eval.mayMatch(tree, r))
-      val data = base.filter(_.kind == "data")
       val lcols = logicalCols(base)
       set.keys.foreach { c =>
         require(lcols.contains(c),
@@ -2494,20 +2456,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
         require(c != keyCol, s"cannot UPDATE the key column '$c' — " +
           "use merge() to move rows between keys")
       }
-      val cand = bloomRefine(base, data,
-        data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else toLogical(base, scan(base, cand)).where(predicate)
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
+      val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       val ms = matched.toSet
       if (matched.isEmpty)
         Some(GraftTable.Mutation(Set.empty, Seq.empty, Seq.empty,
           Set.empty, addConflicts))
       else {
-        val touched = toLogical(base,
-          scan(base, matched).drop("__file", "__pos"))
+        val touched = touchedRows(base, matched)
         val types = touched.schema.fields.map(f => f.name -> f.dataType)
           .toMap
         // ONE select evaluates every RHS against the old row; a NULL
@@ -2523,7 +2478,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
             case None => col(c)
           }
         }: _*)
-        val st = stage(toPhysical(base, updated))
+        val st = stage(base, toPhysical(base, updated))
         Some(GraftTable.Mutation(ms, st.refs, Seq(st), ms, addConflicts))
       }
     }
@@ -2547,29 +2502,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
       s"overwriteWhere: $violating replacement row(s) do not satisfy " +
         "the predicate — a backfill must stay inside its own window")
     commitLoopMutate() { base =>
-      val tree = statsTree(tree0, base)
-      val addConflicts = (wAdded: Seq[FileRef]) =>
-        wAdded.exists(r => eval.mayMatch(tree, r))
-      val data = base.filter(_.kind == "data")
-      val cand = bloomRefine(base, data,
-        data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else toLogical(base, scan(base, cand)).where(predicate)
-          .select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
+      val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       val ms = matched.toSet
-      val kept =
-        if (matched.isEmpty) None
-        else Some(toLogical(base, scan(base, matched).drop("__file", "__pos"))
-          .where(coalesce(!predicate, lit(true))))
       val df2 = fillDefaults(base, df) // write-time defaults (x56)
-      val staged = kept match {
-        case Some(k) =>
-          stage(toPhysical(base,
-            k.unionByName(df2, allowMissingColumns = true)))
-        case None => stage(toPhysical(base, df2))
-      }
+      val staged = stage(base, toPhysical(base,
+        if (matched.isEmpty) df2
+        else touchedRows(base, matched)
+          .where(coalesce(!predicate, lit(true)))
+          .unionByName(df2, allowMissingColumns = true)))
       Some(GraftTable.Mutation(ms, staged.refs, Seq(staged), ms,
         addConflicts))
     }
@@ -2602,13 +2542,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * drop-then-create, which exposes a missing-table window and
     * forgets history.
     *
-    * `clusterBy` (optional) becomes the standing ingest clustering
-    * and lays the replacement out immediately; the caller must reset
-    * advisory side-configs (checks/schema-mode/bloom/auto-compact)
-    * BEFORE calling — old-schema constraints cannot validate
-    * new-schema files (the SQL catalog's REPLACE does this). The
-    * handle's key column is the NEW schema's key; `keyRecord` and
-    * `upsert` are the catalog stamps, as in [[declareColumns]]. */
+    * The replacement stages against NO table properties (old-schema
+    * constraints cannot validate new-schema files), and the commit
+    * carries only the properties this call declares: `clusterBy`
+    * (optional) becomes the standing ingest clustering and lays the
+    * replacement out immediately; `keyRecord` and `upsert` are the
+    * catalog stamps, as in [[declareColumns]]. A failed replace
+    * commits nothing, so the old table keeps its properties. The
+    * handle's key column is the NEW schema's key. */
   def replaceTable(df: DataFrame, declared: org.apache.spark.sql.types.StructType,
                    clusterBy: Seq[String] = Seq.empty,
                    keyRecord: Option[String] = None,
@@ -2628,11 +2569,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     }
     val addRows = cols.zipWithIndex.map {
       case (c, i) => GraftTable.addColRow(c, ordinal = i.toLong) }
-    if (clusterBy.nonEmpty) {
-      clusterBy.foreach(c => require(declared.fieldNames.contains(c),
-        s"cluster column '$c' is not in the replacement schema"))
-      io.writeUtf8(clusterConfPath, clusterBy.mkString(" "))
-    } else io.delete(clusterConfPath)
+    clusterBy.foreach(c => require(declared.fieldNames.contains(c),
+      s"cluster column '$c' is not in the replacement schema"))
     // shape the replacement to the declared schema (CTAS queries may
     // order/alias differently); names are fresh-physical by
     // construction, so no mapping applies
@@ -2642,7 +2580,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       if (clusterBy.isEmpty) shaped
       else shaped.repartitionByRange(clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
-    val st = stage(laidOut)
+    val st = stage(Seq.empty, laidOut)
     val v = commitLoop() { _ =>
       // the replacement ignores the base snapshot entirely: fresh
       // declarations + staged files ARE the table (txn rows are
@@ -2651,7 +2589,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       // would be worse than none, so an unstamped replace (bare-handle
       // callers) drops any prior stamp with the base
       Some((withFeature(addRows, "addcol") ++ st.refs
-        ++ GraftTable.catalogStamps(keyRecord, upsert), Seq.empty))
+        ++ GraftTable.catalogStamps(keyRecord, upsert, clusterBy), Seq.empty))
     }
     st.markers.foreach(io.delete)
     v
@@ -2698,7 +2636,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
         val folded = scan(base, small.map(_.file)).drop("__file", "__pos")
           .coalesce(math.max(1, targetFiles))
         val pk = physKeyOf(base) // folded frames are physical (x53)
-        val st = stage(
+        val st = stage(base,
           if (folded.columns.contains(pk))
             folded.sortWithinPartitions(pk)
           else folded)
@@ -2719,7 +2657,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * at least `minSmallFiles` data files under `smallFileBytes`, an
     * inline bin-packing [[compact]] folds them to `targetFiles`. The
     * policy is pure maintenance — it never changes table CONTENTS, so
-    * unlike checks/schema-mode it needs no manifest fingerprint stamp
+    * unlike the manifest's table properties it claims no version
     * (a racing writer's staged rows are valid under either setting);
     * the compaction itself is an ordinary CAS-looped commit.
     *
@@ -2741,8 +2679,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   def clearAutoCompact(): Unit = io.delete(autoCompactConfPath)
 
-  private def clusterConfPath = s"$root/cluster.conf"
-
   /** declare a STANDING ingest-time clustering (Delta liquid's
     * `CLUSTER BY` declaration; what the catalog maps `PARTITIONED BY`
     * onto, x60): every subsequent insert-shaped commit (`append`,
@@ -2759,34 +2695,34 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * Cost model: one range-shuffle of each ingest batch — exactly
     * what a partitioned write costs anywhere — with the file count
     * set by `spark.sql.shuffle.partitions` (AQE coalescing applies);
-    * auto-compaction folds stragglers. Advisory like the auto-compact
-    * policy: layout, never correctness. */
-  def setClusterBy(cols: Seq[String]): Unit = {
+    * auto-compaction folds stragglers. Layout, never correctness. */
+  def setClusterBy(cols: Seq[String]): Long = {
     require(cols.nonEmpty && cols.size <= 4,
       s"1..4 clustering columns (got ${cols.size})")
     cols.foreach(c => require(c.matches(GraftTable.ColIdent),
       s"column names are identifiers: '$c'"))
-    val hr = headRefs
-    val lcols = logicalCols(hr)
-    if (lcols.nonEmpty)
-      cols.foreach(c => require(lcols.contains(c),
-        s"clustering column '$c' does not exist " +
-          s"(columns: ${lcols.mkString(", ")})"))
-    val phys = physicalOf(hr)
-    io.writeUtf8(clusterConfPath, cols.map(phys).mkString(" "))
+    commitProps(GraftTable.isClusterRow) { base =>
+      val lcols = logicalCols(base)
+      if (lcols.nonEmpty)
+        cols.foreach(c => require(lcols.contains(c),
+          s"clustering column '$c' does not exist " +
+            s"(columns: ${lcols.mkString(", ")})"))
+      GraftTable.clusterRows(cols.map(physicalOf(base)))
+    }
   }
 
-  def clearClusterBy(): Unit = io.delete(clusterConfPath)
+  /** drop the standing clustering */
+  def clearClusterBy(): Long = commitProps(GraftTable.isClusterRow)(_ => Nil)
 
-  /** the standing clustering, by PHYSICAL column name */
-  def clusterBy(): Seq[String] =
-    io.readUtf8(clusterConfPath)
-      .map(_.trim.split("\\s+").toSeq.filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
+  /** the standing clustering of a version (head by default), by
+    * PHYSICAL column name */
+  def clusterBy(version: Long = -1L): Seq[String] =
+    GraftTable.parseCluster(refsAt(version))
 
-  /** apply the standing clustering to an insert-shaped LOGICAL frame */
+  /** apply `refs`' standing clustering to an insert-shaped LOGICAL
+    * frame */
   private def layoutFor(refs: Seq[FileRef], df: DataFrame): DataFrame = {
-    val phys = clusterBy()
+    val phys = GraftTable.parseCluster(refs)
     if (phys.isEmpty) return df
     val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
     val cols = phys.flatMap { p =>
@@ -2923,7 +2859,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
               i * (n - 1) + (n - 1 - j)))
           }
         }
-        val st = stage(snap
+        val st = stage(base, snap
           .withColumn("__zv", coalesce(zv, lit(-1L)))
           .repartitionByRange(math.max(1, targetFiles), col("__zv"))
           .sortWithinPartitions("__zv")
@@ -2939,8 +2875,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
         } else
           // the full rewrite is the whole live row set with DVs
           // applied: the new manifest is the staged files plus the
-          // table-level metadata rows (column mapping, property
-          // fingerprints), which describe the table, not its files
+          // table-level metadata rows (column mapping, table
+          // properties), which describe the table, not its files
           Some((base.filter(r => GraftTable.CarriedKinds(r.kind)) ++
             stamped, Seq(st)))
       }
@@ -3300,7 +3236,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   // test seam: a completed-but-uncommitted stage IS the mid-commit state
   // the vacuum-safety race is about (stage() returns, tryCommit hasn't
   // run) — exposed so the spec can hold a table in exactly that state
-  private[table] def stageForTest(df: DataFrame): Staged = stage(df)
+  private[table] def stageForTest(df: DataFrame): Staged =
+    stage(headRefs, df)
   private[table] def adoptForTest(st: Staged): Long = {
     val v = commitLoop() (base => Some((base ++ st.refs, Seq.empty)))
     st.markers.foreach(io.delete)
@@ -3354,14 +3291,52 @@ object GraftTable {
   private[table] def colRow(logical: String, physical: String): FileRef =
     FileRef(s"col:$logical:$physical", "col", -1L, -1L)
 
-  /** a metadata-property fingerprint row (`kind = "prop"`) — the
-    * manifest-versioned witness of the checks/schema-mode side files,
-    * so racing writers see property changes as commit conflicts (see
-    * `commitPropStamp`) */
-  private[table] def propRow(kind: String, content: String): FileRef =
-    FileRef(s"prop:$kind:${java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(content))}", "prop",
-      -1L, -1L)
+  /** TABLE PROPERTY rows (`kind = "prop"`) carry their content in
+    * their `file` field (see the class's table-properties section): a
+    * CHECK constraint is `prop:check:<name>:<base64 expr>`, the
+    * enforce schema mode `prop:enforce`, the standing clustering
+    * `prop:cluster:<comma-joined physical columns>`, the catalog's
+    * upsert discipline [[UpsertRow]]. */
+  private[table] def checkRow(name: String, exprSql: String): FileRef =
+    FileRef(s"prop:check:$name:${b64(exprSql)}", "prop", -1L, -1L)
+
+  private[table] def isCheckRow(name: String): String => Boolean =
+    _.startsWith(s"prop:check:$name:")
+
+  private[table] def parseChecks(refs: Seq[FileRef]): Map[String, String] =
+    refs.collect { case r if r.kind == "prop" &&
+        r.file.startsWith("prop:check:") =>
+      val Array(n, e) = r.file.stripPrefix("prop:check:").split(":", 2)
+      n -> unb64(e)
+    }.toMap
+
+  private[table] val EnforceRow: FileRef =
+    FileRef("prop:enforce", "prop", -1L, -1L)
+
+  private[table] def clusterRows(physical: Seq[String]): Seq[FileRef] =
+    if (physical.isEmpty) Nil
+    else Seq(FileRef(s"prop:cluster:${physical.mkString(",")}", "prop",
+      -1L, -1L))
+
+  private[table] val isClusterRow: String => Boolean =
+    _.startsWith("prop:cluster:")
+
+  private[table] def parseCluster(refs: Seq[FileRef]): Seq[String] =
+    refs.collectFirst { case r if r.kind == "prop" && isClusterRow(r.file) =>
+      r.file.stripPrefix("prop:cluster:").split(',').toSeq
+    }.getOrElse(Nil)
+
+  /** does `refs` hold the property row `row` (matched by kind and
+    * file: decoded rows also carry their commit's stamp) */
+  private[table] def hasProp(refs: Seq[FileRef], row: FileRef): Boolean =
+    refs.exists(r => r.kind == row.kind && r.file == row.file)
+
+  private def b64(s: String): String = java.util.Base64.getEncoder
+    .encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  private def unb64(s: String): String = new String(
+    java.util.Base64.getDecoder.decode(s),
+    java.nio.charset.StandardCharsets.UTF_8)
 
   /** a DECLARED column (`kind = "addcol"` manifest row — Delta's
     * `ALTER TABLE ... ADD COLUMN`, x56): `name` is the column's
@@ -3385,27 +3360,20 @@ object GraftTable {
     refs.collect { case r if r.kind == "addcol" =>
       val s = r.file.stripPrefix("addcol:")
       val Array(name, tB64, dB64) = s.split(":", 3)
-      val dec = java.util.Base64.getDecoder
-      val t = org.apache.spark.sql.types.DataType.fromJson(
-        new String(dec.decode(tB64), java.nio.charset.StandardCharsets.UTF_8))
-      val d = new String(dec.decode(dB64),
-        java.nio.charset.StandardCharsets.UTF_8)
+      val t = org.apache.spark.sql.types.DataType.fromJson(unb64(tB64))
+      val d = unb64(dB64)
       (r.lo, AddedCol(name, t, if (d.isEmpty) None else Some(d)))
     }.sortBy(_._1).map(_._2)
 
-  private[table] def addColRow(c: AddedCol, ordinal: Long = -1L): FileRef = {
-    val enc = java.util.Base64.getEncoder
-    def b64(s: String) = enc.encodeToString(
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private[table] def addColRow(c: AddedCol, ordinal: Long = -1L): FileRef =
     FileRef(s"addcol:${c.name}:${b64(c.dataType.json)}:" +
       b64(c.defaultSql.getOrElse("")), "addcol", ordinal, -1L)
-  }
 
   /** manifest row kinds that CARRY through whole-snapshot rewrites
-    * (cluster's full rewrite replaces every data/DV/bloom ref, but
-    * column-mapping, declared-column, property-fingerprint,
-    * feature-flag, and key-record rows describe the TABLE, not its
-    * files) */
+    * (cluster's full rewrite and overwriteAll replace every
+    * data/DV/bloom ref, but column-mapping, declared-column, table
+    * property, feature-flag, and key-record rows describe the TABLE,
+    * not its files) */
   private[table] val CarriedKinds: Set[String] =
     Set("col", "addcol", "prop", "feature", "keyrec")
 
@@ -3423,9 +3391,7 @@ object GraftTable {
     * pointer, whose key serves roots with no stamp (a bare
     * `GraftTable.create` root registered externally). */
   private[table] def keyRecRow(record: String): FileRef =
-    FileRef("keyrec:" + java.util.Base64.getEncoder.encodeToString(
-      record.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-      "keyrec", -1L, -1L)
+    FileRef("keyrec:" + b64(record), "keyrec", -1L, -1L)
 
   /** the catalog's `'insert' = 'upsert'` discipline (x69) as a
     * `prop` row, written next to the key stamp by the commit that
@@ -3435,14 +3401,17 @@ object GraftTable {
   private[table] val UpsertRow: FileRef =
     FileRef("prop:insert:upsert", "prop", -1L, -1L)
 
+  /** the rows a declaring or replacing commit stamps next to its
+    * declarations: the key record, the upsert discipline and the
+    * standing clustering (physical names = declared names there) */
   private[table] def catalogStamps(keyRecord: Option[String],
-                                   upsert: Boolean): Seq[FileRef] =
-    keyRecord.map(keyRecRow).toSeq ++ (if (upsert) Seq(UpsertRow) else Nil)
+                                   upsert: Boolean,
+                                   clusterBy: Seq[String]): Seq[FileRef] =
+    keyRecord.map(keyRecRow).toSeq ++
+      (if (upsert) Seq(UpsertRow) else Nil) ++ clusterRows(clusterBy)
 
   private[table] def parseKeyRec(refs: Seq[FileRef]): Option[String] =
-    refs.find(_.kind == "keyrec").map(r => new String(
-      java.util.Base64.getDecoder.decode(r.file.stripPrefix("keyrec:")),
-      java.nio.charset.StandardCharsets.UTF_8))
+    refs.find(_.kind == "keyrec").map(r => unb64(r.file.stripPrefix("keyrec:")))
 
   /** READER FEATURE FLAGS (Delta's protocol/table-features,
     * Iceberg's format-version): the first commit that makes a table
@@ -3507,6 +3476,11 @@ object GraftTable {
       if (r.kind == "dv" && r.hi < 0)
         refuse(root, v.toString,
           s"deletion vector ${r.file} has no recorded position count")
+      // hash-only property rows: their content lived in side files
+      if (r.kind == "prop" && (r.file.startsWith("prop:checks:") ||
+                               r.file.startsWith("prop:schema:")))
+        refuse(root, v.toString,
+          s"it carries the hash-only property row ${r.file}")
       if (!KnownKinds(r.kind))
         throw new IllegalStateException(
           s"table $root version $v carries manifest rows of unknown " +
@@ -3640,12 +3614,14 @@ object GraftTable {
     def markers: Seq[String] = marker +: extra.flatMap(_.markers)
   }
 
-  /** version 1 = the initial file set */
+  /** the first DATA commit: version 1, or the version after the
+    * metadata-only commits of properties declared on the empty root */
   def create(spark: SparkSession, root: String, keyCol: String,
              df: DataFrame): GraftTable = {
     val t = new GraftTable(spark, root, keyCol)
     t.io.mkdirs(s"$root/commits")
-    require(t.head == 0, s"table at $root already exists")
+    require(!t.headRefs.exists(_.kind == "data"),
+      s"table at $root already exists")
     t.append(df)
     t
   }
@@ -3663,10 +3639,12 @@ object GraftTable {
     * bytes copied, O(manifest) work. Mutations copy-on-write into the
     * clone's OWN data dir, so the source never changes through the
     * clone; the clone's `expire` lists only its own data dir, so it
-    * can never vacuum a source file. Table properties (bloom index,
-    * CHECK constraints, schema mode) copy; the source's txn replay
-    * guards do NOT (batch-id idempotency is per table), and the
-    * commit-arbiter choice stays a per-root deployment decision.
+    * can never vacuum a source file. The manifest's table properties
+    * (CHECK constraints, schema mode, clustering) are those of the
+    * cloned VERSION; the bloom-index and auto-compaction side configs
+    * copy from the source root. The source's txn replay guards do NOT
+    * (batch-id idempotency is per table), and the commit-arbiter
+    * choice stays a per-root deployment decision.
     * The dev/test-on-production shape at 100 TB: an experiment table
     * in seconds, paying only for its own divergence. Caveat (same as
     * Delta's): vacuuming the SOURCE below the cloned version breaks
@@ -3680,8 +3658,7 @@ object GraftTable {
     val t = new GraftTable(spark, root, keyCol)
     t.io.mkdirs(s"$root/commits")
     require(t.head == 0, s"table at $root already exists")
-    Seq("bloom.conf", "checks.conf", "schema.conf",
-        "autocompact.conf").foreach { p =>
+    Seq("bloom.conf", "autocompact.conf").foreach { p =>
       src.io.readUtf8(s"$srcRoot/$p")
         .foreach(s => t.io.writeUtf8(s"$root/$p", s))
     }

@@ -84,7 +84,7 @@ object ExtSession {
         .master(base.sparkContext.master)
         .withExtensions(new graft.GraftExtensions())
       // runtime SQL confs carry over (static ones are no-ops on a
-      // live context and skipped); core spark.* cluster confs ride
+      // live context and skipped); core spark.* settings ride
       // the shared SparkContext already
       base.conf.getAll.foreach { case (k, v) =>
         if (k.startsWith("spark.sql.") &&

@@ -240,15 +240,16 @@ class GraftSqlParserSpec extends AnyFunSuite {
         "SELECT 99L AS k, -1L AS amt").collect()
     }
     val t = graft.table.GraftTable.open(base, root, "k")
-    assert(t.head == 1, "the violating SQL append must not commit")
+    // v1 is the constraint's metadata-only commit, v2 the CREATE
+    assert(t.head == 2, "the violating SQL append must not commit")
     // the drop is a VERSIONED metadata commit (round 15: racing
-    // writers must see constraint changes as commit conflicts) — v2
+    // writers must see constraint changes as commit conflicts) — v3
     assert(ext.sql(s"GRAFT CONSTRAINT '$root' DROP amt_nonneg")
       .head.getLong(0) == 0L)
-    assert(t.head == 2, "a constraint change claims a version slot")
+    assert(t.head == 3, "a constraint change claims a version slot")
     ext.sql(s"GRAFT APPEND INTO '$root' KEY k USING " +
       "SELECT 99L AS k, -1L AS amt").collect()
-    assert(t.head == 3)
+    assert(t.head == 4)
     // bad expression syntax fails AT PARSE, like any SQL statement
     intercept[Exception] {
       ext.sql(s"GRAFT CONSTRAINT '$root' ADD broken CHECK (amt >=)")

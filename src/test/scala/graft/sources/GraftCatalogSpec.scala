@@ -31,10 +31,12 @@ class GraftCatalogSpec extends AnyFunSuite {
     lines.next(); lines.next().trim
   }
 
-  /** the key and INSERT discipline live only in the manifest: no
-    * storage root carries a side file for either */
+  /** the key, INSERT discipline, CHECK constraints, schema mode and
+    * clustering live only in the manifest: no storage root carries a
+    * side file for any of them */
   private def assertNoKeySideFiles(name: String): Unit =
-    Seq("key.conf", "insert.conf").foreach { f =>
+    Seq("key.conf", "insert.conf", "checks.conf", "schema.conf",
+        "cluster.conf").foreach { f =>
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"${locationOf(name)}/$f")),
         s"$name's storage root holds $f")
@@ -299,6 +301,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS gcat.pb")
     spark.sql("CREATE TABLE gcat.pb (k BIGINT, c BIGINT, v STRING) " +
       "PARTITIONED BY (c) TBLPROPERTIES ('key' = 'k')")
+    assertNoKeySideFiles("pb")
     // 400 rows over 8 partition values, arriving as FOUR ingest
     // batches (the real cadence): each INSERT lays its files out
     // range-clustered on c — AQE sizes partitions by bytes, so a
@@ -352,6 +355,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("ALTER TABLE gcat.cb CLUSTER BY (k)")
     assert(GraftTable.open(spark, locationOf("cb"), "k")
       .clusterBy() == Seq("k"))
+    assertNoKeySideFiles("cb")
     spark.sql("ALTER TABLE gcat.cb CLUSTER BY NONE")
     assert(GraftTable.open(spark, locationOf("cb"), "k")
       .clusterBy().isEmpty)
@@ -396,6 +400,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // REPLACE TABLE (no AS SELECT): declared-only replacement
     spark.sql("REPLACE TABLE gcat.rp (x BIGINT, y STRING) " +
       "TBLPROPERTIES ('key' = 'x')")                          // v4
+    assertNoKeySideFiles("rp")
     assert(spark.table("gcat.rp").columns.toSeq == Seq("x", "y"))
     assert(spark.table("gcat.rp").count() == 0)
     // ...and the replaced table ingests/mutates under its new key
@@ -488,6 +493,31 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.table("gcat.rr").count() == 1 && got == Map(1L -> 11L),
       s"the restored upsert table must replace the row, not append a " +
         s"duplicate (got $got)")
+  }
+
+  test("RESTORE below a property change brings back that version's setting") {
+    spark.sql("DROP TABLE IF EXISTS gcat.rc")
+    spark.sql("CREATE TABLE gcat.rc (k BIGINT, c BIGINT) " +
+      "CLUSTER BY (c) TBLPROPERTIES ('key' = 'k')")           // v1
+    spark.sql("INSERT INTO gcat.rc VALUES (1, 10)")          // v2
+    spark.sql("ALTER TABLE gcat.rc CLUSTER BY (k)")          // v3
+    val es = graft.util.ExtSession(spark) // the GRAFT verbs' parser
+    es.sql(s"GRAFT RESTORE '${locationOf("rc")}' TO 2")      // v4
+    val t = GraftTable.open(spark, locationOf("rc"), "k")
+    assert(t.clusterBy() == Seq("c"))
+    val desc = spark.sql("DESCRIBE TABLE gcat.rc").collect()
+      .map(_.getString(0)).toSeq
+    assert(desc.dropWhile(_ != "# Partition Information").drop(2)
+      .takeWhile(r => r.nonEmpty && !r.startsWith("#")) == Seq("c"),
+      s"the restored clustering reports as the partitioning: $desc")
+    // a constraint declared through the GRAFT verb on the table's
+    // storage root is a manifest row too, and RESTORE below it lifts it
+    es.sql(s"GRAFT CONSTRAINT '${locationOf("rc")}' ADD c_pos CHECK (c > 0)")
+    assertNoKeySideFiles("rc")
+    intercept[Exception] { spark.sql("INSERT INTO gcat.rc VALUES (2, -1)") }
+    es.sql(s"GRAFT RESTORE '${locationOf("rc")}' TO 4")      // v6
+    spark.sql("INSERT INTO gcat.rc VALUES (2, -1)")
+    assert(spark.table("gcat.rc").count() == 2)
   }
 
   test("atomic CTAS: the pointer registers only after the data landed") {

@@ -193,7 +193,8 @@ class AddColumnSpec extends AnyFunSuite {
     val t = GraftTable.create(spark,
       graft.util.Scratch.dir("graft-addcol-enforce"), "k", rows(1, 2))
     t.setSchemaMode("enforce")
-    t.addColumn("tier", StringType, Some("'std'"))
+    val v = t.addColumn("tier", StringType, Some("'std'"))
+    assert(t.head == v, "the add is ONE commit, no schema re-capture")
     t.append(rows(3)) // filled to the full recorded schema -> accepted
     assert(t.read().where(col("k") === 3).head.getString(2) == "std")
     // drift beyond the declared set still rejects

@@ -89,13 +89,13 @@ class CloneSpec extends AnyFunSuite {
   test("version clones, property copy, and per-table txn guards") {
     val src = GraftTable.open(spark,
       graft.util.Scratch.dir("graft-clone-v-src"), "k")
-    src.addCheck("k_pos", "k > 0")
-    src.streamAppend(rows(1L, 2L), 5L)                     // v1, txn 5
-    src.streamAppend(rows(3L), 6L)                         // v2, txn 6
+    src.addCheck("k_pos", "k > 0")                         // v1
+    src.streamAppend(rows(1L, 2L), 5L)                     // v2, txn 5
+    src.streamAppend(rows(3L), 6L)                         // v3, txn 6
     // clone of the OLDER version
     val dst = graft.util.Scratch.dir("graft-clone-v-dst")
     val clone = GraftTable.shallowClone(spark, src.root, "k", dst,
-      version = 1)
+      version = 2)
     assert(keys(clone.read()) == Seq(1L, 2L))
     // CHECK constraints copied: a violating append fails on the clone
     intercept[IllegalArgumentException] { clone.append(rows(-1L)) }

@@ -53,12 +53,12 @@ class SchemaModeSpec extends AnyFunSuite {
   test("enforce on an empty table: the first write defines the schema") {
     val t = GraftTable.open(spark,
       graft.util.Scratch.dir("graft-schema-first"), "k")
-    t.setSchemaMode("enforce")
-    assert(t.append(rows(1)) == 1)
+    t.setSchemaMode("enforce") // v1: the mode's metadata-only commit
+    assert(t.append(rows(1)) == 2)
     intercept[IllegalArgumentException] {
       t.append(Seq(Tuple1(2L)).toDF("k"))
     }
-    assert(t.append(rows(2)) == 2)
+    assert(t.append(rows(2)) == 3)
   }
 
   test("expire dryRun reports exactly what a real sweep then deletes") {
