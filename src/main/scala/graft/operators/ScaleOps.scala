@@ -1931,9 +1931,9 @@ object ScaleOps {
   //       exactly oracle-checkable because lexicographic order on
   //       zero-padded digits IS numeric order. The lifecycle: create
   //       range-clustered on the string key → MERGE a key-localized
-  //       string-keyed delta (pruneByKeys' StringType branch: a
-  //       broadcast range join against the sstats bounds in unsigned-
-  //       UTF-8-byte order) → DELETE by a string-range predicate
+  //       string-keyed delta (the key pass's StringType branch: a
+  //       binary search of the sstats bounds in unsigned-UTF-8-byte
+  //       order) → DELETE by a string-range predicate
   //       (PredicateTree CmpS through the byte-order min/max
   //       evaluator) → aggregate the head. GraftTableSpec pins the
   //       read set (non-candidate files physically hidden during both
@@ -2775,13 +2775,17 @@ object ScaleOps {
   //       most-typed warehouse verbs, previously GRAFT-verb/handle
   //       only): an injected resolution rule compiles the RESOLVED
   //       Spark statements onto the handle's stats-pruned mutators —
-  //       MERGE is the pruned matched-target read (readMatchingKeys =
-  //       Delta's findTouchedFiles) + first-match clause CASEs over a
-  //       left-outer join + ONE atomic applyChanges commit; UPDATE is
-  //       x54's matched-file COW. GraftRowLevelSqlSpec pins the
-  //       read-set (file-hiding), the group-based rewrite (unmatched
-  //       files carry by reference), the SQL:2003 cardinality
-  //       violation, and the refusal surface. The gated lifecycle:
+  //       MERGE reads its target twice (Delta's two-scan shape): the
+  //       source joins the key-pruned candidate rows once
+  //       (readCandidates = Delta's findTouchedFiles), first-match
+  //       clause CASEs project the join into the change feed, whose
+  //       one precheck aggregate also collects the matched rows' files,
+  //       and ONE atomic applyChanges commit rewrites exactly those
+  //       files; UPDATE is x54's matched-file COW.
+  //       GraftRowLevelSqlSpec pins the read-set (file-hiding), the
+  //       group-based rewrite (unmatched files carry by reference), the
+  //       statement's job budget, the SQL:2003 cardinality violation,
+  //       and the refusal surface. The gated lifecycle:
   //       CREATE + INSERT, one MERGE carrying conditional DELETE /
   //       UPDATE (old-row + source RHS) / INSERT clauses, one UPDATE,
   //       then the final-state aggregate. Rule injection is

@@ -7,11 +7,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, expr, lit, when}
+import org.apache.spark.sql.functions.{col, expr, lit, monotonically_increasing_id, when}
 import org.apache.spark.sql.graftglue.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.GraftSqlTable
+import graft.table.GraftTable
 
 /** ANSI `UPDATE`, `DELETE`, and `MERGE INTO` on catalog tables — the
   * pure-SQL front door for the row-level verbs the engine already
@@ -42,16 +43,27 @@ import graft.sources.GraftSqlTable
   * matched files rewrite, spec-pinned), so the rule route gets the
   * identical read/write set with one write path to keep correct.
   *
-  * MERGE compiles in two phases, Delta's own shape:
-  *  1. findTouchedFiles — [[graft.table.GraftTable.readMatchingKeys]]
-  *     reads the matched target rows through the manifest-stats/bloom
-  *     pruned plan (delta-scale keys open range-overlapping files,
-  *     never the table);
-  *  2. the source LEFT OUTER JOINs those rows, every WHEN clause
-  *     becomes a first-match CASE over the join, and the resulting
-  *     net change feed applies in ONE atomic commit via
+  * MERGE reads its target twice, Delta's own two-scan shape:
+  *  1. findTouchedFiles — [[graft.table.GraftTable.readCandidates]]
+  *     prunes the data files off the manifest's key ranges (one key
+  *     pass that also counts the source keys; delta-scale keys open
+  *     range-overlapping files, never the table), and the source joins
+  *     those candidate rows ONCE, the source as the hash side. Every
+  *     WHEN clause becomes a first-match CASE in ONE projection of the
+  *     join, and one aggregate over the resulting net change feed
+  *     answers the NULL-key and duplicate-key checks and collects the
+  *     matched rows' files;
+  *  2. the rewrite — the feed applies in ONE atomic commit via
   *     `applyChanges` (upserts + deletes; untouched files carry by
-  *     reference).
+  *     reference), which rewrites exactly those files without planning
+  *     again when it composes against the version the candidates were
+  *     read at. A moved head or a lost race re-plans from the feed.
+  * The collected files are the rewrite set only when no feed key can
+  * sit in a file the join left unmatched, so they are handed over only
+  * when the ON condition has no residual conjunct, there is no WHEN NOT
+  * MATCHED BY SOURCE clause, and every INSERT assigns each key part
+  * from that part's ON source expression; any other statement plans
+  * its rewrite from the feed keys.
   *
   * Key-addressed semantics (documented deltas from vanilla SQL MERGE,
   * both inherent to an upsert table): the ON condition must contain
@@ -635,11 +647,12 @@ case class GraftSqlSubqueryDeleteCommand(
   }
 }
 
-/** `MERGE INTO <graft table> USING <source> ON ... WHEN ...` →
-  * pruned matched-target read + clause compilation + ONE atomic
-  * [[graft.table.GraftTable.applyChanges]] commit (see
-  * [[GraftRowLevelRule]] for the full contract). Returns the new
-  * version. */
+/** `MERGE INTO <graft table> USING <source> ON ... WHEN ...` → one
+  * pruned candidate read joined once with the source + clause
+  * compilation into one projection + ONE atomic
+  * [[graft.table.GraftTable.applyChanges]] commit that rewrites the
+  * matched rows' files (see [[GraftRowLevelRule]] for the two-scan
+  * shape, its guard and the full contract). Returns the new version. */
 case class GraftSqlMergeCommand(
     table: GraftSqlTable,
     targetOutput: Seq[Attribute],
@@ -743,14 +756,13 @@ case class GraftSqlMergeCommand(
         "AND conjuncts compose freely)")
 
     // ---- frames: the source — MATERIALIZED once (Delta's merge-
-    // source discipline): it feeds the key-prune read, the outer
-    // join, and the by-source anti-join, and a non-deterministic
-    // source (rand(), a sampled view) re-executed across those could
-    // apply a DIFFERENT matched set than the feed it produced — and
-    // the PRUNED matched-target read (findTouchedFiles — manifest
-    // stats + bloom open only range-overlapping files; spec-pinned
-    // by file-hiding)
+    // source discipline), each row tagged with a row id (`__sid`): it
+    // feeds the key pass, the join, the re-attach of unmatched rows
+    // and the by-source anti-join, and a non-deterministic source
+    // (rand(), a sampled view) re-executed across those could apply a
+    // DIFFERENT matched set than the feed it produced
     val srcDf = ColumnBridge.ofRows(session, source).toDF(sNames: _*)
+      .withColumn("__sid", monotonically_increasing_id())
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val types = targetOutput.map(_.dataType)
@@ -766,15 +778,29 @@ case class GraftSqlMergeCommand(
           srcPartCols.map { case (j, c) =>
             graft.sources.CompoundKey.encode(c, types(j),
               targetOutput(j).name) }: _*).as(table.graftKey))
-      val tgtDf = t.readMatchingKeys(srcKeys)
-        .select(targetOutput.map(a => col(a.name)): _*)
-        .toDF(tNames: _*)
+      // findTouchedFiles' input: the candidate files' rows with their
+      // `__file` provenance (one key pass prunes them and counts the
+      // source keys in the same job)
+      val cands = t.readCandidates(srcKeys)
+      val tgtDf = cands.rows
+        .select(targetOutput.map(a => col(a.name)) :+ col("__file"): _*)
+        .toDF(tNames :+ "__file": _*)
       val joinCond = residual.map(rewrite)
         .foldLeft(srcPartCols.map { case (j, c) =>
           col(s"__t$j") === c }.reduce(_ && _))(_ && _)
-      val joined = srcDf.join(tgtDf, joinCond, "left_outer")
-      val keyIdx = partIdxs.head
-      val tKey = col(s"__t$keyIdx")
+      // THE join — the one pass over the candidate rows: the source is
+      // the hash side (broadcast within the key-side budget). Spark
+      // cannot broadcast the preserved side of an outer join, so the
+      // source's unmatched rows re-attach by row id against the
+      // delta-scale matched pairs instead of the source outer-joining
+      // the scan.
+      val pairs = tgtDf.join(GraftTable.keySide(srcDf, cands.nKeys),
+          joinCond)
+        .select(col("__sid").as("__psid") +: tNames.map(col) :+
+          col("__file"): _*)
+      val joined = srcDf.join(GraftTable.keySide(pairs, cands.nKeys),
+        col("__sid") === col("__psid"), "left_outer")
+      val isMatched = col("__psid").isNotNull
 
       // ---- clause compilation: first-true-condition CASE per side
       def condOf(a: MergeAction): Column = (a match {
@@ -804,6 +830,12 @@ case class GraftSqlMergeCommand(
             Some(j -> ((_: Column) => col(sNames(si)).cast(types(j))))
           }
         }.toMap
+      /** the target ordinal an assignment's root column names: by
+        * expression id, else by name (-1 when neither) */
+      def targetIdx(root: AttributeReference): Int =
+        if (targetIds.contains(root.exprId))
+          targetOutput.indexWhere(_.exprId == root.exprId)
+        else targetOutput.indexWhere(x => resolver(x.name, root.name))
       // assignment targets: whole columns, or struct-field paths
       // (x71's MERGE half — `SET s.x = ...` patches the field via
       // Column.withField on the OLD value; INSERT assigns whole
@@ -816,10 +848,7 @@ case class GraftSqlMergeCommand(
               .getOrElse(throw new UnsupportedOperationException(
                 s"MERGE INTO $ident: only columns and struct-field " +
                   s"paths can be assigned (got ${asg.key.sql})"))
-            val j =
-              if (targetIds.contains(root.exprId))
-                targetOutput.indexWhere(_.exprId == root.exprId)
-              else targetOutput.indexWhere(x => resolver(x.name, root.name))
+            val j = targetIdx(root)
             require(j >= 0, s"MERGE INTO $ident: assignment targets an " +
               s"unknown column (${asg.key.sql})")
             if (path.isEmpty) {
@@ -886,22 +915,50 @@ case class GraftSqlMergeCommand(
           s"MERGE INTO $ident: WHEN NOT MATCHED supports INSERT " +
             s"(got $other)")
       }
+      /** does `a` assign every key part from that part's ON source
+        * expression (what the matched-row key check above accepts)? */
+      def insertKeyedByOn(a: MergeAction): Boolean = a match {
+        case ia: InsertAction => partIdxs.forall { j =>
+          ia.assignments.exists { asg =>
+            GraftRowLevelSql.rootOf(asg.key).exists { case (root, path) =>
+              path.isEmpty && targetIdx(root) == j
+            } && asg.value.semanticEquals(srcPartExpr(j))
+          }
+        }
+        case _: InsertStarAction => partIdxs.forall { j =>
+          sOut.find(s => resolver(s.name, targetOutput(j).name))
+            .exists(_.semanticEquals(srcPartExpr(j)))
+        }
+        case _ => false
+      }
 
       // ---- the net change feed (applyChanges' contract: the table's
-      // columns + change_type; a key appears at most once)
+      // columns + change_type; a key appears at most once), each
+      // matched row carrying its `__file` for the footprint. Matched
+      // and not-matched rows come out of ONE projection of the join: a
+      // matched row takes the first firing WHEN MATCHED clause, an
+      // unmatched source row the first firing WHEN NOT MATCHED clause
+      // (CASE evaluates only the side the row is on)
       val parts = scala.collection.mutable.ArrayBuffer.empty[
         org.apache.spark.sql.DataFrame]
-      if (matchedActions.nonEmpty) {
-        val mIdx = firstAction(matchedActions)
+      if (matchedActions.nonEmpty || notMatchedActions.nonEmpty) {
+        val none = lit(null).cast("int")
+        val mIdx =
+          if (matchedActions.isEmpty) none else firstAction(matchedActions)
+        val nmIdx =
+          if (notMatchedActions.isEmpty) none
+          else firstAction(notMatchedActions)
         val mChange = mCompiled.zipWithIndex.foldRight(lit("update")) {
           case (((isDel, _), i), rest) =>
             when(mIdx === i, lit(if (isDel) "delete" else "update"))
               .otherwise(rest)
         }
-        parts += joined.where(tKey.isNotNull && mIdx.isNotNull)
+        parts += joined
+          .where(when(isMatched, mIdx.isNotNull)
+            .otherwise(nmIdx.isNotNull))
           .select(targetOutput.zipWithIndex.map { case (a, j) =>
             val old = col(tNames(j))
-            mCompiled.zipWithIndex.foldRight(old) {
+            val mVal = mCompiled.zipWithIndex.foldRight(old) {
               case (((isDel, assigns), i), rest) =>
                 // delete rows carry the OLD row verbatim: applyChanges
                 // removes them BY KEY (the key must survive into the
@@ -910,20 +967,18 @@ case class GraftSqlMergeCommand(
                   if (isDel) old
                   else assigns.get(j).map(f => f(old)).getOrElse(old)
                 when(mIdx === i, v).otherwise(rest)
-            }.as(a.name)
-          } :+ mChange.as("change_type"): _*)
-      }
-      if (notMatchedActions.nonEmpty) {
-        val nmIdx = firstAction(notMatchedActions)
-        parts += joined.where(tKey.isNull && nmIdx.isNotNull)
-          .select(targetOutput.zipWithIndex.map { case (a, j) =>
-            nmCompiled.zipWithIndex.foldRight(insertFallback(j)) {
-              case ((assigns, i), rest) =>
-                when(nmIdx === i,
-                  assigns.get(j).map(f => f(insertFallback(j)))
-                    .getOrElse(insertFallback(j))).otherwise(rest)
-            }.as(a.name)
-          } :+ lit("insert").as("change_type"): _*)
+            }
+            val nmVal =
+              if (notMatchedActions.isEmpty) lit(null).cast(types(j))
+              else nmCompiled.zipWithIndex.foldRight(insertFallback(j)) {
+                case ((assigns, i), rest) =>
+                  when(nmIdx === i,
+                    assigns.get(j).map(f => f(insertFallback(j)))
+                      .getOrElse(insertFallback(j))).otherwise(rest)
+              }
+            when(isMatched, mVal).otherwise(nmVal).as(a.name)
+          } ++ Seq(when(isMatched, mChange).otherwise(lit("insert"))
+              .as("change_type"), col("__file")): _*)
       }
       if (notMatchedBySourceActions.nonEmpty) {
         // WHEN NOT MATCHED BY SOURCE (Delta's third clause family):
@@ -954,11 +1009,7 @@ case class GraftSqlMergeCommand(
                       s"MERGE INTO $ident: only columns and " +
                         s"struct-field paths can be assigned " +
                         s"(got ${asg.key.sql})"))
-                  val j =
-                    if (targetIds.contains(root.exprId))
-                      targetOutput.indexWhere(_.exprId == root.exprId)
-                    else targetOutput.indexWhere(x =>
-                      resolver(x.name, root.name))
+                  val j = targetIdx(root)
                   require(j >= 0 && !partIdxs.contains(j),
                     s"MERGE INTO $ident: WHEN NOT MATCHED BY SOURCE " +
                       s"cannot assign a key column (${asg.key.sql})")
@@ -1039,7 +1090,8 @@ case class GraftSqlMergeCommand(
                   else assigns.get(j).map(f => f(old)).getOrElse(old)
                 when(bIdx === i, v).otherwise(rest)
             }.as(a.name)
-          } :+ bChange.as("change_type"): _*)
+          } ++ Seq(bChange.as("change_type"),
+              lit(null).cast("string").as("__file")): _*)
       }
       // a compound table's feed carries the synthesized storage key,
       // recomputed from the feed's own part values (deterministic
@@ -1050,21 +1102,23 @@ case class GraftSqlMergeCommand(
           graft.sources.CompoundKey.withKey(feed0, partNames.toSeq)
         else feed0
       val checkKey = if (compound) table.graftKey else key
-      // persisted: the feed re-executes inside applyChanges' planning +
-      // staging (and once for the cardinality check below) — one
-      // evaluation of the user's source, Delta's source-materialization
-      // discipline, at delta scale
+      // persisted: the feed re-executes inside applyChanges' staging
+      // (and once for the cardinality check below) — one evaluation of
+      // the user's source, Delta's source-materialization discipline,
+      // at delta scale
       val feed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        // ONE aggregate answers all three pre-apply questions (round-18
+        // ONE aggregate answers every pre-apply question (round-18
         // optim — was three actions: a null-key probe, a duplicate-key
         // probe, and applyChanges' own key count): total rows, NULL
-        // keys, distinct keys. Violations re-run the targeted probe
-        // for the offending value — the rare path only.
+        // keys, distinct keys, and the files of the matched rows.
+        // Violations re-run the targeted probe for the offending value
+        // — the rare path only.
         val st = feed.agg(
           org.apache.spark.sql.functions.count(lit(1)),
           org.apache.spark.sql.functions.count(col(checkKey)),
-          org.apache.spark.sql.functions.countDistinct(col(checkKey)))
+          org.apache.spark.sql.functions.countDistinct(col(checkKey)),
+          org.apache.spark.sql.functions.collect_set(col("__file")))
           .head
         val (n, nonNull, distinct) =
           (st.getLong(0), st.getLong(1), st.getLong(2))
@@ -1078,7 +1132,20 @@ case class GraftSqlMergeCommand(
               s"'${dup.headOption.map(_.get(0)).orNull}' — the SQL:2003 " +
               "MERGE cardinality violation (deduplicate the source)")
         }
-        Seq(Row(t.applyChanges(feed, preCountedKeys = n)))
+        // the matched rows' files are EXACTLY the files holding a feed
+        // key — applyChanges rewrites them without planning again —
+        // only when no feed key can sit in a file the join left
+        // unmatched: no residual conjunct (a key-equal target row that
+        // fails it is unmatched, and an INSERT of its key upserts it),
+        // no BY SOURCE clause (its rows come from a separate read), and
+        // every INSERT keys its row by the ON expressions (an unmatched
+        // source key is in no candidate file, so in no file at all)
+        val touched =
+          if (residual.nonEmpty || notMatchedBySourceActions.nonEmpty ||
+              !notMatchedActions.forall(insertKeyedByOn)) None
+          else Some(GraftTable.Touched(cands.version, st.getSeq[String](3)))
+        Seq(Row(t.applyChanges(feed.drop("__file"), preCountedKeys = n,
+          touched = touched)))
       } finally { feed.unpersist(); () }
     } finally { srcDf.unpersist(); () }
   }

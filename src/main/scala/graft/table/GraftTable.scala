@@ -53,8 +53,8 @@ import org.apache.spark.sql.graftglue.PredicateTree
   * to wrong answers.
   *
   * Mutation planning is two-phase and reads only range-overlapping
-  * files: (1) prune candidate files off the manifest stats — a
-  * broadcast range join for MERGE deltas (ScaleOps x23Plan's shape), a
+  * files: (1) prune candidate files off the manifest stats — one
+  * key pass binary-searching the sorted key ranges for MERGE deltas, a
   * min/max interval evaluator over the predicate tree for DELETE
   * (Iceberg's inclusive-metrics idea) — then (2) refine to the exactly
   * matched files by scanning the CANDIDATES ONLY with `_metadata`
@@ -379,9 +379,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
           }
       }
     // VISIBLE ORDER: first-recorded order (creation order), declared
-    // columns appended as they land — stable across keyed rewrites
-    // because every mutation frame now restores the snapshot's column
-    // order before staging (the round-18 using-join fix below); a
+    // columns appended as they land — stable across writes because
+    // `stage` lands every frame in the base snapshot's column order
+    // (new columns last), whatever order the frame carries; a
     // declared-ordinal reorder here would be wrong for HANDLE tables,
     // whose base columns have no declarations and whose ADD COLUMNs
     // must append, not lead.
@@ -1026,51 +1026,60 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   // ---- mutation planning ----------------------------------------------
 
-  /** files whose key range CAN contain one of `delta`'s keys — a
-    * broadcast range join of the delta's keys against manifest stats
-    * rows (metadata-scale; x23Plan's exact template). Dispatches on
-    * the key's DECLARED type: integral keys range-join the `lo`/`hi`
-    * bounds, STRING keys range-join the lexicographic bounds in
-    * `sstats` (Spark's string comparison is unsigned-UTF-8-byte order,
-    * exactly the order the parquet footers minted the bounds in, so
-    * the join is pruning in the bounds' own order). Any other key type
-    * falls back to all files — its stats are the vacuous sentinel,
-    * never truncated values a planner could wrongly treat as exact
-    * (the advisor's fractional-key bug). */
+  /** files whose key range CAN contain one of `delta`'s keys (see
+    * [[keyPass]], the one kernel every keyed prune runs through) */
   private[table] def pruneByKeys(data: Seq[FileRef], delta: DataFrame,
-                                 physKey: String = null): Seq[String] = {
-    if (data.isEmpty) return Seq.empty
-    // manifest sstats are keyed by the key's PHYSICAL name; the delta
+                                 physKey: String = null): Seq[String] =
+    keyPass(data, delta, physKey, countKeys = false)._1
+
+  /** THE key pass of every keyed mutation and read: ONE Spark job over
+    * `keys`' key column returns the files whose key range CAN contain
+    * one of the keys AND the key frame's row count (-1 when
+    * `countKeys` is false and no pass is needed). Each task
+    * binary-searches the manifest's key ranges, sorted by lower bound
+    * ([[GraftTable.KeyBounds]]), and ORs the hit files into a bitset:
+    * no join against the stats rows, no shuffle, one bitset per task
+    * back to the driver (metadata-scale).
+    *
+    * Dispatches on the key's DECLARED type: integral keys probe the
+    * `lo`/`hi` bounds, STRING keys probe the lexicographic bounds in
+    * `sstats` in unsigned-UTF-8-byte order (Spark's string order,
+    * exactly the order the parquet footers minted the bounds in).
+    * NULL keys match no file. Any other key type keeps all files — its
+    * stats are the vacuous sentinel, never truncated values a planner
+    * could wrongly treat as exact (the advisor's fractional-key bug). */
+  private[table] def keyPass(data: Seq[FileRef], keys: DataFrame,
+                             physKey: String, countKeys: Boolean)
+      : (Seq[String], Long) = {
+    // manifest sstats are keyed by the key's PHYSICAL name; the key
     // frame carries the LOGICAL one (identity on unmapped tables)
     val pk = if (physKey == null) keyCol else physKey
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    delta.schema.fields.find(_.name == keyCol).map(_.dataType) match {
-      case Some(ByteType | ShortType | IntegerType | LongType) =>
-        val mdf = data.map(r => (r.file, r.lo, r.hi))
-          .toDF("__mfile", "__lo", "__hi")
-        delta.select(col(keyCol).cast("long").as("__k"))
-          .where(col("__k").isNotNull)
-          .join(broadcast(mdf),
-            col("__k") >= col("__lo") && col("__k") <= col("__hi"))
-          .select(col("__mfile")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      case Some(StringType) =>
+    import org.apache.spark.unsafe.types.UTF8String
+    def filesOf(hit: java.util.BitSet): Seq[String] =
+      hit.stream().toArray.toSeq.map(data(_).file)
+    keys.schema.fields.find(_.name == keyCol).map(_.dataType) match {
+      case Some(ByteType | ShortType | IntegerType | LongType)
+          if data.nonEmpty =>
+        val bounds = new GraftTable.KeyBounds(
+          data.indices.map(i => (i, data(i).lo, data(i).hi)))
+        val (hit, n) = GraftTable.keyHits[Long](
+          keys.select(col(keyCol).cast("long")), bounds, _.getLong(0))
+        (filesOf(hit).sorted, n)
+      case Some(StringType) if data.exists(_.sstats.contains(pk)) =>
         // files without string bounds for the key (all-NULL, or a
         // stats-suppressing writer) stay candidates unconditionally
         val unbounded = data.collect {
           case r if !r.sstats.contains(pk) => r.file }
-        val bounded = data.flatMap(r =>
-          r.sstats.get(pk).map { case (lo, hi) => (r.file, lo, hi) })
-        if (bounded.isEmpty) return data.map(_.file).sorted
-        val mdf = bounded.toDF("__mfile", "__lo", "__hi")
-        val matched = delta.select(col(keyCol).as("__k"))
-          .where(col("__k").isNotNull)
-          .join(broadcast(mdf),
-            col("__k") >= col("__lo") && col("__k") <= col("__hi"))
-          .select(col("__mfile")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        (matched ++ unbounded).distinct.sorted
-      case _ => data.map(_.file).sorted
+        val bounds = new GraftTable.KeyBounds(data.indices.flatMap(i =>
+          data(i).sstats.get(pk).map { case (lo, hi) =>
+            (i, UTF8String.fromString(lo), UTF8String.fromString(hi)) }))(
+          GraftTable.Utf8ByteOrder)
+        val (hit, n) = GraftTable.keyHits[UTF8String](
+          keys.select(col(keyCol)), bounds, _.getUTF8String(0))
+        ((filesOf(hit) ++ unbounded).distinct.sorted, n)
+      case _ =>
+        (data.map(_.file).sorted, if (countKeys) keys.count() else -1L)
     }
   }
 
@@ -1178,8 +1187,15 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * missed-delete bug; a string key instead prunes via its own
     * lexicographic bounds in `sstats`). An all-NULL column simply
     * records no stats (always a candidate — planning may weaken,
-    * correctness cannot). */
-  private def stage(base: Seq[FileRef], df: DataFrame): Staged = {
+    * correctness cannot).
+    *
+    * The frame lands in the base snapshot's column order (by name, new
+    * columns last): [[schemaOf]] orders a snapshot's columns by first
+    * appearance over its data refs, which sort by staged-dir uuid, so a
+    * file written in its frame's own order would flip the table's
+    * visible order at random. */
+  private def stage(base: Seq[FileRef], df0: DataFrame): Staged = {
+    val df = alignColumns(base, df0)
     enforceSchema(base, df) // BEFORE the write: nothing to clean up
     stageCounter.incrementAndGet()
     io.mkdirs(dataDir)
@@ -1267,6 +1283,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
         }
       case None => dataStaged
     }
+  }
+
+  /** `df` with the columns `base`'s snapshot already has in the
+    * snapshot's order (recorded or declared), then its new columns in
+    * their own order */
+  private def alignColumns(base: Seq[FileRef], df: DataFrame): DataFrame = {
+    val known = schemaOf(base).map(_.fieldNames.toSeq)
+      .getOrElse(GraftTable.parseAddColRows(base).map(_.name))
+    val have = df.columns.toSeq
+    val order = known.filter(have.contains) ++ have.filterNot(known.contains)
+    if (order == have) df
+    else df.select(order.map(c => col(s"`${c.replace("`", "``")}`")): _*)
   }
 
   /** stage a deletion-vector sidecar (`dv_file`, `dv_pos` rows).
@@ -1862,9 +1890,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * `readFiles`, and key-duplication/missed-match hazards live
     * entirely in the files present at the final base. The txn replay
     * guard re-checks each attempt: a batch id committed by a racing
-    * delivery aborts as a no-op, exactly as on the compose path. */
+    * delivery aborts as a no-op, exactly as on the compose path.
+    * `compose` receives the version it composes against and that
+    * version's manifest. */
   private def commitLoopMutate(txn: Long = -1L)(
-      compose: Seq[FileRef] => Option[GraftTable.Mutation]): Long = {
+      compose: (Long, Seq[FileRef]) => Option[GraftTable.Mutation]): Long = {
     var m: GraftTable.Mutation = null
     var myBase: Seq[FileRef] = null // the base `m` was composed against
     var myBaseV = -1L
@@ -1886,7 +1916,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
         }
       }
       if (m == null) {
-        compose(base) match {
+        compose(h, base) match {
           case None => return h
           case Some(mm) => m = mm; myBase = base; myBaseV = h
         }
@@ -2068,10 +2098,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
     if (h == 0) Set.empty else txnsIn(rawSlotRows(h)._1)
   }
 
-  /** COW upsert by key. Planning: stats-pruned candidates (broadcast
-    * range join vs manifest rows), refined to the exactly-matched files
-    * by scanning the candidates ONLY; only matched files rewrite (delta
-    * rows take precedence), delta keys in no file insert as new files.
+  /** COW upsert by key. Planning: the key pass ([[keyPass]]) prunes
+    * candidates off the manifest's key ranges and counts the delta in
+    * the same job, and the candidates ONLY are scanned for the
+    * exactly-matched files; only matched files rewrite (delta rows
+    * take precedence), delta keys in no file insert as new files.
     * Rows a MoR delete already removed stay removed (rewrites read
     * DV-applied).
     *
@@ -2086,50 +2117,63 @@ final class GraftTable private (spark: SparkSession, val root: String,
             preCountedKeys: Long = -1L): Long = {
     if (txn >= 0 && committedTxns().contains(txn)) return head
     // materialize the delta ONCE (round-18, guide §1/§5): the key
-    // count, the stats prune, the matched-file join and the staged
-    // rewrite each act on it — an unpersisted delta (often a join or
-    // subquery output) re-executed its whole plan per action, 4× the
-    // compute for zero benefit; delta frames are change-scale, the
-    // same budget GraftSqlMergeCommand's source materialization
-    // already assumes
+    // pass, the matched-file join and the staged rewrite each act on
+    // it — an unpersisted delta (often a join or subquery output)
+    // re-executed its whole plan per action, for zero benefit; delta
+    // frames are change-scale, the same budget GraftSqlMergeCommand's
+    // source materialization already assumes
     val mat = delta.persist(org.apache.spark.storage.StorageLevel
       .MEMORY_AND_DISK)
     try {
       val dkeys = mat.select(col(keyCol))
-      // sizes the key-side joins, once — callers that already counted
-      // the delta (x69's one-aggregate duplicate guard) pass it in
-      val nKeys =
-        if (preCountedKeys >= 0) preCountedKeys else dkeys.count()
-      commitLoopMutate(txn = txn) { base =>
+      // callers that already counted the delta (x69's one-aggregate
+      // duplicate guard) pass the count in; otherwise the key pass
+      // counts it
+      commitLoopMutate(txn = txn) { (_, base) =>
         if (txn >= 0 && committedTxns().contains(txn)) None
-        else composeApply(base, mat, dkeys, nKeys)
+        else composeApply(base, mat, dkeys, preCountedKeys)
       }
     } finally mat.unpersist()
   }
 
-  /** the HEAD rows whose key appears in `keys` (a one-column frame
-    * named like the key), read through the SAME two-phase pruned plan
-    * every keyed mutation uses: manifest stats prune candidate files
-    * (broadcast range join), bloom sidecars refine them, and only the
-    * candidates open — against a 100 TB table a delta-scale key set
-    * reads the overlapping files, never the table. This is the
-    * matched-target read SQL `MERGE INTO` compiles through to evaluate
-    * WHEN MATCHED clauses that reference target columns (x59) —
-    * Delta's findTouchedFiles phase, exposed as a read. */
-  def readMatchingKeys(keys: DataFrame): DataFrame = {
-    val base = headRefs
+  /** a keyed statement's candidate read at the head — Delta's
+    * findTouchedFiles input: ONE key pass ([[keyPass]]) prunes the
+    * data files off the manifest's key ranges and counts `keys` (a
+    * frame carrying the key column) in the same job, bloom sidecars
+    * refine the candidates, and only the candidates open — against a
+    * 100 TB table a delta-scale key set reads the overlapping files,
+    * never the table. The rows are the candidates' LOGICAL rows
+    * (DV-applied) with their `__file` provenance and NOT yet filtered
+    * to the keys: SQL `MERGE INTO` joins its source against them once
+    * (x59), and the `__file`s of the matched rows are the statement's
+    * footprint ([[GraftTable.Touched]] at the returned version). */
+  def readCandidates(keys: DataFrame): GraftTable.KeyedRead = {
+    val v = head
+    val base = refsAt(v)
     val data = base.filter(_.kind == "data")
     val dkeys = keys.select(col(keyCol))
-    val nKeys = dkeys.count() // sizes the key-side joins, once
     val pk = physKeyOf(base)
-    val cand = bloomRefineKeys(base, data,
-      pruneByKeys(data, dkeys, pk), dkeys, nKeys, pk)
-    if (cand.isEmpty) return read(head).limit(0)
-    val rows = toLogical(base, scan(base, cand)).drop("__file", "__pos")
+    val (pruned, nKeys) = keyPass(data, dkeys, pk, countKeys = true)
+    val cand = bloomRefineKeys(base, data, pruned, dkeys, nKeys, pk)
+    val rows =
+      if (cand.isEmpty)
+        read(v).limit(0).withColumn("__file", lit(null).cast("string"))
+      else toLogical(base, scan(base, cand)).drop("__pos")
+    GraftTable.KeyedRead(v, rows, nKeys)
+  }
+
+  /** the HEAD rows whose key appears in `keys` (a one-column frame
+    * named like the key): [[readCandidates]]' candidate rows
+    * semi-joined against the distinct keys, so only range-overlapping
+    * files open. */
+  def readMatchingKeys(keys: DataFrame): DataFrame = {
+    val r = readCandidates(keys)
+    val rows = r.rows.drop("__file")
     // a USING-column semi-join projects the join key FIRST in Spark's
     // analyzer rewrite — restore the snapshot's column order (the
     // caller-visible contract, and what downstream writes record)
-    rows.join(keySide(dkeys.distinct(), nKeys), Seq(keyCol), "left_semi")
+    rows.join(GraftTable.keySide(keys.select(col(keyCol)).distinct(),
+        r.nKeys), Seq(keyCol), "left_semi")
       .select(rows.columns.map(col).toSeq: _*)
   }
 
@@ -2151,6 +2195,15 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * files holding affected keys. Deletes of keys the table never had
     * are no-ops (the feed may be a superset replay).
     *
+    * `touched` skips that planning: a caller that already knows the
+    * exact files of version `touched.version` holding a feed key (SQL
+    * MERGE collects them in its precheck aggregate — Delta's
+    * findTouchedFiles) passes them, and a commit composed against
+    * that same version rewrites exactly those files. A commit composed
+    * against any other version (the head moved before the first
+    * attempt, or a lost race forced a re-compose) plans from scratch.
+    * `preCountedKeys` is the feed's row count when the caller has it.
+    *
     * `txn` makes the apply idempotent by id, with the check re-run
     * inside the CAS loop: with `changes(v-1, v)` as the feed and `v`
     * as the txn, a streaming replication loop (w21) is exactly-once —
@@ -2165,30 +2218,31 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * duplicate-key tables: matched postimages plus carried sibling
     * identity rows under the same key. */
   def applyChanges(feed: DataFrame, txn: Long = -1L,
-                   preCountedKeys: Long = -1L): Long = {
+                   preCountedKeys: Long = -1L,
+                   touched: Option[GraftTable.Touched] = None): Long = {
     if (txn >= 0 && committedTxns().contains(txn)) return head
     // materialize the feed ONCE (round-18, guide §1/§5): the subquery
     // DML commands build feeds whose plans embed a pruned sibling
-    // scan + exceptAll — re-executing that per action (key count,
-    // prune, matched files, staged rewrite) multiplied the mutation's
-    // read cost ~4×; feeds are change-scale by contract, the same
-    // budget the MERGE source materialization assumes
-    val mat = feed.persist(org.apache.spark.storage.StorageLevel
-      .MEMORY_AND_DISK)
+    // scan + exceptAll — re-executing that per action (key pass,
+    // matched files, staged rewrite) multiplied the mutation's read
+    // cost; feeds are change-scale by contract, the same budget the
+    // MERGE source materialization assumes. A caller with a footprint
+    // took it by evaluating the feed, so it holds the feed
+    // materialized already: a second cache would only cost a job.
+    val mat =
+      if (touched.isDefined) feed
+      else feed.persist(org.apache.spark.storage.StorageLevel
+        .MEMORY_AND_DISK)
     try {
       val post = mat.where(col("change_type") =!= "delete")
         .drop("change_type")
       val fkeys = mat.select(col(keyCol))
-      // sizes the key-side joins, once — a caller that already
-      // counted the feed (the SQL MERGE's one-aggregate precheck)
-      // passes the count in and saves the action
-      val nKeys =
-        if (preCountedKeys >= 0) preCountedKeys else fkeys.count()
-      commitLoopMutate(txn = txn) { base =>
+      commitLoopMutate(txn = txn) { (v, base) =>
         if (txn >= 0 && committedTxns().contains(txn)) None
-        else composeApply(base, post, fkeys, nKeys)
+        else composeApply(base, post, fkeys, preCountedKeys,
+          matched0 = touched.collect { case t if t.version == v => t.files })
       }
-    } finally mat.unpersist()
+    } finally if (touched.isEmpty) mat.unpersist()
   }
 
   /** ROW-addressed variant of [[applyChanges]] for the subquery DML
@@ -2210,49 +2264,49 @@ final class GraftTable private (spark: SparkSession, val root: String,
     *
     * CALLER CONTRACT: `post` and `oldImages` must derive from ONE
     * materialized (persisted) frame, so a non-deterministic condition
-    * selects a single row set across the key-count / matched-file /
+    * selects a single row set across the key-pass / matched-file /
     * staged-rewrite traversals — the commands persist their dual
     * old/new projection and pass projections of it. */
   def applyChangesRowAddressed(post: DataFrame,
                                oldImages: DataFrame): Long = {
     val fkeys = oldImages.select(col(keyCol))
-    val nKeys = fkeys.count() // sizes the key-side joins, once
-    commitLoopMutate() { base =>
-      composeApply(base, post, fkeys, nKeys, oldImages = Some(oldImages))
+    commitLoopMutate() { (_, base) =>
+      composeApply(base, post, fkeys, -1L, oldImages = Some(oldImages))
     }
   }
-
-  /** the delta-key side of composeApply's two joins, sized ADAPTIVELY
-    * the way `scan` sizes DV application: a feed under the broadcast
-    * budget ships as one cheap hash side; past it the join shuffles
-    * (shuffled-hash, never a driver-memory-bound broadcast) — a day's
-    * CDC backfill of 10⁸ keys against a 100 TB table must not ride
-    * the same unbounded broadcast the round-11 DV fix removed. The
-    * key count is ONE aggregate over the delta (keys-scale, computed
-    * once per mutation, not per CAS attempt). */
-  private def keySide(allKeys: DataFrame, nKeys: Long): DataFrame =
-    if (nKeys <= GraftTable.DvBroadcastPositions) broadcast(allKeys)
-    else allKeys.hint("shuffle_hash")
 
   /** the shared upsert/apply composition: rows keyed by `allKeys`
     * leave (their files rewrite without them), `post` rows come back —
     * `merge` passes post = delta = allKeys' rows (pure upsert),
     * `applyChanges` passes the non-delete postimages against ALL feed
-    * keys (so a delete key leaves and nothing returns). `nKeys` is the
-    * feed's key count, precomputed by the caller outside the CAS
-    * loop. */
+    * keys (so a delete key leaves and nothing returns).
+    *
+    * The files to rewrite are `matched0` when the caller holds the
+    * exact footprint for THIS base (applyChanges' `touched`; no
+    * planning job at all), else planned here: the key pass prunes and
+    * counts `allKeys`, bloom sidecars refine, and one scan of the
+    * candidates finds the files holding a key. `nKeys0` is the key
+    * frame's row count when the caller has it (-1 = take the key
+    * pass's); it sizes the key-side joins ([[GraftTable.keySide]]). */
   private def composeApply(base: Seq[FileRef], post: DataFrame,
                            allKeys: DataFrame,
-                           nKeys: Long,
-                           oldImages: Option[DataFrame] = None)
+                           nKeys0: Long,
+                           oldImages: Option[DataFrame] = None,
+                           matched0: Option[Seq[String]] = None)
       : Option[GraftTable.Mutation] = {
       val data = base.filter(_.kind == "data")
       val pk = physKeyOf(base)
-      val cand = bloomRefineKeys(base, data,
-        pruneByKeys(data, allKeys, pk), allKeys, nKeys, pk)
-      val matched =
-        if (cand.isEmpty) Seq.empty[String]
-        else matchedFiles(base, cand, allKeys, nKeys)
+      val (matched, nKeys) = matched0 match {
+        case Some(fs) =>
+          (fs.sorted, if (nKeys0 >= 0) nKeys0 else allKeys.count())
+        case None =>
+          val (pruned, n) =
+            keyPass(data, allKeys, pk, countKeys = nKeys0 < 0)
+          val nk = if (nKeys0 >= 0) nKeys0 else n
+          val cand = bloomRefineKeys(base, data, pruned, allKeys, nk, pk)
+          (if (cand.isEmpty) Seq.empty[String]
+           else matchedFiles(base, cand, allKeys, nk), nk)
+      }
       // rewrites compute in LOGICAL space (the caller's delta/post
       // frames speak it) and stage back physically (x53)
       val touched = toLogical(base,
@@ -2272,8 +2326,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
       // key-first schema and flips the visible column order of any
       // table whose key is not column 0 (surfaced by the round-18
       // key-stamp fixture, whose replaced table keys on column 1)
-      val kept = touched.join(keySide(allKeys, nKeys), Seq(keyCol),
-        "left_anti")
+      val kept = touched.join(GraftTable.keySide(allKeys, nKeys),
+        Seq(keyCol), "left_anti")
         .select(touched.columns.map(col).toSeq: _*)
       // ROW-addressed carry (applyChangesRowAddressed): the rows under
       // matched keys minus the matched old images — the unmatched
@@ -2285,8 +2339,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
       val carried = oldImages match {
         case None => None
         case Some(old) =>
-          val under = touched.join(keySide(allKeys, nKeys), Seq(keyCol),
-            "left_semi")
+          val under = touched.join(GraftTable.keySide(allKeys, nKeys),
+            Seq(keyCol), "left_semi")
             .select(touched.columns.map(col).toSeq: _*)
           Some(under.exceptAll(old.select(
             touched.columns.map(col).toSeq: _*)))
@@ -2351,7 +2405,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
                                       allKeys: DataFrame,
                                       nKeys: Long): DataFrame =
     toLogical(base, scan(base, cand)) // provenance passes through (x53)
-      .join(keySide(allKeys, nKeys), Seq(keyCol))
+      .join(GraftTable.keySide(allKeys, nKeys), Seq(keyCol))
       .select(col("__file")).distinct()
 
   private def matchedFiles(base: Seq[FileRef], cand: Seq[String],
@@ -2406,7 +2460,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def delete(predicate: Column, mode: String = "cow"): Long = {
     require(mode == "cow" || mode == "mor", s"unknown delete mode: $mode")
     val tree0 = PredicateTree.parse(predicate)
-    commitLoopMutate() { base =>
+    commitLoopMutate() { (_, base) =>
       val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       val ms = matched.toSet
       if (matched.isEmpty)
@@ -2448,7 +2502,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def update(predicate: Column, set: Map[String, Column]): Long = {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     val tree0 = PredicateTree.parse(predicate)
-    commitLoopMutate() { base =>
+    commitLoopMutate() { (_, base) =>
       val lcols = logicalCols(base)
       set.keys.foreach { c =>
         require(lcols.contains(c),
@@ -2501,7 +2555,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     require(violating == 0,
       s"overwriteWhere: $violating replacement row(s) do not satisfy " +
         "the predicate — a backfill must stay inside its own window")
-    commitLoopMutate() { base =>
+    commitLoopMutate() { (_, base) =>
       val (matched, addConflicts) = matchPredicate(base, tree0, predicate)
       val ms = matched.toSet
       val df2 = fillDefaults(base, df) // write-time defaults (x56)
@@ -3526,6 +3580,85 @@ object GraftTable {
     * comfortably under executor budgets, far under where a broadcast
     * would strain the driver) */
   private[table] val DvBroadcastPositions: Long = 1L << 20
+
+  /** the key-side of a keyed join, sized ADAPTIVELY the way `scan`
+    * sizes DV application: a side of `nKeys` rows within
+    * [[DvBroadcastPositions]] ships as one cheap hash side; past it the
+    * join shuffles (shuffled-hash, never a driver-memory-bound
+    * broadcast) — a day's CDC backfill of 10⁸ keys against a 100 TB
+    * table must not ride the same unbounded broadcast the round-11 DV
+    * fix removed. `nKeys` comes out of the statement's key pass. */
+  private[graft] def keySide(side: DataFrame, nKeys: Long): DataFrame =
+    if (nKeys <= DvBroadcastPositions) broadcast(side)
+    else side.hint("shuffle_hash")
+
+  /** a keyed statement's candidate read (see `readCandidates`): the
+    * head `version` it was taken at, the candidate files' LOGICAL rows
+    * with their `__file` provenance, and the key frame's row count */
+  final case class KeyedRead(version: Long, rows: DataFrame, nKeys: Long)
+
+  /** an `applyChanges` footprint: the data files of `version` that hold
+    * a key of the feed — exact, so a commit composed against that same
+    * version rewrites them without planning again */
+  final case class Touched(version: Long, files: Seq[String])
+
+  /** one file set's key bounds, probed on executors by the key pass
+    * (`keyPass`): entries `(file ordinal, lo, hi)` sorted by lower
+    * bound, and `reach(i)` = the largest upper bound among entries
+    * 0..i. A probe binary-searches the last entry whose lower bound is
+    * <= the key and walks down only while an earlier range can still
+    * reach it — one step per key on a range-clustered table, every
+    * overlapping range on a fragmented one. Bounds are inclusive, as
+    * the manifest records them. */
+  private[table] final class KeyBounds[K](entries: Seq[(Int, K, K)])(
+      implicit ord: Ordering[K]) extends Serializable {
+    private val byLo = entries.sortBy(_._2).toVector
+    private val reach: Vector[K] =
+      if (byLo.isEmpty) Vector.empty
+      else byLo.tail.scanLeft(byLo.head._3)((m, e) => ord.max(m, e._3))
+    def mark(k: K, hit: java.util.BitSet): Unit = {
+      var a = 0
+      var b = byLo.length
+      while (a < b) {
+        val m = (a + b) >>> 1
+        if (ord.lteq(byLo(m)._2, k)) a = m + 1 else b = m
+      }
+      var i = a - 1
+      while (i >= 0 && ord.gteq(reach(i), k)) {
+        if (ord.gteq(byLo(i)._3, k)) hit.set(byLo(i)._1)
+        i -= 1
+      }
+    }
+  }
+
+  /** unsigned-UTF-8-byte order — the order parquet footers mint string
+    * bounds in and Spark compares strings in */
+  private[table] val Utf8ByteOrder
+      : Ordering[org.apache.spark.unsafe.types.UTF8String] =
+    Ordering.fromLessThan[org.apache.spark.unsafe.types.UTF8String](
+      (a, b) => a.binaryCompare(b) < 0)
+
+  /** the key pass's one job: every task counts its rows of the
+    * one-column `keys` frame and marks, per non-NULL key, the files
+    * `bounds` says can hold it; the driver ORs the per-task bitsets.
+    * Returns (hit file ordinals, row count). */
+  private[table] def keyHits[K](keys: DataFrame, bounds: KeyBounds[K],
+                                get: org.apache.spark.sql.catalyst.InternalRow => K)
+      : (java.util.BitSet, Long) = {
+    val parts = keys.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      val hit = new java.util.BitSet()
+      while (it.hasNext) {
+        val r = it.next()
+        n += 1
+        if (!r.isNullAt(0)) bounds.mark(get(r), hit)
+      }
+      Iterator.single((n, hit.toLongArray))
+    }.collect()
+    val hit = new java.util.BitSet()
+    parts.foreach(p => hit.or(java.util.BitSet.valueOf(p._2)))
+    (hit, parts.map(_._1).sum)
+  }
 
   /** delta-key count up to which a merge collects its keys into an IN
     * constraint for bloom refinement (Delta's small-source predicate

@@ -340,6 +340,103 @@ class GraftRowLevelSqlSpec extends AnyFunSuite {
     assert(got.size == 5, "no duplicate row lands under the key")
   }
 
+  test("an INSERT keyed off another source column upserts its existing key") {
+    // the ON key is d.a but the INSERT keys its row by d.b: d.b = 95 is
+    // an existing key in a file holding no matched row, so the commit
+    // must still rewrite that file — the upsert replaces the row
+    fixture("gk", n = 100, files = 8)
+    spark.sql("CREATE OR REPLACE TEMP VIEW gk_d AS SELECT * FROM VALUES " +
+      "(999L, 95L, 'N'), (5L, 5L, 'U') AS d(a, b, tag)")
+    spark.sql("""MERGE INTO rl.gk t USING gk_d d ON t.k = d.a
+      WHEN MATCHED THEN UPDATE SET w = d.tag
+      WHEN NOT MATCHED THEN INSERT (k, v, w) VALUES (d.b, -1L, d.tag)""")
+    assert(spark.table("rl.gk").where(col("k") === 95L).count() == 1,
+      "one row under the inserted existing key")
+    val got = rows("gk")
+    assert(got(95L) == ((-1L, "N")) && got(5L) == ((50L, "U")))
+    assert(got.size == 100)
+  }
+
+  /** the stage names of the Spark jobs `body` starts: every job
+    * between two marker jobs (the listener bus delivers events in
+    * order, so once the closing marker is seen every job before it
+    * has been) */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("job-budget-"))
+          .getOrElse(e.stageInfos.map(_.name).mkString("[", ", ", "]")))
+        ()
+      }
+    }
+    def marker(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      ()
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("job-budget-open")
+      body
+      marker("job-budget-close")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("job-budget-close") &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      val s = seen.asScala.toSeq
+      assert(s.contains("job-budget-close"), "listener never caught up")
+      s.slice(s.indexOf("job-budget-open") + 1,
+        s.indexOf("job-budget-close"))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a keyed MERGE runs <= 10 jobs and rewrites exactly the matched files") {
+    // 16 key-range files over the even keys 2..3200; the MERGE deletes
+    // and updates keys spread over ten files and inserts odd keys that
+    // fall inside five OTHER files' ranges (candidates, never matched)
+    spark.sql("DROP TABLE IF EXISTS rl.jb")
+    spark.sql("CREATE TABLE rl.jb (k BIGINT, v BIGINT, w STRING) " +
+      "TBLPROPERTIES ('key' = 'k')")
+    spark.range(1, 1601).selectExpr("id * 2 AS k", "id AS v", "'o' AS w")
+      .repartitionByRange(16, col("k")).sortWithinPartitions("k")
+      .createOrReplaceTempView("jb_src")
+    spark.sql("INSERT INTO rl.jb SELECT * FROM jb_src")
+    val del = Seq(10L, 610L, 1210L, 1810L, 2410L)
+    val upd = Seq(300L, 900L, 1500L, 2100L, 2700L)
+    val ins = Seq(501L, 1101L, 1701L, 2301L, 2901L)
+    spark.createDataFrame(
+        del.map((_, "D", 7L)) ++ upd.map((_, "U", 7L)) ++ ins.map((_, "I", 7L)))
+      .toDF("dk", "op", "amt").createOrReplaceTempView("jb_d")
+    val t = GraftTable.open(spark, locationOf("jb"), "k")
+    val v0 = t.head
+    def norm(f: String) = f.replaceFirst("^file:(//)?", "")
+    def filesAt(v: Long): Set[String] = t.read(v).inputFiles.map(norm).toSet
+    val holders = t.read(v0).where(col("k").isin(del ++ upd: _*))
+      .select(input_file_name()).distinct().collect()
+      .map(r => norm(r.getString(0))).toSet
+    assert(filesAt(v0).size == 16 && holders.size == 10)
+    val jobs = jobsOf(spark.sql("""MERGE INTO rl.jb t USING jb_d d
+      ON t.k = d.dk
+      WHEN MATCHED AND d.op = 'D' THEN DELETE
+      WHEN MATCHED THEN UPDATE SET v = t.v + d.amt, w = 'merged'
+      WHEN NOT MATCHED THEN INSERT (k, v, w) VALUES (d.dk, d.amt, 'ins')"""))
+    assert(jobs.size <= 10,
+      s"the MERGE ran ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
+    assert(t.head == v0 + 1)
+    assert(filesAt(v0) -- filesAt(v0 + 1) == holders,
+      "the commit removes exactly the files holding a matched key")
+    val got = rows("jb")
+    assert(del.forall(k => !got.contains(k)))
+    assert(upd.forall(k => got(k) == ((k / 2 + 7L, "merged"))))
+    assert(ins.forall(k => got(k) == ((7L, "ins"))))
+    assert(got.size == 1600)
+  }
+
   test("DELETE covers arbitrary expressions and subquery conditions") {
     fixture("m11", n = 100, files = 8)
     // beyond the V1 Filter language (SupportsDelete's limit): modulo

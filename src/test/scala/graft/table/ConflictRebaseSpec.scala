@@ -214,4 +214,51 @@ class ConflictRebaseSpec extends AnyFunSuite {
     assert(kv(t.read()) == Map(7L -> "R7", 8L -> "M8", 9L -> "M9"))
     assertNoOrphans(t)
   }
+
+  /** a MERGE-shaped feed (update key 5, insert key 61) and the exact
+    * footprint of `t`'s head for it: the files holding a feed key */
+  private def footprint(t: GraftTable)
+      : (org.apache.spark.sql.DataFrame, GraftTable.Touched) = {
+    val feed = Seq((5L, "U5", "update"), (61L, "I61", "insert"))
+      .toDF("k", "v", "change_type")
+    val r = t.readCandidates(feed)
+    val files = r.rows.where(col("k").isin(5L, 61L))
+      .select("__file").distinct().collect().map(_.getString(0)).toSeq
+    assert(files.size == 1, "key 5's file; key 61 is in no file yet")
+    (feed, GraftTable.Touched(r.version, files))
+  }
+
+  /** one row per key, both writers' rows present */
+  private def assertApplied(t: GraftTable): Unit = {
+    val all = t.read()
+    assert(all.count() == all.select("k").distinct().count(),
+      "one row per key")
+    val got = kv(all)
+    assert(got(5L) == "U5" && got(61L) == "I61" && got(70L) == "a70")
+    assert(got.size == 62)
+  }
+
+  test("a stale apply footprint re-plans: an append moved the head past it") {
+    val (t, other) = fixture("graft-footprint-stale")
+    val (feed, touched) = footprint(t)
+    // v2 adds a file holding feed key 61, outside the footprint
+    other.append(rows(Seq(61L, 70L), "a"))
+    assert(t.applyChanges(feed, touched = Some(touched)) == 3)
+    assertApplied(t)
+    assertNoOrphans(t)
+  }
+
+  test("an apply footprint re-plans after a lost race to an overlapping append") {
+    val (t, other) = fixture("graft-footprint-race")
+    val (feed, touched) = footprint(t)
+    armRace(t) { other.append(rows(Seq(61L, 70L), "a")) }
+    t.stageCounter.set(0)
+    val v = t.applyChanges(feed, touched = Some(touched))
+    t.beforePublishHook = () => ()
+    assert(v == 3)
+    assert(t.stageCounter.get == 2,
+      "the interleaved add holds a feed key: the apply must re-compose")
+    assertApplied(t)
+    assertNoOrphans(t)
+  }
 }

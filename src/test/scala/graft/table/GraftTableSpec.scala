@@ -41,6 +41,20 @@ class GraftTableSpec extends AnyFunSuite {
     assert(keys(t.read(4)) == Seq(2L, 3L, 4L, 5L, 6L))
   }
 
+  test("an append in another column order keeps the table's column order") {
+    // the snapshot orders columns by first appearance over its data
+    // files, which sort by staged-dir uuid: a file written as (v, k)
+    // must not flip a (k, v) table's visible order
+    (1 to 8).foreach { i =>
+      val t = GraftTable.create(spark,
+        graft.util.Scratch.dir(s"graft-tbl-colorder-$i"), "k", rows(1))
+      t.append(Seq(("s2", 2L)).toDF("v", "k"))
+      assert(t.read().columns.toSeq == Seq("k", "v"), s"table $i")
+      assert(t.read().collect().map(r => r.getLong(0) -> r.getString(1))
+        .toMap == Map(1L -> "s1", 2L -> "s2"))
+    }
+  }
+
   test("merge and delete rewrite only the files that hold matched rows") {
     val t = GraftTable.create(spark,
       graft.util.Scratch.dir("graft-tbl-spec"), "k",
