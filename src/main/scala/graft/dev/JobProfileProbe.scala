@@ -4,8 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only: per-Spark-job breakdown of one gated query's wall time.
-  * Installs a listener recording every job's (id, description, wall
-  * seconds, stage task-time sum) while the query runs at bench
+  * Installs a listener recording every job's (id, label — the job
+  * description, else its result stage's call site —, wall seconds,
+  * stage task-time sum) while the query runs at bench
   * parallelism, then prints the jobs in submission order plus the
   * driver-side gap (wall not covered by any job = planning, commit
   * protocol, footer reads, sleeps).
@@ -38,11 +39,11 @@ object JobProfileProbe {
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
+        // the result stage (the job's last) is named after the
+        // action's call site, e.g. "collect at GraftTable.scala:3648"
         val d = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("")
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name)
         jobs.put(e.jobId, Job(e.jobId, d, e.time))
         order.add(e.jobId)
         e.stageIds.foreach(s => stageToJob.put(s, e.jobId))

@@ -3376,8 +3376,10 @@ object ScaleOps {
   //       violation, 0 rows = NULL), and substituting the literal —
   //       the engine now does automatically what the old refusal told
   //       users to do by hand (stage the scalar, then MERGE).
-  //       Correlated scalars (per-row values = a join) keep the loud
-  //       stage-into-a-MERGE refusal. GraftRowLevelSqlSpec pins both
+  //       A statement that is row-addressed anyway (a subquery
+  //       condition, x67; a correlated scalar, x70) evaluates its
+  //       scalars inside its plan instead, under Spark's own
+  //       more-than-one-row check. GraftRowLevelSqlSpec pins both
   //       condition routes, MERGE clause VALUES, once-semantics
   //       against the pre-update snapshot, NULL-on-empty, and the
   //       cardinality violation.
@@ -3407,8 +3409,9 @@ object ScaleOps {
     spark.sql("UPDATE graft_x68.ord SET o_price = " +
       "(SELECT CAST(MIN(o_totalprice) AS DECIMAL(18,2)) FROM x68_src)" +
       " WHERE o_price < 5000")
-    // subquery-condition + scalar-assignment in ONE statement: heavy
-    // customers' orders re-price to the fleet MAXIMUM
+    // subquery-condition + scalar-assignment in ONE statement (the
+    // row-addressed route): heavy customers' orders re-price to the
+    // fleet MAXIMUM
     spark.sql("UPDATE graft_x68.ord SET o_price = " +
       "(SELECT CAST(MAX(o_totalprice) AS DECIMAL(18,2)) FROM x68_src)" +
       " WHERE o_custkey IN (SELECT o_custkey FROM x68_src " +

@@ -43,6 +43,19 @@ import graft.table.GraftTable
   * matched files rewrite, spec-pinned), so the rule route gets the
   * identical read/write set with one write path to keep correct.
   *
+  * Each statement takes ONE of four commands:
+  *  - a subquery-free UPDATE or DELETE → [[GraftSqlUpdateCommand]] /
+  *    [[GraftSqlDeleteCommand]], the handle's stats-pruned
+  *    copy-on-write `update`/`delete` (uncorrelated scalar assignment
+  *    values lift out and evaluate once, x68);
+  *  - an UPDATE or DELETE that must address ROWS — a subquery
+  *    condition (x66, x67), a correlated subquery in an assignment
+  *    value (x70), a struct-field assignment (x71) →
+  *    [[GraftSqlRowAddressedCommand]]: one old/new projection plan over
+  *    the filtered target feeding one row-addressed apply; a DELETE is
+  *    the same command with an empty postimage set;
+  *  - MERGE → [[GraftSqlMergeCommand]].
+  *
   * MERGE reads its target twice, Delta's own two-scan shape:
   *  1. findTouchedFiles — [[graft.table.GraftTable.readCandidates]]
   *     prunes the data files off the manifest's key ranges (one key
@@ -113,71 +126,57 @@ case class GraftRowLevelRule(session: SparkSession)
       case u @ UpdateTable(target, assignments, condition) if u.resolved =>
         graftTarget(target) match {
           case Some((t, tout)) =>
-            // a SUBQUERY condition (x67: `UPDATE ... WHERE k IN
-            // (SELECT ...)`) stays wrapped in a Filter over the
-            // target — the context checkAnalysis accepts subqueries
-            // in. UNCORRELATED scalar subqueries in assignment
-            // VALUES (x68: `SET x = (SELECT max(...) ...)`) lift
-            // into plan-typed fields and evaluate once at run time.
-            // CORRELATED subqueries in assignment VALUES (x70:
-            // `SET x = (SELECT max(y) FROM s WHERE s.k = t.k)` — a
-            // per-row value, i.e. a join) and STRUCT-FIELD assignment
-            // targets (x71: `SET s.x = ...`) compile as a dual
-            // old/new projection PLAN over the filtered target:
-            // Spark's own RewriteCorrelatedScalarSubquery turns the
-            // correlation into the left-outer join + aggregate the
-            // old refusal told users to stage by hand, UpdateFields
-            // patches the assigned struct fields, and the command
-            // applies the postimages row-addressed like x67.
+            // ROW addressing (one GraftSqlRowAddressedCommand over
+            // GraftRowLevelSql.dualUpdatePlan) covers a subquery
+            // CONDITION (x67: `WHERE k IN (SELECT ...)`), a CORRELATED
+            // or predicate subquery in an assignment VALUE (x70: `SET
+            // x = (SELECT max(y) FROM s WHERE s.k = t.k)` — a per-row
+            // value, i.e. a join) and a STRUCT-FIELD assignment target
+            // (x71: `SET s.x = ...`); its uncorrelated scalars evaluate
+            // inside that plan. Every other UPDATE runs the handle's
+            // stats-pruned update, with its UNCORRELATED scalars (x68:
+            // `SET x = (SELECT max(...) ...)`) lifted into plan-typed
+            // fields evaluated once at run time.
             val rooted = assignments.map(a =>
               GraftRowLevelSql.rootOf(a.key))
-            val hasSubq = assignments.exists(_.value.exists {
-              case s: ScalarSubquery => s.outerAttrs.nonEmpty
-              case _: SubqueryExpression => true
-              case _ => false
-            })
-            val nested = rooted.exists(_.exists(_._2.nonEmpty))
-            if ((hasSubq || nested) && rooted.forall(_.isDefined))
-              GraftSqlJoinUpdateCommand(t, tout,
+            val rowAddressed =
+              condition.exists(GraftRowLevelSql.hasSubquery) ||
+              assignments.exists(_.value.exists {
+                case s: ScalarSubquery => s.outerAttrs.nonEmpty
+                case _: SubqueryExpression => true
+                case _ => false
+              }) || rooted.exists(_.exists(_._2.nonEmpty))
+            if (rowAddressed && rooted.forall(_.isDefined))
+              GraftSqlRowAddressedCommand(t, tout,
                 GraftRowLevelSql.dualUpdatePlan(target, tout,
                   assignments, condition),
                 rooted.map(_.get._1.name))
             else {
               val plans =
                 scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
-              val cleaned = assignments.map(a =>
-                (a.key, GraftRowLevelSql.liftScalars(a.value, plans)))
-              condition match {
-                case Some(c)
-                    if c.exists(_.isInstanceOf[SubqueryExpression]) =>
-                  GraftSqlSubqueryUpdateCommand(t, tout,
-                    Filter(c, target), cleaned, plans.toSeq)
-                case _ =>
-                  GraftSqlUpdateCommand(t, cleaned, condition,
-                    plans.toSeq)
-              }
+              GraftSqlUpdateCommand(t, assignments.map(a =>
+                  (a.key, GraftRowLevelSql.liftScalars(a.value, plans))),
+                condition, plans.toSeq)
             }
           case None => u
         }
       // DELETE through the extensions session covers the FULL ANSI
-      // condition surface (x66): arbitrary expressions route to the
-      // handle's stats-pruned COW delete verbatim, and SUBQUERY
-      // conditions (the GDPR erasure-list shape — `WHERE k IN
-      // (SELECT ...)`) plan as a filtered snapshot read feeding one
-      // atomic applyChanges. The V1-filter SupportsDelete route
-      // remains for extension-less sessions (equality/range
-      // conditions only — the V1 Filter language's limit).
+      // condition surface (x66): a subquery-free condition, any
+      // expression, routes to the handle's stats-pruned COW delete
+      // verbatim; a SUBQUERY condition (the GDPR erasure-list shape —
+      // `WHERE k IN (SELECT ...)`) is the row-addressed command with
+      // no assignments, i.e. an empty postimage set. The V1-filter
+      // SupportsDelete route remains for extension-less sessions
+      // (equality/range conditions only — the V1 Filter language's
+      // limit).
       case d @ DeleteFromTable(target, condition) if d.resolved =>
         graftTarget(target) match {
           case Some((t, tout)) =>
-            if (!condition.exists(_.isInstanceOf[SubqueryExpression]))
-              GraftSqlDeleteCommand(t, condition)
-            else
-              // the subquery must live in a context checkAnalysis
-              // recognizes (a Filter), not as a bare expression field
-              // of a foreign command node
-              GraftSqlSubqueryDeleteCommand(t, tout,
-                Filter(condition, target))
+            if (GraftRowLevelSql.hasSubquery(condition))
+              GraftSqlRowAddressedCommand(t, tout,
+                GraftRowLevelSql.dualUpdatePlan(target, tout, Nil,
+                  Some(condition)), Nil)
+            else GraftSqlDeleteCommand(t, condition)
           case None => d
         }
       // `WITH SCHEMA EVOLUTION` (x64): resolution must NOT short-
@@ -253,7 +252,7 @@ private[plans] object GraftRowLevelSql {
     * with its once-evaluated literal. */
   def byName(e: Expression, ctx: String,
              scalars: Seq[Literal] = Nil): Column = {
-    require(!e.exists(_.isInstanceOf[SubqueryExpression]),
+    require(!hasSubquery(e),
       s"$ctx: subqueries are not supported here — stage the subquery " +
         "into a source table and MERGE from it")
     ColumnBridge.column(e.transform {
@@ -263,10 +262,10 @@ private[plans] object GraftRowLevelSql {
   }
 
   /** lift every UNCORRELATED scalar subquery out of an assignment
-    * value into `plans`, leaving a [[ScalarSlot]] behind. CORRELATED
-    * scalars (outer references — per-row values) stay put and keep
-    * the loud stage-into-a-MERGE refusal downstream: evaluating them
-    * needs a per-row join, which IS the merge the message names. */
+    * value or MERGE clause into `plans`, leaving a [[ScalarSlot]]
+    * behind. CORRELATED scalars (outer references — per-row values)
+    * stay put: an UPDATE holding one is row-addressed and never lifts,
+    * and MERGE keeps the loud stage-into-the-source refusal. */
   def liftScalars(e: Expression,
                   plans: scala.collection.mutable.ArrayBuffer[LogicalPlan])
       : Expression =
@@ -292,13 +291,8 @@ private[plans] object GraftRowLevelSql {
       else Literal.create(rows.head.get(0), dt)
     }
 
-  // The ROW-addressed sibling carry for subquery DML (round 18,
-  // closing the duplicate-key row-loss edge) lives in
-  // [[graft.table.GraftTable.applyChangesRowAddressed]]: the handle
-  // subtracts the matched old images from its OWN touched scan, so
-  // the carry costs zero extra pruned reads (this file's commands
-  // previously built it via a second readMatchingKeys pass —
-  // round-18 optimization removed that).
+  def hasSubquery(e: Expression): Boolean =
+    e.exists(_.isInstanceOf[SubqueryExpression])
 
   /** the resolved assignment-key shapes the engine compiles: a
     * top-level column, or a struct-field path rooted at one (x71 —
@@ -343,20 +337,22 @@ private[plans] object GraftRowLevelSql {
       j -> es.map(_._3).reduce((f, g) => (old: Column) => g(f(old)))
     }
 
-  /** the dual old/new projection for a subquery-valued or
-    * struct-field UPDATE (x70/x71): one pass over the filtered
-    * target emitting each matched row's OLD image (`__o<i>` — what
-    * the row-addressed apply subtracts against) and its POSTIMAGE
-    * (`__n<i>` —
-    * assigned columns compute their RHS, ANSI-cast to the column's
-    * — or, for a struct-field path, the field's — type; the rest
-    * carry). Built at RULE time from the resolved statement, so the
-    * assignment subqueries sit in a Project — a context Spark's
-    * analysis accepts and its optimizer compiles (a correlated
-    * scalar becomes the left-outer join + aggregate of
-    * RewriteCorrelatedScalarSubquery; UpdateFields folds to one
-    * CreateNamedStruct; the plan evaluates ONCE, persisted by the
-    * command). */
+  /** the dual old/new projection of a row-addressed UPDATE or DELETE
+    * (x66/x67/x70/x71): one pass over the filtered target emitting each
+    * matched row's OLD image (`__o<i>` — what the row-addressed apply
+    * subtracts against) and, for an UPDATE, its POSTIMAGE (`__n<i>` —
+    * assigned columns compute their RHS, ANSI-cast to the column's —
+    * or, for a struct-field path, the field's — type; the rest carry).
+    * A DELETE has no assignments and emits the old images only. Built
+    * at RULE time from the resolved statement, so the condition's
+    * subqueries sit in a Filter and the assignments' in a Project —
+    * contexts Spark's analysis accepts and its optimizer compiles (a
+    * predicate subquery becomes RewritePredicateSubquery's semi or anti
+    * join, a correlated scalar the left-outer join + aggregate of
+    * RewriteCorrelatedScalarSubquery, an uncorrelated scalar one
+    * subquery evaluation with Spark's own more-than-one-row check;
+    * UpdateFields folds to one CreateNamedStruct). The plan evaluates
+    * ONCE, persisted by the command. */
   def dualUpdatePlan(target: LogicalPlan, targetOutput: Seq[Attribute],
                      assignments: Seq[Assignment],
                      condition: Option[Expression]): LogicalPlan = {
@@ -401,7 +397,8 @@ private[plans] object GraftRowLevelSql {
       }
       Alias(v, s"__n$i")()
     }
-    Project(old ++ neu, condition.map(Filter(_, target)).getOrElse(target))
+    Project(if (assignments.isEmpty) old else old ++ neu,
+      condition.map(Filter(_, target)).getOrElse(target))
   }
 }
 
@@ -449,24 +446,12 @@ case class GraftSqlUpdateCommand(
 }
 
 /** `DELETE FROM <graft table> [WHERE ...]` through the extensions
-  * session — the FULL ANSI condition surface (x66):
-  *
-  *  - a subquery-free condition (any expression, `k % 43 = 0`
-  *    included — past what the V1 Filter language can say) routes to
-  *    the handle's stats-pruned copy-on-write `delete` verbatim:
-  *    PredicateTree prunes the prunable conjuncts, the row filter
-  *    re-checks everything;
-  *  - a SUBQUERY condition (`WHERE k IN (SELECT ...)`, EXISTS — the
-  *    GDPR erasure-list shape) plans as a normal filtered read over
-  *    the pinned snapshot (Spark plans the subquery; pushed
-  *    conjuncts still prune through the V1 scan) whose matched rows
-  *    feed ONE atomic row-addressed apply — on a duplicate-key table
-  *    (raw appends) sibling rows sharing a matched key but failing
-  *    the condition carry through as identity postimages
-  *    ([[graft.table.GraftTable.applyChangesRowAddressed]]), matching
-  *    ANSI DELETE exactly.
-  *
-  * Returns the new version. */
+  * session, for a subquery-free condition — any expression, `k % 43 =
+  * 0` included, past what the V1 Filter language can say (x66): the
+  * handle's stats-pruned copy-on-write `delete` runs it verbatim
+  * (PredicateTree prunes the prunable conjuncts, the row filter
+  * re-checks everything). A SUBQUERY condition is
+  * [[GraftSqlRowAddressedCommand]]'s. Returns the new version. */
 case class GraftSqlDeleteCommand(
     table: GraftSqlTable,
     condition: Expression) extends GraftVersionCommand {
@@ -483,96 +468,25 @@ case class GraftSqlDeleteCommand(
   }
 }
 
-/** the SUBQUERY arm of [[GraftSqlUpdateCommand]]'s contract (x67):
-  * the condition lives pre-wrapped in a [[Filter]] over the target;
-  * the matched rows project their postimages (old-row right-hand
-  * sides, ANSI casts to each column's type — x54's discipline) and
-  * feed ONE atomic `applyChanges` update. Pushed conjuncts beside
-  * the subquery still prune through the V1 scan. Key columns refuse
-  * assignment exactly like the filter route.
-  *
-  * ROW-addressed on duplicate-key tables (round 18): a key-addressed
-  * apply replaces the whole row group under each feed key, so a
-  * matched row's postimage alone would silently DELETE sibling rows
-  * sharing its key but failing the condition (reachable — `INSERT
-  * INTO` a keyed table is a raw append). The command therefore
-  * routes through
-  * [[graft.table.GraftTable.applyChangesRowAddressed]], which
+/** the ROW-addressed UPDATE or DELETE: every statement the rule
+  * cannot hand to the handle's stats-pruned `update`/`delete` — a
+  * subquery condition (x66's erasure list, x67), a correlated
+  * subquery in an assignment value (x70), a struct-field assignment
+  * (x71). `dual` is [[GraftRowLevelSql.dualUpdatePlan]]'s old/new
+  * projection over the filtered target: Spark plans its subqueries,
+  * and conjuncts pushed beside them still prune through the V1 scan.
+  * The plan is persisted so a non-deterministic condition selects ONE
+  * row set across the old-image/postimage/apply traversals, and its
+  * matched rows feed ONE atomic
+  * [[graft.table.GraftTable.applyChangesRowAddressed]]: the handle
   * subtracts the matched OLD images from its own touched scan and
-  * carries the unmatched siblings as identity postimages — ANSI
-  * UPDATE semantics at zero extra pruned reads. The matched set is
-  * persisted so a non-deterministic condition selects ONE row set
-  * across the postimage/apply traversals (the merge path's source-
-  * materialization discipline). */
-case class GraftSqlSubqueryUpdateCommand(
-    table: GraftSqlTable,
-    targetOutput: Seq[Attribute],
-    filtered: LogicalPlan,
-    assignments: Seq[(Expression, Expression)],
-    scalarPlans: Seq[LogicalPlan] = Nil)
-    extends GraftVersionCommand {
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val ident = table.identName
-    require(!table.isTimeTravel,
-      s"cannot UPDATE time-travel table $ident")
-    require(!table.isExternalReadOnly,
-      s"cannot UPDATE read-only external registration $ident — " +
-        "mutate the owning table")
-    val scalars = GraftRowLevelSql.evalScalars(session, scalarPlans,
-      s"UPDATE $ident")
-    val resolver = session.sessionState.conf.resolver
-    val keyNames: Seq[String] =
-      table.graftKeyParts.getOrElse(Seq(table.graftKey))
-    val set: Map[String, Column] = assignments.map { case (k, v) =>
-      val name = k match {
-        case a: AttributeReference => a.name
-        case other => throw new UnsupportedOperationException(
-          s"UPDATE $ident: only top-level columns can be assigned " +
-            s"(got ${other.sql})")
-      }
-      require(!keyNames.exists(p => resolver(p, name)),
-        s"UPDATE $ident: cannot UPDATE key column '$name' — " +
-          "MERGE (DELETE + INSERT) moves rows between keys")
-      name -> GraftRowLevelSql.byName(v, s"UPDATE $ident", scalars)
-    }.toMap
-    val df = ColumnBridge.ofRows(session, filtered)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val matched = df.select(targetOutput.map(a => col(a.name)): _*)
-      val post = matched.select(targetOutput.map { a =>
-        set.get(a.name).orElse(
-            set.collectFirst { case (n, c) if resolver(n, a.name) => c })
-          .map(_.cast(a.dataType)).getOrElse(col(a.name)).as(a.name)
-      }: _*)
-      // row-addressed apply: the handle carries unmatched siblings
-      // under matched keys off its own touched scan (round 18 optim —
-      // one pruned read per statement instead of two)
-      Seq(Row(table.graftHandle.applyChangesRowAddressed(
-        table.withStorageKey(post), table.withStorageKey(matched))))
-    } finally df.unpersist()
-  }
-}
-
-/** the JOIN arm of [[GraftSqlUpdateCommand]]'s contract (x70):
-  * assignment VALUES containing CORRELATED subqueries — per-row
-  * values, i.e. joins (`SET v = (SELECT max(y) FROM s WHERE
-  * s.k = t.k)`), the shape the engine refused through round 17 with
-  * "stage the subquery into a MERGE". The rule compiles the whole
-  * statement into [[GraftRowLevelSql.dualUpdatePlan]]'s single
-  * old/new projection over the filtered target; Spark's optimizer
-  * plans the correlation (RewriteCorrelatedScalarSubquery's
-  * left-outer join + aggregate — exactly the staged MERGE, built
-  * automatically), and the matched rows' postimages feed ONE atomic
-  * `applyChanges` — ROW-addressed like x67: unmatched siblings under
-  * a matched key carry as identity postimages, and the dual frame is
-  * persisted so the matched set is selected ONCE across the
-  * postimage/sibling/apply traversals. Uncorrelated scalars in the
-  * same statement ride the plan (Spark evaluates them once); the
-  * SQL:2003 cardinality violation on a multi-row scalar surfaces
-  * from Spark's own runtime check. Key columns refuse assignment
-  * exactly like the other routes. */
-case class GraftSqlJoinUpdateCommand(
+  * carries unmatched rows sharing a matched key as identity
+  * postimages, so a duplicate-key table (`INSERT INTO` a keyed table
+  * is a raw append) loses no sibling row — ANSI semantics at zero
+  * extra pruned reads. No assignments means a DELETE: an EMPTY
+  * postimage set, every matched row leaves. Key columns refuse
+  * assignment like the other routes. Returns the new version. */
+case class GraftSqlRowAddressedCommand(
     table: GraftSqlTable,
     targetOutput: Seq[Attribute],
     dual: LogicalPlan,
@@ -580,10 +494,12 @@ case class GraftSqlJoinUpdateCommand(
 
   override def run(session: SparkSession): Seq[Row] = {
     val ident = table.identName
+    val isDelete = assignedCols.isEmpty
+    val verb = if (isDelete) "DELETE FROM" else "UPDATE"
     require(!table.isTimeTravel,
-      s"cannot UPDATE time-travel table $ident")
+      s"cannot $verb time-travel table $ident")
     require(!table.isExternalReadOnly,
-      s"cannot UPDATE read-only external registration $ident — " +
+      s"cannot $verb read-only external registration $ident — " +
         "mutate the owning table")
     val resolver = session.sessionState.conf.resolver
     val keyNames: Seq[String] =
@@ -595,54 +511,13 @@ case class GraftSqlJoinUpdateCommand(
     val df = ColumnBridge.ofRows(session, dual)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val matched = df.select(targetOutput.zipWithIndex.map {
-        case (a, i) => col(s"__o$i").as(a.name) }: _*)
-      val post = df.select(targetOutput.zipWithIndex.map {
-        case (a, i) => col(s"__n$i").as(a.name) }: _*)
-      // row-addressed apply: the handle carries unmatched siblings
-      // under matched keys off its own touched scan (round 18 optim —
-      // one pruned read per statement instead of two)
+      def image(prefix: String): DataFrame =
+        df.select(targetOutput.zipWithIndex.map {
+          case (a, i) => col(s"$prefix$i").as(a.name) }: _*)
+      val matched = image("__o")
+      val post = if (isDelete) matched.limit(0) else image("__n")
       Seq(Row(table.graftHandle.applyChangesRowAddressed(
         table.withStorageKey(post), table.withStorageKey(matched))))
-    } finally df.unpersist()
-  }
-}
-
-/** the SUBQUERY arm of [[GraftSqlDeleteCommand]]'s contract: the
-  * condition lives pre-wrapped in a [[Filter]] over the target (the
-  * context Spark's analysis accepts subqueries in); the matched rows
-  * feed ONE atomic row-addressed apply (round 18) with an EMPTY
-  * postimage set:
-  * [[graft.table.GraftTable.applyChangesRowAddressed]] removes
-  * exactly the matched old images and carries unmatched rows sharing
-  * a matched key back off its own touched scan, so a duplicate-key
-  * table (raw appends) deletes exactly the rows the condition
-  * selects — ANSI DELETE semantics. The matched set is persisted so
-  * a non-deterministic condition selects ONE row set across the
-  * old-image/apply traversals. */
-case class GraftSqlSubqueryDeleteCommand(
-    table: GraftSqlTable,
-    targetOutput: Seq[Attribute],
-    filtered: LogicalPlan) extends GraftVersionCommand {
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val ident = table.identName
-    require(!table.isTimeTravel,
-      s"cannot DELETE from time-travel table $ident")
-    require(!table.isExternalReadOnly,
-      s"cannot DELETE from read-only external registration $ident — " +
-        "mutate the owning table")
-    val df = ColumnBridge.ofRows(session, filtered)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val matched = df.select(targetOutput.map(a => col(a.name)): _*)
-      // row-addressed apply with an EMPTY postimage set: every matched
-      // row leaves; the handle carries unmatched siblings under
-      // matched keys off its own touched scan (round 18 optim — one
-      // pruned read per statement instead of two)
-      Seq(Row(table.graftHandle.applyChangesRowAddressed(
-        table.withStorageKey(matched.limit(0)),
-        table.withStorageKey(matched))))
     } finally df.unpersist()
   }
 }
@@ -697,7 +572,7 @@ case class GraftSqlMergeCommand(
     val targetIds = targetOutput.map(_.exprId).toSet
     val sourceIds = sOut.map(_.exprId).toSet
     def rewrite(e: Expression): Column = {
-      require(!e.exists(_.isInstanceOf[SubqueryExpression]),
+      require(!GraftRowLevelSql.hasSubquery(e),
         s"MERGE INTO $ident: subqueries in clauses are not supported " +
           "— stage them into the source")
       ColumnBridge.column(e.transform {

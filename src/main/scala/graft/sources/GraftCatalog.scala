@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -42,21 +41,23 @@ import graft.table.GraftTable
   * the metastore indirection every managed-table catalog uses, and
   * here a hard requirement: graft manifests and DV sidecars hold
   * absolute file paths (immutable once committed), so the storage
-  * directory can never move; RENAME TO moves only the pointer. Reads reuse the
-  * battle-tested V1 snapshot plan through Spark's [[V1Scan]] shim —
-  * DV application, column mapping, declared defaults, manifest
-  * stats/bloom file pruning all ride along; pushed filters route to
-  * `readWhere` (file skipping) with Spark re-checking every filter
-  * above the scan, and required-column pruning reaches the inner
-  * parquet scan. Writes ride [[V1Write]]: INSERT INTO is the
-  * transactional `append` (declared defaults fill), INSERT OVERWRITE
-  * is `overwriteAll` — one atomic commit, zero reads of the old data.
-  * ANSI ALTER TABLE column verbs map onto the metadata-only evolution
-  * commits; everything else (MERGE/DELETE/UPDATE/OPTIMIZE/VACUUM)
-  * stays on the GRAFT SQL verbs, which carry the key/txn semantics a
-  * blind catalog write cannot express. Time-travel tables are
-  * read-only (no write capabilities), exactly like Delta's `@v`
-  * reads. */
+  * directory can never move; RENAME TO moves only the pointer. Reads
+  * go through Spark's [[V1Scan]] shim to [[GraftSnapshotRelation]], the
+  * pinned-snapshot relation the `USING graft` format reads too — DV
+  * application, column mapping and manifest stats/bloom file pruning
+  * ride along; pushed filters route to `readWhere` (file skipping) with
+  * Spark re-checking every filter above the scan, and required-column
+  * pruning reaches the inner parquet scan. The catalog's schema hides a
+  * compound key's storage column and carries the declared defaults.
+  * Writes ride [[V1Write]]: INSERT INTO is the transactional `append`
+  * (declared defaults fill), INSERT OVERWRITE is `overwriteAll` — one
+  * atomic commit, zero reads of the old data. ANSI ALTER TABLE column
+  * verbs map onto the metadata-only evolution commits; ANSI
+  * MERGE/UPDATE/DELETE compile onto the handle through
+  * [[graft.plans.GraftRowLevelRule]], and OPTIMIZE/VACUUM stay on the
+  * GRAFT SQL verbs, which carry the key/txn semantics a blind catalog
+  * write cannot express. Time-travel tables are read-only (no write
+  * capabilities), exactly like Delta's `@v` reads. */
 class GraftCatalog extends TableCatalog with StagingTableCatalog {
   import GraftCatalog.storageKeyOf
 
@@ -798,7 +799,7 @@ private[sources] object GraftCatalog {
   }
 }
 
-/** a catalog table: reads through the V1 snapshot plan (V1Scan shim),
+/** a catalog table: reads through [[GraftSnapshotRelation]] (V1Scan shim),
   * writes through the transactional handle (V1Write); TRUNCATE is one
   * `overwriteAll` commit of the empty typed frame — history stays
   * time-travelable, exactly like INSERT OVERWRITE of nothing; ANSI
@@ -1011,34 +1012,12 @@ private[graft] class GraftSqlTable(ident: String, root: String,
             preimages = false, schema = outSchema,
             checkpointLocation = checkpointLocation,
             insertsOnly = true)
+        /** the pinned snapshot over the pruned schema and the pushed
+          * filters — the same relation the `USING graft` format reads */
         override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val pred = pushed.flatMap(GraftFilterBridge.toColumn)
-            .reduceOption(_ && _)
-          val cols = outSchema.fieldNames.toSeq
-          new BaseRelation with TableScan {
-            override val sqlContext: SQLContext = context
-            override val schema: StructType = outSchema
-            override def sizeInBytes: Long = table.bytesOf(pinnedVersion)
-            override def buildScan(): RDD[Row] = {
-              // a declared-but-empty table has no snapshot to plan:
-              // an empty typed frame (read(0) has no columns to select)
-              if (pinnedVersion == 0)
-                return spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[Row], outSchema).rdd
-              val t = table
-              // readWhere = manifest stats/bloom FILE SKIPPING plus the
-              // exact row filter; Spark still re-checks every filter
-              // above the scan (pushFilters declared them unhandled)
-              val base = pred match {
-                case Some(p) => t.readWhere(p, pinnedVersion)
-                case None => t.read(pinnedVersion)
-              }
-              // select() with zero columns IS the COUNT(*) projection
-              base.select(cols.map(col): _*).rdd
-            }
-          }.asInstanceOf[T]
-        }
+            context: SQLContext): T =
+          new GraftSnapshotRelation(context, table, pinnedVersion,
+            outSchema, pushed).asInstanceOf[T]
       }
     }
 

@@ -24,19 +24,17 @@ import graft.table.GraftTable
   *   OPTIONS (path '<root>', keyCol 'id')   -- then: SELECT ... FROM t
   * }}}
   *
-  * Implemented as a V1 relation that DELEGATES to the handle's own
-  * snapshot plan — `t.read(version)` is already DV-applied and
-  * schema-merged, and runs through Catalyst like any DataFrame, so
-  * column pruning requested by the outer query reaches the inner
-  * parquet scan (`buildScan` selects exactly `requiredColumns`) and
-  * pushable filters apply inside the inner plan (declared UNHANDLED so
-  * Spark re-checks them above the scan — pushdown here is an
-  * optimization, never a correctness dependency). Writes stay on the
-  * transactional BATCH handle (append/merge/delete): a format-level
-  * blind `save()` could not express keyed upserts or txn-guarded
-  * commits, and pretending otherwise invites silent non-transactional
-  * writes — the same reason Delta routes batch mutations through its
-  * own API/SQL verbs.
+  * Implemented as [[GraftSnapshotRelation]] — the same relation a
+  * catalog table's V1 scan builds — over the version pinned at load
+  * (`versionAsOf`, `timestampAsOf`, else the head) and the snapshot's
+  * own schema: it delegates to the handle's snapshot plan, so column
+  * pruning reaches the inner parquet scan and pushed filters file-skip
+  * through `readWhere` (Spark re-checks them above the scan). Writes
+  * stay on the transactional BATCH handle (append/merge/delete): a
+  * format-level blind `save()` could not express keyed upserts or
+  * txn-guarded commits, and pretending otherwise invites silent
+  * non-transactional writes — the same reason Delta routes batch
+  * mutations through its own API/SQL verbs.
   *
   * STREAMING writes, by contrast, ARE expressible declaratively —
   * append-only micro-batches with the batch id as the idempotency
@@ -143,15 +141,14 @@ class GraftTableSourceProvider extends RelationProvider
       val pre = opt(parameters, "preimages").exists(_.toBoolean)
       return new GraftChangesRelation(sqlContext, root, key, from, to, pre)
     }
+    val t = GraftTable.open(sqlContext.sparkSession, root, key)
     val version = opt(parameters, "versionAsOf").map(_.toLong)
-      .orElse(opt(parameters, "timestampAsOf").map { ms =>
-        // epoch millis → the version current at that instant (Delta's
-        // TIMESTAMP AS OF, resolved once at load time)
-        GraftTable.open(sqlContext.sparkSession, root, key)
-          .versionAt(ms.toLong)
-      })
-      .getOrElse(-1L)
-    new GraftTableRelation(sqlContext, root, key, version)
+      // epoch millis → the version current at that instant (Delta's
+      // TIMESTAMP AS OF, resolved once at load time)
+      .orElse(opt(parameters, "timestampAsOf")
+        .map(ms => t.versionAt(ms.toLong)))
+      .getOrElse(t.head)
+    new GraftSnapshotRelation(sqlContext, t, version, t.read(version).schema)
   }
 
   override def createSink(sqlContext: SQLContext,
@@ -223,64 +220,66 @@ private[sources] class GraftChangesRelation(
   override def buildScan(): RDD[Row] = feed.rdd
 }
 
-private[sources] class GraftTableRelation(
-    override val sqlContext: SQLContext, root: String, keyCol: String,
-    version: Long) extends BaseRelation with PrunedFilteredScan {
+/** ONE pinned snapshot of a graft table as a V1 relation: the read
+  * route of both the `USING graft` format (as a [[PrunedFilteredScan]],
+  * required columns and filters from Spark's V1 strategy) and a catalog
+  * table's V1 scan (as a [[TableScan]] over the columns and filters its
+  * ScanBuilder was given). It holds one handle and the version PINNED
+  * at load/analysis time: a DataFrame is an immutable snapshot, so
+  * re-executing it after concurrent commits re-reads the SAME version,
+  * never a newer head — Delta pins its snapshot at analysis the same
+  * way. Each route passes its own `schema`: the format serves the
+  * snapshot's, the catalog hides the compound-key column and carries
+  * the declared-default metadata.
+  *
+  * The scan DELEGATES to the handle's snapshot plan (DV-applied,
+  * schema-merged, and run through Catalyst like any DataFrame), so the
+  * selected columns reach the inner parquet scan, and the pushed
+  * filters route through `readWhere`: manifest FILE SKIPPING — min/max
+  * stats plus any bloom index — before the row-level filter, so a
+  * `WHERE token = '...'` opens candidate files only. Every filter is
+  * declared UNHANDLED and re-checked by Spark above the scan: pushdown
+  * is pruning, never a correctness dependency. `sizeInBytes` comes from
+  * the manifest's counters (x44), so a join against a small graft table
+  * broadcasts instead of paying the session default's shuffle. */
+private[sources] class GraftSnapshotRelation(
+    override val sqlContext: SQLContext, table: GraftTable, version: Long,
+    override val schema: StructType, pushed: Array[Filter] = Array.empty)
+    extends BaseRelation with TableScan with PrunedFilteredScan {
 
-  /** the version is PINNED at relation creation (load/view time):
-    * a DataFrame is an immutable snapshot, so re-executing it after
-    * concurrent commits re-reads the SAME version, never a newer
-    * head — Delta pins its snapshot at analysis the same way */
-  private val pinnedVersion: Long =
-    if (version >= 0) version
-    else GraftTable.open(sqlContext.sparkSession, root, keyCol).head
+  override def sizeInBytes: Long = table.bytesOf(version)
 
-  private def snapshot =
-    GraftTable.open(sqlContext.sparkSession, root, keyCol)
-      .read(pinnedVersion)
-
-  override val schema: StructType = snapshot.schema
-
-  /** the snapshot's on-disk bytes FROM THE MANIFEST (x44's counters) —
-    * without this a V1 relation reports the session default (a huge
-    * sentinel), so a join against a small graft view would NEVER
-    * broadcast and every star-schema query against the format would
-    * pay a shuffle it doesn't need. */
-  override def sizeInBytes: Long =
-    GraftTable.open(sqlContext.sparkSession, root, keyCol)
-      .bytesOf(pinnedVersion)
-
-  /** every filter re-checked by Spark above the scan: applying them
-    * inside the inner plan (below) is purely an optimization */
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters
 
+  override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, pushed)
+
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
-    // pushed filters route through readWhere, so the FORMAT read gets
-    // manifest FILE SKIPPING — min/max stats plus any bloom index —
-    // before row-level filtering: a `WHERE token = '...'` against a
-    // `USING graft` view opens candidate files only, exactly like the
-    // Scala readWhere path. Spark re-checks every filter above the
-    // scan (unhandledFilters), so pruning stays an optimization.
-    val base = filters.flatMap(toColumn).reduceOption(_ && _) match {
-      case Some(pred) =>
-        GraftTable.open(sqlContext.sparkSession, root, keyCol)
-          .readWhere(pred, pinnedVersion)
-      case None => snapshot
+    // a declared-but-empty table has no snapshot to plan: an empty
+    // typed frame (read(0) has no columns to select)
+    if (version == 0) {
+      val spark = sqlContext.sparkSession
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(requiredColumns.map(schema(_)))).rdd
     }
+    val base = filters.flatMap(GraftFilterBridge.toColumn)
+      .reduceOption(_ && _) match {
+      case Some(pred) => table.readWhere(pred, version)
+      case None => table.read(version)
+    }
+    // select() with zero columns IS the COUNT(*) projection
     base.select(requiredColumns.toSeq.map(col): _*).rdd
   }
-
-  private def toColumn(f: Filter): Option[Column] =
-    GraftFilterBridge.toColumn(f)
 }
 
 /** translate the pushable subset of V1 source filters to Columns —
   * anything untranslatable is simply not applied (callers re-check
   * every filter above the scan, so pushdown stays an optimization).
-  * Shared by the `USING graft` relation and the [[GraftCatalog]]
-  * scan. */
+  * Used by [[GraftSnapshotRelation]]'s scan, by the catalog's
+  * ScanBuilder to report which filters it pushed, and by the catalog's
+  * V1-filter `DELETE` (where an untranslatable filter refuses the
+  * delete instead). */
 private[sources] object GraftFilterBridge {
   def toColumn(f: Filter): Option[Column] = f match {
     case EqualTo(a, v)            => Some(col(a) === v)

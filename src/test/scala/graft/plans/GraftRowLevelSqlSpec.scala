@@ -687,6 +687,52 @@ class GraftRowLevelSqlSpec extends AnyFunSuite {
       "only subj-less keys above 8 delete")
   }
 
+  test("row-addressed UPDATE and DELETE analyze to one command") {
+    fixture("m20", n = 10, files = 2)
+    spark.sql("CREATE OR REPLACE TEMP VIEW m20_subj AS " +
+      "SELECT * FROM VALUES (4L), (5L) AS s(sk)")
+    spark.sql("DROP TABLE IF EXISTS rl.m20s")
+    spark.sql("CREATE TABLE rl.m20s (k BIGINT, " +
+      "s STRUCT<x: BIGINT, y: STRING>) TBLPROPERTIES ('key' = 'k')")
+    def analyzed(stmt: String): String = {
+      val plan = spark.sql(s"EXPLAIN EXTENDED $stmt").head.getString(0)
+      plan.substring(plan.indexOf("== Analyzed Logical Plan =="),
+        plan.indexOf("== Optimized Logical Plan =="))
+    }
+    // a subquery condition (x67), correlated and struct-field
+    // assignments (x70/x71), a subquery DELETE (x66)
+    for (stmt <- Seq(
+        "UPDATE rl.m20 SET w = 'sq' WHERE k IN (SELECT sk FROM m20_subj)",
+        "UPDATE rl.m20 SET v = (SELECT MAX(sk) FROM m20_subj WHERE sk = k)",
+        "UPDATE rl.m20s SET s.x = s.x + 1 WHERE k = 1",
+        "DELETE FROM rl.m20 WHERE k IN (SELECT sk FROM m20_subj)")) {
+      val a = analyzed(stmt)
+      assert(a.contains("GraftSqlRowAddressedCommand"), s"$stmt:\n$a")
+    }
+    // subquery-free statements keep the stats-pruned handle verbs
+    assert(analyzed("UPDATE rl.m20 SET v = (SELECT MAX(sk) FROM m20_subj)")
+      .contains("GraftSqlUpdateCommand"))
+    assert(analyzed("DELETE FROM rl.m20 WHERE k % 2 = 0")
+      .contains("GraftSqlDeleteCommand"))
+    // an uncorrelated scalar returning two rows inside a row-addressed
+    // UPDATE: Spark's own runtime check raises the cardinality
+    // violation, and nothing commits
+    val t = GraftTable.open(spark, locationOf("m20"), "k")
+    val h = t.head
+    val e = intercept[Exception] {
+      spark.sql("UPDATE rl.m20 SET v = (SELECT sk FROM m20_subj) " +
+        "WHERE k IN (SELECT sk FROM m20_subj)")
+    }
+    val states = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).collect {
+        case st: org.apache.spark.SparkThrowable => st.getSqlState
+      }.toSeq
+    assert(states.contains("21000"), s"SQLSTATEs $states: ${e.getMessage}")
+    assert(e.getMessage.toLowerCase.contains("more than one row"),
+      e.getMessage)
+    assert(t.head == h && rows("m20")(4L) == ((40L, "o")))
+  }
+
   test("struct-field assignments patch fields through UPDATE") {
     spark.sql("DROP TABLE IF EXISTS rl.m19")
     spark.sql("CREATE TABLE rl.m19 (k BIGINT, " +
