@@ -2139,16 +2139,15 @@ object ScaleOps {
 
   // ---------------------------------------------------------------------
   // x45 — BLOOM FILE INDEX (Delta's bloom-filter index / Iceberg's
-  //       puffin blobs): `indexBloom(cols)` makes every staged file
-  //       carry a per-column bloom filter in a sidecar (kind="bloom"
-  //       manifest rows, the DV pattern), and EQUALITY constraints on
-  //       an indexed column prune files whose filter proves the value
-  //       absent — the pruning modality min/max stats cannot provide
-  //       on a high-cardinality UNSORTED column (UUID, email, content
-  //       hash): every file's bounds span the domain, but its bloom
-  //       answers point lookups. The gated query is the GDPR shape:
-  //       orders keyed by o_orderkey with a scattered md5 token,
-  //       erase one subject BY TOKEN (the delete plans off the
+  //       puffin blobs): `indexBloom(cols)` commits the index as a
+  //       manifest `prop` row, every staged file then carries a
+  //       per-column bloom filter in a sidecar (kind="bloom" rows, the
+  //       DV pattern), and EQUALITY constraints on an indexed column
+  //       prune files whose filter proves the value absent — what
+  //       min/max stats cannot do on a high-cardinality UNSORTED
+  //       column (UUID, email, content hash). The gated query is the
+  //       GDPR shape: orders keyed by o_orderkey with a scattered md5
+  //       token, erase one subject BY TOKEN (the delete plans off the
   //       index), then point-look-up a probe set through readWhere.
   //
   //       100 TB shape: a point lookup opens the handful of files
@@ -2646,14 +2645,15 @@ object ScaleOps {
   // ---------------------------------------------------------------------
   // x57 — AUTO-COMPACTION (round 15; Delta's `autoCompact` table
   //       property — the built-in answer to the streaming small-file
-  //       problem): with the policy set, every ingest commit checks
-  //       ONE manifest (zero FileSystem RPCs) and, past the small-file
-  //       threshold, folds the small files inline with the existing
-  //       bin-packing compact. The gated lifecycle ingests 8 slices
-  //       (each a 2-file micro-batch) under a 6-file threshold, so the
-  //       fold fires repeatedly mid-stream; the result aggregates the
-  //       final table (contents must be untouched by folding) and
-  //       carries a files_bounded witness — without the policy the
+  //       problem): every ingest reads the policy (a `prop` row) and
+  //       the small-file count off the manifest it just committed (zero
+  //       FileSystem RPCs) and, past the threshold, folds the small
+  //       files inline with the existing bin-packing compact. The
+  //       gated lifecycle ingests 8 slices (each a 2-file micro-batch)
+  //       under a 6-file threshold, so the fold fires repeatedly
+  //       mid-stream; the result aggregates the final table (contents
+  //       must be untouched by folding) and carries a files_bounded
+  //       witness — without the policy the
   //       table would end at 16+ files, with it ≤ 6.
   //
   //       100 TB shape: a row re-folds only while its file is under
@@ -3716,12 +3716,12 @@ object ScaleOps {
   //       pushdown): a content-hash-keyed table (md5 of the orderkey —
   //       the GDPR-subject shape, where every file's lexicographic key
   //       bounds span nearly the whole hex space and the sstats range
-  //       join can't prune) with the KEY bloom-indexed; a small merge
-  //       collects its delta keys into an IN constraint and the bloom
-  //       refinement opens only files that might hold one. The gated
-  //       query upserts 6 subjects by hash and reads the table back —
-  //       BloomIndexSpec pins the read-set claim by physically hiding
-  //       every non-holding file through a merge.
+  //       join can't prune) with the KEY bloom-indexed (a `prop` row
+  //       committed before the load); a small merge collects its delta
+  //       keys into an IN constraint and the bloom refinement opens
+  //       only files that might hold one. The gated query upserts 6
+  //       subjects by hash and reads the table back — BloomIndexSpec
+  //       pins the read-set claim by hiding every non-holding file.
   //
   //       100 TB shape: a CDC trickle against a hash-keyed table
   //       rewrites only the files holding touched subjects AND only

@@ -150,8 +150,8 @@ case class GraftClusterCommand(root: String, by: Seq[String],
   * a bloom file index ([[graft.table.GraftTable.indexBloom]]): every
   * file staged from now on carries a per-column bloom filter sidecar,
   * and equality constraints on an indexed column prune files at
-  * mutation/readWhere planning. A table property write, not a commit —
-  * returns the number of indexed columns. */
+  * mutation/readWhere planning. A table property: one metadata commit
+  * (none when unchanged) — returns the number of indexed columns. */
 case class GraftIndexCommand(root: String, cols: Seq[String],
                              fpp: Double) extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
@@ -166,7 +166,8 @@ case class GraftIndexCommand(root: String, cols: Seq[String],
 /** `GRAFT AUTOCOMPACT '<root>' MIN <n> [SMALL <bytes>] [TARGET <m>]` /
   * `GRAFT AUTOCOMPACT '<root>' OFF` — manage the ingest-time
   * auto-compaction policy ([[graft.table.GraftTable.setAutoCompact]],
-  * x57). Returns 1 when the policy is armed after the change, 0 when
+  * x57), a table property: one metadata commit (none when unchanged).
+  * Returns 1 when the policy is armed after the change, 0 when
   * cleared. */
 case class GraftAutoCompactCommand(root: String, minSmallFiles: Option[Int],
                                    smallFileBytes: Option[Long],

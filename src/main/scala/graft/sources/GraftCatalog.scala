@@ -467,12 +467,11 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
 
   /** the staged commit (see the section comment above). REPLACE is
     * ONE replaceTable commit: it resets the manifest's table
-    * properties (constraints, schema mode, clustering) by carrying
-    * only those the statement declares — old-schema constraints
-    * cannot validate new-schema files — so a failed replace, which
-    * commits nothing, leaves the old table's properties in force.
-    * The bloom-index and auto-compaction side configs reset before
-    * the commit and restore on a failure. The pointer re-registers
+    * properties (constraints, schema mode, clustering, bloom index,
+    * auto-compaction policy) by carrying only those the statement
+    * declares — old-schema constraints cannot validate new-schema
+    * files — so a failed replace, which commits nothing, leaves the
+    * old table's properties in force. The pointer re-registers
     * atomically (temp + rename-over) after the commit — it changes
     * only when the key or declared schema did, and a crash before
     * that leaves a fully-functional table: loads take the new key
@@ -496,23 +495,6 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
         require(!external,
           s"$ident is a READ-ONLY external registration — REPLACE it " +
             "through the owning table")
-        val (f, _) = fs(loc)
-        // the advisory side configs reset BEFORE the commit (a replace
-        // resets table configuration) — but a FAILED replace must
-        // leave the surviving old table configured, so they restore on
-        // any failure; only a crash in this window loses them
-        val saved = Seq("bloom.conf", "autocompact.conf").flatMap { c =>
-          val p = new org.apache.hadoop.fs.Path(loc, c)
-          if (!f.exists(p)) None
-          else {
-            val len = f.getFileStatus(p).getLen.toInt
-            val bytes = new Array[Byte](len)
-            val in = f.open(p)
-            try in.readFully(0L, bytes) finally in.close()
-            f.delete(p, false)
-            Some(p -> bytes)
-          }
-        }
         val parts = CompoundKey.partsOf(key)
         val t = GraftTable.open(spark, loc, storageKeyOf(key))
         val df0 = data.getOrElse(spark.createDataFrame(
@@ -527,23 +509,11 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
           t.replaceTable(b, storageSchemaOf(key, schema),
             clusterOf(clusterCols, parts),
             keyRecord = Some(key), upsert = upsert)
-        try {
-          val keyed = parts.fold(df0)(p => CompoundKey.withKey(df0, p))
-          if (upsert)
-            GraftCatalog.withUniqueKeys(keyed, storageKeyOf(key),
-              "RTAS into an 'insert'='upsert' table")((b, _) => replace(b))
-          else replace(keyed)
-        } catch { case scala.util.control.NonFatal(e) =>
-          try {
-            saved.foreach { case (p, bytes) =>
-              val out = f.create(p, true)
-              try out.write(bytes) finally out.close()
-            }
-          } catch {
-            case scala.util.control.NonFatal(c) => e.addSuppressed(c)
-          }
-          throw e
-        }
+        val keyed = parts.fold(df0)(p => CompoundKey.withKey(df0, p))
+        if (upsert)
+          GraftCatalog.withUniqueKeys(keyed, storageKeyOf(key),
+            "RTAS into an 'insert'='upsert' table")((b, _) => replace(b))
+        else replace(keyed)
         overwritePointer(ident, key, loc, schema)
     }
   }

@@ -482,8 +482,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def readAsOf(tsMillis: Long): DataFrame = read(versionAt(tsMillis))
 
   /** one-row metadata summary of the head (Delta's DESCRIBE DETAIL) —
-    * everything from the manifest and table properties, no data file
-    * opened (rows ride [[count]]'s metadata path) */
+    * everything from the head manifest, table properties included; no
+    * data file opened (rows ride [[count]]'s metadata path) */
   def detail(): DataFrame = {
     val h = head
     val refs = if (h == 0) Seq.empty[FileRef] else manifestOf(h)
@@ -493,11 +493,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
         if (h == 0) 0L else count(h),
         data.map(_.bytes).sum,
         if (h == 0) -1L else commitTimestampOf(h),
-        bloomConfig().map(_._1.mkString(",")).getOrElse(""),
-        checks().keys.toSeq.sorted.mkString(","),
+        GraftTable.parseBloom(refs).map(_._1.mkString(",")).getOrElse(""),
+        GraftTable.parseChecks(refs).keys.toSeq.sorted.mkString(","),
         refs.collect { case r if r.kind == "feature" =>
           r.file.stripPrefix("feature:") }.sorted.mkString(","),
-        autoCompact().map { case (n, b, t) => s"min=$n small=$b target=$t" }
+        GraftTable.parseAutoCompact(refs)
+          .map { case (n, b, t) => s"min=$n small=$b target=$t" }
           .getOrElse("")))
       .toDF("root", "version", "oldest_version", "n_data_files",
         "n_dv_files", "n_bloom_sidecars", "n_rows", "bytes", "commit_ts",
@@ -1272,7 +1273,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
         nstats = st.map(_.nulls).getOrElse(Map.empty),
         schemaJson = schemaJson)
     }, marker)
-    bloomConfig() match {
+    GraftTable.parseBloom(base) match {
       case Some((cols, fpp)) =>
         val rowsByFile = dataStaged.refs.map(r => r.file -> r.rows).toMap
         stageBloomSidecar(files, rowsByFile, cols, fpp, df.schema) match {
@@ -1333,8 +1334,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   // ---- table properties -----------------------------------------------
   //
-  // CHECK constraints, the schema mode and the standing clustering are
-  // `kind = "prop"` manifest rows that carry their own content (see
+  // CHECK constraints, the schema mode, the standing clustering, the
+  // bloom index and the auto-compaction policy are `kind = "prop"`
+  // manifest rows that carry their own content (see
   // [[GraftTable.checkRow]]) — the manifest is their only copy. The
   // commit that changes a property writes its row, and every write
   // reads the rows from the base it composes against, so a change
@@ -1343,6 +1345,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   // validated against the old one (Delta versions its metadata in the
   // log for the same reason). Time travel, RESTORE, clones and REPLACE
   // carry the properties of the version they serve with no extra code.
+  // Side files an older engine left in a root (`bloom.conf`, ...) are
+  // ignored; only `commit.conf`, a deployment setting, is read.
 
   /** ONE metadata commit swapping the base's property rows whose file
     * `drop` selects for `add(base)` — none when the base already holds
@@ -1380,13 +1384,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // fail loudly NOW on a syntax error, not mid-ingest (Spark 4's
     // functions.expr defers parsing to analysis — call the parser)
     spark.sessionState.sqlParser.parseExpression(exprSql)
-    commitProps(GraftTable.isCheckRow(name))(_ =>
+    commitProps(GraftTable.isProp(s"check:$name"))(_ =>
       Seq(GraftTable.checkRow(name, exprSql)))
   }
 
   /** drop a CHECK constraint by name (no commit when absent) */
   def dropCheck(name: String): Long =
-    commitProps(GraftTable.isCheckRow(name))(_ => Nil)
+    commitProps(GraftTable.isProp(s"check:$name"))(_ => Nil)
 
   /** the head's CHECK constraints, name → boolean SQL expression */
   def checks(): Map[String, String] = GraftTable.parseChecks(headRefs)
@@ -1478,8 +1482,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   // ---- bloom file index -----------------------------------------------
 
-  private def bloomConfPath = s"$root/bloom.conf"
-
   /** declare a BLOOM FILE INDEX on `cols` (Delta's bloom-filter index /
     * Iceberg's puffin blobs): every file staged FROM NOW ON gets a
     * per-file bloom filter per indexed column, committed as a sidecar
@@ -1495,10 +1497,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * `cluster(...)` rewrite (re-)indexes whatever it stages, exactly
     * like Delta. The filter is sized from each file's footer row count
     * at `fpp`; values hash as widened longs (integral columns) or
-    * UTF-8 strings. Config is a table property (last writer wins) —
-    * it changes FUTURE writes only, so concurrent readers are
-    * unaffected. */
-  def indexBloom(cols: Seq[String], fpp: Double = 0.01): Unit = {
+    * UTF-8 strings. The index is a table property, ONE metadata
+    * commit (none when unchanged); it changes FUTURE writes only, so
+    * readers are unaffected. Returns the head. */
+  def indexBloom(cols: Seq[String], fpp: Double = 0.01): Long = {
     require(cols.nonEmpty, "indexBloom needs at least one column")
     require(cols.forall(c => c.nonEmpty && !c.contains(",")),
       s"column names must be non-empty and comma-free: $cols")
@@ -1508,22 +1510,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // LOGICAL name resolves here, once, at declaration time; without
     // this a post-rename indexBloom("new_name") would silently build
     // no filters (the staged frame has no such column)
-    val phys = cols.map(physicalOf(headRefs))
-    io.writeUtf8(bloomConfPath, s"cols=${phys.mkString(",")}\nfpp=$fpp\n")
+    commitProps(GraftTable.isProp("bloom"))(base =>
+      Seq(GraftTable.bloomRow(cols.map(physicalOf(base)), fpp)))
   }
 
-  /** the persisted bloom-index config — (columns, fpp), None when the
+  /** the head's bloom index — (PHYSICAL columns, fpp), None when the
     * table isn't indexed */
   def bloomConfig(): Option[(Seq[String], Double)] =
-    io.readUtf8(bloomConfPath).flatMap { s =>
-      val kv = s.linesIterator.map(_.trim).filter(_.contains("="))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-        .toMap
-      kv.get("cols")
-        .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-        .filter(_.nonEmpty)
-        .map(cols => (cols, kv.get("fpp").map(_.toDouble).getOrElse(0.01)))
-    }
+    GraftTable.parseBloom(headRefs)
 
   /** build the bloom sidecar for freshly staged `files`: one filter
     * per (file, indexed column), sized from the file's footer row
@@ -1811,18 +1805,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * Stage-once mutators (append) pass their files outside the loop and
     * re-compose metadata only. `compose` may return None to abort as a
     * no-op (e.g. an already-committed streaming batch), in which case
-    * the current head is returned.
-    *
-    * TXN CHECKPOINT (Delta's snapshot `txn` actions): every manifest
-    * this loop publishes carries the FULL set of txn ids committed so
-    * far as `kind = "txn"` rows (id in `lo`, plus one `lo = -1`
-    * checkpoint marker), managed HERE — compose's returned txn rows
-    * are discarded and the canonical set (base's ∪ this commit's) is
-    * appended, so cluster/restore can rebuild manifests freely without
-    * forgetting replay guards. [[committedTxns]] then reads ONE
-    * manifest per guarded mutation instead of every manifest in the
-    * log — the round-11 O(versions)-reads-per-streaming-batch cost,
-    * gone. */
+    * the current head is returned. */
   private def commitLoop(txn: Long = -1L)(
       compose: Seq[FileRef] => Option[(Seq[FileRef], Seq[Staged])]): Long = {
     while (true) {
@@ -1831,26 +1814,49 @@ final class GraftTable private (spark: SparkSession, val root: String,
       val base = if (h == 0) Seq.empty[FileRef] else baseSnap.refs
       compose(base) match {
         case None => return h
-        case Some((refs0, staged0)) =>
-          val (refs1, staged1) = retireDvs(base, refs0, staged0)
-          val (refs, staged) = retireBlooms(base, refs1, staged1)
-          val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
-          val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
-            txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
-          // IN-COMMIT TIMESTAMP (Delta's ICT): strictly monotonic past
-          // the base's stamp, so timestamp time travel binary-searches
-          // soundly even under clock skew or same-millisecond commits
-          val ts = math.max(System.currentTimeMillis(),
-            base.foldLeft(0L)((m, r) => math.max(m, r.ts)) + 1)
-          beforePublishHook()
-          if (tryCommit(h, refs.filterNot(_.kind == "txn") ++ txnRefs,
-                        txn, ts, baseSnap)) {
-            staged.foreach(s => s.markers.foreach(io.delete))
-            return h + 1
-          } else staged.foreach(discardStaged)
+        case Some((refs, staged)) =>
+          if (publish(h, baseSnap, refs, staged, txn)) return h + 1
+          staged.foreach(discardStaged)
       }
     }
     0L // unreachable
+  }
+
+  /** one publish attempt of `refs0` onto `baseSnap` (head `h`; null
+    * at 0), shared by both CAS loops: retire stale DV/bloom rows, add
+    * the txn checkpoint and in-commit timestamp, try the slot. A win
+    * clears every staging marker; a loss discards only what the
+    * retirements staged — `staged` is the caller's.
+    *
+    * TXN CHECKPOINT (Delta's snapshot `txn` actions): every manifest
+    * published here carries the FULL set of txn ids committed so far
+    * as `kind = "txn"` rows (id in `lo`, plus one `lo = -1`
+    * checkpoint marker) — the caller's txn rows are discarded and the
+    * canonical set (base's ∪ this commit's) is appended, so
+    * cluster/restore can rebuild manifests freely without forgetting
+    * replay guards. [[committedTxns]] then reads ONE manifest per
+    * guarded mutation instead of every manifest in the log — the
+    * round-11 O(versions)-reads-per-streaming-batch cost, gone. */
+  private def publish(h: Long, baseSnap: GraftTable.Snap,
+                      refs0: Seq[FileRef], staged: Seq[Staged],
+                      txn: Long): Boolean = {
+    val base = if (baseSnap == null) Seq.empty[FileRef] else baseSnap.refs
+    val (refs1, staged1) = retireDvs(base, refs0, staged)
+    val (refs, stagedAll) = retireBlooms(base, refs1, staged1)
+    val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
+    val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
+      txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
+    // IN-COMMIT TIMESTAMP (Delta's ICT): strictly monotonic past the
+    // base's stamp, so timestamp time travel binary-searches soundly
+    // even under clock skew or same-millisecond commits
+    val ts = math.max(System.currentTimeMillis(),
+      base.foldLeft(0L)((m, r) => math.max(m, r.ts)) + 1)
+    beforePublishHook()
+    val won = tryCommit(h, refs.filterNot(_.kind == "txn") ++ txnRefs,
+      txn, ts, baseSnap)
+    if (won) stagedAll.foreach(s => s.markers.foreach(io.delete))
+    else stagedAll.filterNot(staged.contains).foreach(discardStaged)
+    won
   }
 
   /** The CAS loop for RE-STAGING mutators (merge / applyChanges /
@@ -1921,32 +1927,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
           case Some(mm) => m = mm; myBase = base; myBaseV = h
         }
       }
-      val refs0 = base.filterNot(r =>
+      val refs = base.filterNot(r =>
         r.kind == "data" && m.removed(r.file)) ++ m.added
-      val (refs1, staged1) = retireDvs(base, refs0, m.staged)
-      val (refs, stagedAll) = retireBlooms(base, refs1, staged1)
-      val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
-      val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
-        txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
-      val ts = math.max(System.currentTimeMillis(),
-        base.foldLeft(0L)((mx, r) => math.max(mx, r.ts)) + 1)
-      beforePublishHook()
-      if (tryCommit(h, refs.filterNot(_.kind == "txn") ++ txnRefs,
-                    txn, ts, baseSnap)) {
-        stagedAll.foreach(s => s.markers.foreach(io.delete))
-        return h + 1
-      } else
-        // retire* staged per-attempt sidecar rewrites against THIS
-        // base — discard those, keep the mutation's own staged files
-        // for the rebase check at the top of the next attempt
-        stagedAll.filterNot(m.staged.contains).foreach(discardStaged)
+      // a lost race keeps the mutation's own staged files for the
+      // rebase check at the top of the next attempt
+      if (publish(h, baseSnap, refs, m.staged, txn)) return h + 1
     }
     0L // unreachable
   }
 
-  /** test seam: runs immediately before every commitLoopMutate publish
-    * attempt, so a spec can deterministically interleave a competing
-    * commit into the race window */
+  /** test seam: runs immediately before every publish attempt, so a
+    * spec can deterministically interleave a competing commit into
+    * the race window (or fail one publish) */
   private[table] var beforePublishHook: () => Unit = () => ()
 
   /** per-handle count of data/DV staging passes — the spec's witness
@@ -2019,7 +2011,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   /** the write-relevant METADATA a staged frame was prepared against:
     * declared defaults (addcol rows, materialized by `fillDefaults`)
     * and the table properties (constraints and schema mode validated
-    * by `stage`, the clustering `layoutFor` applied). A stage-once
+    * by `stage`, the bloom index it built sidecars for, the clustering
+    * `layoutFor` applied). A stage-once
     * writer whose base grew a DIFFERENT set must re-stage — its fills
     * and validation ran against the old one. Same set [[canRebase]]
     * treats as a forced re-compose. */
@@ -2053,16 +2046,17 @@ final class GraftTable private (spark: SparkSession, val root: String,
       val st = stage(hr, toPhysical(hr, layoutFor(hr, fillDefaults(hr, df))))
       var stale = false
       var done = false
+      var refs = Seq.empty[FileRef] // the manifest the last attempt composed
       val v = commitLoop(txn) { base =>
         if (alreadyDone()) { done = true; None }
         else if (metaStamp(base) != stamp) { stale = true; None }
-        else Some((compose(base, st.refs), Seq.empty))
+        else { refs = compose(base, st.refs); Some((refs, Seq.empty)) }
       }
       if (done) { discardStaged(st); return v }
       if (!stale) {
         st.markers.foreach(io.delete)
         if (autoCompactAfter)
-          maybeAutoCompact() // may advance head past the returned version
+          maybeAutoCompact(refs) // may advance head past the returned version
         return v
       }
       discardStaged(st)
@@ -2703,17 +2697,14 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   // ---- auto-compaction ----------------------------------------------
 
-  private def autoCompactConfPath = s"$root/autocompact.conf"
-
   /** enable AUTO-COMPACTION (Delta's `autoCompact` table property —
     * the built-in answer to the streaming small-file problem): after
     * every `append`/`streamAppend` commit, if the head manifest holds
     * at least `minSmallFiles` data files under `smallFileBytes`, an
     * inline bin-packing [[compact]] folds them to `targetFiles`. The
-    * policy is pure maintenance — it never changes table CONTENTS, so
-    * unlike the manifest's table properties it claims no version
-    * (a racing writer's staged rows are valid under either setting);
-    * the compaction itself is an ordinary CAS-looped commit.
+    * policy is a table property, ONE metadata commit (none when
+    * unchanged); the compaction itself is an ordinary CAS-looped
+    * commit. Returns the head.
     *
     * 100 TB cost shape: each fold is O(small-file bytes) — never
     * table-scale — and a row re-folds only while its file is still
@@ -2724,14 +2715,16 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * micro-batch forever — unbounded manifest growth is what actually
     * kills a year-old streaming table. */
   def setAutoCompact(minSmallFiles: Int, smallFileBytes: Long = 64L << 20,
-                     targetFiles: Int = 1): Unit = {
+                     targetFiles: Int = 1): Long = {
     require(minSmallFiles >= 2 && smallFileBytes > 0 && targetFiles >= 1,
       s"need minSmallFiles >= 2, smallFileBytes > 0, targetFiles >= 1")
-    io.writeUtf8(autoCompactConfPath,
-      s"$minSmallFiles $smallFileBytes $targetFiles")
+    commitProps(GraftTable.isProp("autocompact"))(_ => Seq(
+      GraftTable.autoCompactRow(minSmallFiles, smallFileBytes, targetFiles)))
   }
 
-  def clearAutoCompact(): Unit = io.delete(autoCompactConfPath)
+  /** drop the auto-compaction policy (no commit when unset) */
+  def clearAutoCompact(): Long =
+    commitProps(GraftTable.isProp("autocompact"))(_ => Nil)
 
   /** declare a STANDING ingest-time clustering (Delta liquid's
     * `CLUSTER BY` declaration; what the catalog maps `PARTITIONED BY`
@@ -2755,7 +2748,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       s"1..4 clustering columns (got ${cols.size})")
     cols.foreach(c => require(c.matches(GraftTable.ColIdent),
       s"column names are identifiers: '$c'"))
-    commitProps(GraftTable.isClusterRow) { base =>
+    commitProps(GraftTable.isProp("cluster")) { base =>
       val lcols = logicalCols(base)
       if (lcols.nonEmpty)
         cols.foreach(c => require(lcols.contains(c),
@@ -2766,7 +2759,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
   }
 
   /** drop the standing clustering */
-  def clearClusterBy(): Long = commitProps(GraftTable.isClusterRow)(_ => Nil)
+  def clearClusterBy(): Long =
+    commitProps(GraftTable.isProp("cluster"))(_ => Nil)
 
   /** the standing clustering of a version (head by default), by
     * PHYSICAL column name */
@@ -2791,20 +2785,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
       .sortWithinPartitions(cols.map(col): _*)
   }
 
-  /** the policy, if set: (minSmallFiles, smallFileBytes, targetFiles) */
+  /** the head's policy: (minSmallFiles, smallFileBytes, targetFiles) */
   def autoCompact(): Option[(Int, Long, Int)] =
-    io.readUtf8(autoCompactConfPath).map { s =>
-      val a = s.trim.split("\\s+")
-      (a(0).toInt, a(1).toLong, a(2).toInt)
-    }
+    GraftTable.parseAutoCompact(headRefs)
 
-  /** post-ingest hook: ONE manifest scan (zero FileSystem RPCs)
-    * decides; a no-op without the policy or below threshold. Never
-    * recursive — compact() has no hook. */
-  private def maybeAutoCompact(): Unit = try {
-    autoCompact() match {
+  /** post-ingest hook: the policy row and small-file count of the
+    * manifest the ingest just committed (`refs`, already in hand — zero
+    * FileSystem RPCs) decide; a no-op without the policy or below
+    * threshold. Never recursive — compact() has no hook. */
+  private def maybeAutoCompact(refs: Seq[FileRef]): Unit = try {
+    GraftTable.parseAutoCompact(refs) match {
       case Some((minSmall, smallBytes, target)) =>
-        val small = headRefs.count(r =>
+        val small = refs.count(r =>
           r.kind == "data" && r.bytes < smallBytes)
         // `small > target` too: compact() always commits a version
         // (mutator contract), and a fold that cannot shrink anything
@@ -3346,20 +3338,31 @@ object GraftTable {
     FileRef(s"col:$logical:$physical", "col", -1L, -1L)
 
   /** TABLE PROPERTY rows (`kind = "prop"`) carry their content in
-    * their `file` field (see the class's table-properties section): a
-    * CHECK constraint is `prop:check:<name>:<base64 expr>`, the
-    * enforce schema mode `prop:enforce`, the standing clustering
-    * `prop:cluster:<comma-joined physical columns>`, the catalog's
-    * upsert discipline [[UpsertRow]]. */
-  private[table] def checkRow(name: String, exprSql: String): FileRef =
-    FileRef(s"prop:check:$name:${b64(exprSql)}", "prop", -1L, -1L)
+    * their `file` field as `prop:<tag>:<content>` (see the class's
+    * table-properties section): a CHECK constraint is
+    * `prop:check:<name>:<base64 expr>`, the standing clustering
+    * `prop:cluster:<physical cols>`, the bloom index
+    * `prop:bloom:<fpp>:<physical cols>`, the auto-compaction policy
+    * `prop:autocompact:<minSmallFiles>:<smallFileBytes>:<targetFiles>`
+    * (column lists comma-joined); the enforce schema mode
+    * `prop:enforce` and the catalog's upsert discipline [[UpsertRow]]
+    * carry no content. */
+  private def propRow(tag: String, content: String): FileRef =
+    FileRef(s"prop:$tag:$content", "prop", -1L, -1L)
 
-  private[table] def isCheckRow(name: String): String => Boolean =
-    _.startsWith(s"prop:check:$name:")
+  private[table] def isProp(tag: String): String => Boolean =
+    _.startsWith(s"prop:$tag:")
+
+  /** the content of `refs`' first row under `tag` */
+  private def propContent(refs: Seq[FileRef], tag: String): Option[String] =
+    refs.collectFirst { case r if r.kind == "prop" && isProp(tag)(r.file) =>
+      r.file.stripPrefix(s"prop:$tag:") }
+
+  private[table] def checkRow(name: String, exprSql: String): FileRef =
+    propRow("check", s"$name:${b64(exprSql)}")
 
   private[table] def parseChecks(refs: Seq[FileRef]): Map[String, String] =
-    refs.collect { case r if r.kind == "prop" &&
-        r.file.startsWith("prop:check:") =>
+    refs.collect { case r if r.kind == "prop" && isProp("check")(r.file) =>
       val Array(n, e) = r.file.stripPrefix("prop:check:").split(":", 2)
       n -> unb64(e)
     }.toMap
@@ -3369,16 +3372,31 @@ object GraftTable {
 
   private[table] def clusterRows(physical: Seq[String]): Seq[FileRef] =
     if (physical.isEmpty) Nil
-    else Seq(FileRef(s"prop:cluster:${physical.mkString(",")}", "prop",
-      -1L, -1L))
-
-  private[table] val isClusterRow: String => Boolean =
-    _.startsWith("prop:cluster:")
+    else Seq(propRow("cluster", physical.mkString(",")))
 
   private[table] def parseCluster(refs: Seq[FileRef]): Seq[String] =
-    refs.collectFirst { case r if r.kind == "prop" && isClusterRow(r.file) =>
-      r.file.stripPrefix("prop:cluster:").split(',').toSeq
-    }.getOrElse(Nil)
+    propContent(refs, "cluster").map(_.split(',').toSeq).getOrElse(Nil)
+
+  private[table] def bloomRow(physical: Seq[String], fpp: Double): FileRef =
+    propRow("bloom", s"$fpp:${physical.mkString(",")}")
+
+  private[table] def parseBloom(refs: Seq[FileRef])
+      : Option[(Seq[String], Double)] =
+    propContent(refs, "bloom").map { s =>
+      val Array(fpp, cols) = s.split(":", 2)
+      (cols.split(',').toSeq, fpp.toDouble)
+    }
+
+  private[table] def autoCompactRow(minSmallFiles: Int, smallFileBytes: Long,
+                                    targetFiles: Int): FileRef =
+    propRow("autocompact", s"$minSmallFiles:$smallFileBytes:$targetFiles")
+
+  private[table] def parseAutoCompact(refs: Seq[FileRef])
+      : Option[(Int, Long, Int)] =
+    propContent(refs, "autocompact").map { s =>
+      val Array(n, b, t) = s.split(":")
+      (n.toInt, b.toLong, t.toInt)
+    }
 
   /** does `refs` hold the property row `row` (matched by kind and
     * file: decoded rows also carry their commit's stamp) */
@@ -3772,12 +3790,12 @@ object GraftTable {
     * bytes copied, O(manifest) work. Mutations copy-on-write into the
     * clone's OWN data dir, so the source never changes through the
     * clone; the clone's `expire` lists only its own data dir, so it
-    * can never vacuum a source file. The manifest's table properties
-    * (CHECK constraints, schema mode, clustering) are those of the
-    * cloned VERSION; the bloom-index and auto-compaction side configs
-    * copy from the source root. The source's txn replay guards do NOT
-    * (batch-id idempotency is per table), and the commit-arbiter
-    * choice stays a per-root deployment decision.
+    * can never vacuum a source file. The table properties (CHECK
+    * constraints, schema mode, clustering, bloom index,
+    * auto-compaction policy) are the manifest rows of the cloned
+    * VERSION. The source's txn replay guards do NOT carry (batch-id
+    * idempotency is per table), and the commit-arbiter choice stays a
+    * per-root deployment decision.
     * The dev/test-on-production shape at 100 TB: an experiment table
     * in seconds, paying only for its own divergence. Caveat (same as
     * Delta's): vacuuming the SOURCE below the cloned version breaks
@@ -3791,10 +3809,6 @@ object GraftTable {
     val t = new GraftTable(spark, root, keyCol)
     t.io.mkdirs(s"$root/commits")
     require(t.head == 0, s"table at $root already exists")
-    Seq("bloom.conf", "autocompact.conf").foreach { p =>
-      src.io.readUtf8(s"$srcRoot/$p")
-        .foreach(s => t.io.writeUtf8(s"$root/$p", s))
-    }
     t.commitLoop() (_ => Some((refs, Seq.empty)))
     t
   }

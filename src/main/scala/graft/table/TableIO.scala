@@ -84,8 +84,9 @@ private[table] final class TableIO(conf: Configuration) {
   /** create an empty marker file (parents created as needed) */
   def touch(p: String): Unit = fs(p).create(new Path(p), true).close()
 
-  /** write a small UTF-8 config file (overwrite) — table properties
-    * like the bloom-index config, never data */
+  /** write a small UTF-8 file (overwrite) — a root's deployment
+    * setting such as the commit arbiter, never data or a table
+    * property (those are manifest rows) */
   def writeUtf8(p: String, s: String): Unit = {
     val out = fs(p).create(new Path(p), true)
     try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))

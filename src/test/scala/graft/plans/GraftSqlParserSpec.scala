@@ -205,12 +205,12 @@ class GraftSqlParserSpec extends AnyFunSuite {
     assert(graft.table.GraftTable.open(base, root, "k")
       .bloomConfig().isEmpty, "EXPLAIN GRAFT INDEX must not write config")
     assert(ext.sql(s"GRAFT INDEX '$root' BLOOM (tok) FPP 0.02")
-      .head.getLong(0) == 1L)
-    ext.sql(s"GRAFT CREATE '$root' KEY k USING " +
+      .head.getLong(0) == 1L)                          // v1: the index
+    ext.sql(s"GRAFT CREATE '$root' KEY k USING " +     // v2: the data
       "SELECT id AS k, md5(CAST(id AS STRING)) AS tok FROM range(1, 101)")
     val t = graft.table.GraftTable.open(base, root, "k")
     assert(t.bloomConfig().contains((Seq("tok"), 0.02)))
-    assert(t.bloomSidecarsOf(1).nonEmpty,
+    assert(t.bloomSidecarsOf(2).nonEmpty,
       "the SQL-created table must stage a bloom sidecar")
     val tok7 = java.security.MessageDigest.getInstance("MD5")
       .digest("7".getBytes("UTF-8")).map("%02x".format(_)).mkString

@@ -31,12 +31,12 @@ class GraftCatalogSpec extends AnyFunSuite {
     lines.next(); lines.next().trim
   }
 
-  /** the key, INSERT discipline, CHECK constraints, schema mode and
-    * clustering live only in the manifest: no storage root carries a
-    * side file for any of them */
+  /** the key, INSERT discipline, CHECK constraints, schema mode,
+    * clustering, bloom index and auto-compaction policy live only in the
+    * manifest: no storage root carries a side file for any of them */
   private def assertNoKeySideFiles(name: String): Unit =
     Seq("key.conf", "insert.conf", "checks.conf", "schema.conf",
-        "cluster.conf").foreach { f =>
+        "cluster.conf", "bloom.conf", "autocompact.conf").foreach { f =>
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"${locationOf(name)}/$f")),
         s"$name's storage root holds $f")
@@ -426,10 +426,12 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gcat.rf VALUES (1, 10), (2, 20)")
     val t = GraftTable.open(spark, locationOf("rf"), "k")
     t.addCheck("v_pos", "v > 0")
+    t.indexBloom(Seq("v"))
+    t.setAutoCompact(minSmallFiles = 4)
     // the replacement query fails AT EXECUTION (ANSI divide-by-zero):
-    // the old table must survive with its constraint still armed —
-    // the configs reset needed for a schema-changing replace restores
-    // on failure instead of stripping the survivor
+    // the old table must survive with its properties still armed — a
+    // replace resets them only through its own commit, which a failure
+    // never makes
     intercept[Exception] {
       spark.sql("CREATE OR REPLACE TABLE gcat.rf " +
         "TBLPROPERTIES ('key' = 'id') AS " +
@@ -439,6 +441,8 @@ class GraftCatalogSpec extends AnyFunSuite {
       "the failed replace must not touch the data")
     assert(t.checks().contains("v_pos"),
       "the failed replace must not strip the survivor's constraints")
+    assert(t.bloomConfig().nonEmpty && t.autoCompact().nonEmpty,
+      "the failed replace must keep the bloom index and the policy")
     // ...and the constraint still enforces
     intercept[Exception] {
       spark.sql("INSERT INTO gcat.rf VALUES (3, -1)")
@@ -455,6 +459,11 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gcat.rf VALUES (1, 11)")
     assert(spark.table("gcat.rf").count() == 3,
       "the failed replace must not arm the new INSERT discipline")
+    // a replace that commits resets both
+    spark.sql("CREATE OR REPLACE TABLE gcat.rf " +
+      "TBLPROPERTIES ('key' = 'id') AS SELECT id, id AS v FROM RANGE(3)")
+    assert(t.bloomConfig().isEmpty && t.autoCompact().isEmpty,
+      "a successful replace resets the bloom index and the policy")
     // ...and one that would have dropped upsert keeps it armed
     spark.sql("DROP TABLE IF EXISTS gcat.rfu")
     spark.sql("CREATE TABLE gcat.rfu (k BIGINT, v BIGINT) " +
@@ -518,6 +527,11 @@ class GraftCatalogSpec extends AnyFunSuite {
     es.sql(s"GRAFT RESTORE '${locationOf("rc")}' TO 4")      // v6
     spark.sql("INSERT INTO gcat.rc VALUES (2, -1)")
     assert(spark.table("gcat.rc").count() == 2)
+    // so are the bloom index and the auto-compaction policy
+    es.sql(s"GRAFT INDEX '${locationOf("rc")}' BLOOM (c)")
+    es.sql(s"GRAFT AUTOCOMPACT '${locationOf("rc")}' MIN 3")
+    assertNoKeySideFiles("rc")
+    assert(t.bloomConfig().nonEmpty && t.autoCompact().nonEmpty)
   }
 
   test("atomic CTAS: the pointer registers only after the data landed") {
@@ -1032,24 +1046,5 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.table("gcat.mxs").count() == 1,
       "a refused pointer must leave the owner's storage")
     graft.util.Scratch.deleteTree(java.nio.file.Paths.get(s"$wh/mx3"))
-  }
-
-  test("a post-commit auto-compact failure never fails the ingest") {
-    val root = graft.util.Scratch.dir("graft-cat-ac")
-    val t = GraftTable.create(spark, root, "k",
-      spark.range(4).selectExpr("id AS k", "id AS v").coalesce(1))
-    t.setAutoCompact(minSmallFiles = 2, smallFileBytes = 1L << 20,
-      targetFiles = 1)
-    // corrupt the trigger config AFTER arming it: the post-commit
-    // compaction attempt now throws while parsing — the append's own
-    // commit must still report success (the data is durable; a
-    // foreachBatch driver seeing an exception would retry a batch
-    // that is already in the table)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/autocompact.conf"), "not-a-number")
-    val v = t.append(
-      spark.range(4, 8).selectExpr("id AS k", "id AS v").coalesce(1))
-    assert(v >= 2 && t.read().count() == 8,
-      "ingest succeeds even though the best-effort compaction failed")
   }
 }

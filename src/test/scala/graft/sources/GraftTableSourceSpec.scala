@@ -74,7 +74,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
     t.indexBloom(Seq("tok"))
     t.append((1L to 200L).map(k => (k, md5hex(k.toString))).toDF("k", "tok")
       .repartitionByRange(5, col("k")).sortWithinPartitions("k"))
-    val files = t.filesOf(1)
+    val files = t.filesOf(2)
     // key-range pruning: a k <= 10 query needs only the first file —
     // hide every other data file and the format read must not notice
     def hidden(fs: Seq[String])(body: => Unit): Unit = {

@@ -10,8 +10,9 @@ import graft.SparkTestSession
   * see: no fold below threshold (one commit per append), the fold
   * firing AS a separate commit on the crossing append, contents
   * bit-identical across the fold, big files carrying BY REFERENCE
-  * (never rewritten), the streamAppend path triggering too, and
-  * clearAutoCompact() disarming. */
+  * (never rewritten), the streamAppend path triggering too,
+  * clearAutoCompact() disarming, and a failed fold never failing the
+  * ingest. Setting or clearing the policy is a commit of its own. */
 class AutoCompactSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -23,19 +24,19 @@ class AutoCompactSpec extends AnyFunSuite {
     val t = GraftTable.create(spark,
       graft.util.Scratch.dir("graft-autocompact-basic"), "k",
       rows(1).repartition(1))                                     // v1
-    t.setAutoCompact(minSmallFiles = 3, smallFileBytes = 1L << 30)
-    t.append(rows(2).repartition(1))                              // v2: 2 files
-    assert(t.head == 2 && t.filesOf(2).size == 2,
+    t.setAutoCompact(minSmallFiles = 3, smallFileBytes = 1L << 30) // v2
+    t.append(rows(2).repartition(1))                              // v3: 2 files
+    assert(t.head == 3 && t.filesOf(3).size == 2,
       "below threshold: append commits alone, nothing folds")
-    t.append(rows(3).repartition(1)) // v3 (3 small files) + v4 the fold
-    assert(t.head == 4, "the crossing append must trigger the fold commit")
-    assert(t.filesOf(4).size == 1, "3 small files fold to the target")
+    t.append(rows(3).repartition(1)) // v4 (3 small files) + v5 the fold
+    assert(t.head == 5, "the crossing append must trigger the fold commit")
+    assert(t.filesOf(5).size == 1, "3 small files fold to the target")
     assert(t.read().select(col("k")).collect().map(_.getLong(0)).sorted
       .toSeq == Seq(1L, 2L, 3L), "folding never changes contents")
     // the policy is inherited state, not a one-shot: next crossing folds too
-    t.append(rows(4).repartition(1))                              // v5
-    t.append(rows(5).repartition(1))                              // v6
-    assert(t.head == 7 && t.filesOf(7).size == 1,
+    t.append(rows(4).repartition(1))                              // v6
+    t.append(rows(5).repartition(1))                              // v7
+    assert(t.head == 8 && t.filesOf(8).size == 1,
       "the policy re-arms after each fold")
   }
 
@@ -48,17 +49,17 @@ class AutoCompactSpec extends AnyFunSuite {
     assert(bigBytes > 0)
     // threshold bytes chosen so the v1 file is NOT small but the
     // 1-row appends are
-    t.setAutoCompact(minSmallFiles = 2, smallFileBytes = bigBytes)
-    t.append(rows(100).repartition(1))                            // v2
-    t.append(rows(101).repartition(1)) // v3 + v4 fold of the 2 small
-    assert(t.head == 4)
-    assert(t.filesOf(4).contains(big),
+    t.setAutoCompact(minSmallFiles = 2, smallFileBytes = bigBytes) // v2
+    t.append(rows(100).repartition(1))                            // v3
+    t.append(rows(101).repartition(1)) // v4 + v5 fold of the 2 small
+    assert(t.head == 5)
+    assert(t.filesOf(5).contains(big),
       "a file at/above smallFileBytes must carry by reference")
-    assert(t.filesOf(4).size == 2, "only the small files fold")
-    t.clearAutoCompact()
-    t.append(rows(102).repartition(1))                            // v5
-    t.append(rows(103).repartition(1))                            // v6
-    assert(t.head == 6 && t.filesOf(6).size == 4,
+    assert(t.filesOf(5).size == 2, "only the small files fold")
+    t.clearAutoCompact()                                          // v6
+    t.append(rows(102).repartition(1))                            // v7
+    t.append(rows(103).repartition(1))                            // v8
+    assert(t.head == 8 && t.filesOf(8).size == 4,
       "cleared policy: appends commit alone again")
   }
 
@@ -66,14 +67,37 @@ class AutoCompactSpec extends AnyFunSuite {
     val t = GraftTable.create(spark,
       graft.util.Scratch.dir("graft-autocompact-stream"), "k",
       rows(1).repartition(1))                                     // v1
-    t.setAutoCompact(minSmallFiles = 3, smallFileBytes = 1L << 30)
-    t.streamAppend(rows(2).repartition(1), batchId = 0)           // v2
-    t.streamAppend(rows(3).repartition(1), batchId = 1) // v3 + v4 fold
-    assert(t.head == 4 && t.filesOf(4).size == 1)
+    t.setAutoCompact(minSmallFiles = 3, smallFileBytes = 1L << 30) // v2
+    t.streamAppend(rows(2).repartition(1), batchId = 0)           // v3
+    t.streamAppend(rows(3).repartition(1), batchId = 1) // v4 + v5 fold
+    assert(t.head == 5 && t.filesOf(5).size == 1)
     // a replayed batch is a no-op — and must not re-trigger a fold
     val h = t.head
     t.streamAppend(rows(3).repartition(1), batchId = 1)
     assert(t.head == h, "replayed batch: no commit, no fold")
     assert(t.count() == 3L)
+  }
+
+  test("a post-commit auto-compact failure never fails the ingest") {
+    val t = GraftTable.create(spark,
+      graft.util.Scratch.dir("graft-autocompact-fail"), "k",
+      spark.range(4).selectExpr("id AS k", "id AS v").coalesce(1)) // v1
+    t.setAutoCompact(minSmallFiles = 2, smallFileBytes = 1L << 20,
+      targetFiles = 1)                                            // v2
+    // the append publishes first, then its fold: failing the fold's
+    // publish, the append's own commit must still report success (the
+    // data is durable; a foreachBatch caller seeing an exception would
+    // retry a batch that is already in the table)
+    var publishes = 0
+    t.beforePublishHook = () => {
+      publishes += 1
+      if (publishes == 2) throw new java.io.IOException("fold publish failed")
+    }
+    val v = try t.append(
+      spark.range(4, 8).selectExpr("id AS k", "id AS v").coalesce(1))
+    finally t.beforePublishHook = () => ()
+    assert(publishes == 2, "the append must have attempted the fold")
+    assert(v >= 2 && t.read().count() == 8,
+      "ingest succeeds even though the best-effort compaction failed")
   }
 }

@@ -178,7 +178,7 @@ class BloomIndexSpec extends AnyFunSuite {
     t.append((1L to 200L).map(k => (md5Hex(k.toString), k))
       .toDF("id", "payload")
       .repartitionByRange(5, col("payload")).sortWithinPartitions("payload"))
-    val files = t.filesOf(1)
+    val files = t.filesOf(2)
     val delta = Seq((md5Hex("7"), 7000L)).toDF("id", "payload")
     // the file that actually holds the key
     val holding = spark.read.parquet(files: _*)
@@ -188,13 +188,13 @@ class BloomIndexSpec extends AnyFunSuite {
     // hide every OTHER data file: the merge must plan, read, and
     // commit without noticing (bloom pushdown pruned them)
     hide(files.filterNot(_ == holding)) {
-      assert(t.merge(delta) == 2)
+      assert(t.merge(delta) == 3)
     }
     assert(t.read().where(col("id") === md5Hex("7"))
       .head.getLong(1) == 7000L)
     assert(t.read().count() == 200)
     // untouched files carried by reference
-    assert(t.filesOf(2).count(files.contains) == 4)
+    assert(t.filesOf(3).count(files.contains) == 4)
   }
 
   test("compact defragments accumulated bloom sidecars into one") {

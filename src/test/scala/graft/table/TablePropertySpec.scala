@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** Table properties (CHECK constraints, schema mode, standing
-  * clustering) live only in the manifest as content-carrying `prop`
-  * rows: every version records the properties it was written under,
+  * clustering, bloom index, auto-compaction policy) live only in the
+  * manifest as content-carrying `prop` rows: every version records the
+  * properties it was written under,
   * so RESTORE and clones bring back the served version's settings,
   * and a write validates against the base it composes on. */
 class TablePropertySpec extends AnyFunSuite {
@@ -35,6 +36,13 @@ class TablePropertySpec extends AnyFunSuite {
     assert(t.clusterBy() == Seq("v"))
     t.restore(vCluster - 1)
     assert(t.clusterBy().isEmpty)
+    val vBloom = t.indexBloom(Seq("v"))
+    val vPolicy = t.setAutoCompact(minSmallFiles = 5)
+    t.restore(vBloom - 1)
+    assert(t.bloomConfig().isEmpty && t.autoCompact().isEmpty)
+    t.restore(vPolicy)
+    assert(t.bloomConfig().contains((Seq("v"), 0.01)) &&
+      t.autoCompact().contains((5, 64L << 20, 1)))
     // ...and restoring a version that had them brings each back
     t.restore(vCheck)
     assert(t.checks() == Map("v_short" -> "length(v) < 4"))
@@ -45,14 +53,19 @@ class TablePropertySpec extends AnyFunSuite {
     val src = GraftTable.create(spark,
       graft.util.Scratch.dir("graft-prop-clone-src"), "k", rows(1, 2))
     val vCluster = src.setClusterBy(Seq("v"))
+    src.indexBloom(Seq("v"))
+    src.setAutoCompact(minSmallFiles = 4)
     val c1 = GraftTable.shallowClone(spark, src.root, "k",
       graft.util.Scratch.dir("graft-prop-clone-head"))
     assert(c1.clusterBy() == Seq("v"))
+    assert(c1.bloomConfig().contains((Seq("v"), 0.01)) &&
+      c1.autoCompact().contains((4, 64L << 20, 1)))
     src.addCheck("k_small", "k < 100")
     intercept[IllegalArgumentException] { src.append(rows(500)) }
     val c2 = GraftTable.shallowClone(spark, src.root, "k",
       graft.util.Scratch.dir("graft-prop-clone-old"), version = vCluster)
     assert(c2.checks().isEmpty && c2.clusterBy() == Seq("v"))
+    assert(c2.bloomConfig().isEmpty && c2.autoCompact().isEmpty)
     assert(c2.append(rows(500)) == 2)
   }
 
@@ -71,6 +84,23 @@ class TablePropertySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       GraftTable.create(spark, t.root, "k", rows(2))
     }
+    // the same for the bloom index and the auto-compaction policy; the
+    // side files an older engine kept them in are ignored
+    val u = GraftTable.open(spark,
+      graft.util.Scratch.dir("graft-prop-commits-side"), "k")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${u.root}/bloom.conf"), "cols=v\nfpp=0.01\n")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${u.root}/autocompact.conf"), "2 1073741824 1")
+    assert(u.bloomConfig().isEmpty && u.autoCompact().isEmpty)
+    assert(u.setAutoCompact(3) == 1 && u.count() == 0)
+    assert(u.setAutoCompact(3) == 1, "same policy: no commit")
+    u.append(rows(1))                                             // v2
+    u.append(rows(2))                                             // v3
+    assert(u.head == 3 && u.filesOf(3).size == 2 &&
+      u.bloomSidecarsOf(3).isEmpty, "the side files must not act")
+    assert(u.indexBloom(Seq("v")) == 4 && u.indexBloom(Seq("v")) == 4)
+    assert(u.clearAutoCompact() == 5 && u.clearAutoCompact() == 5)
   }
 
   test("enforce: a racing first write defines the schema the loser must match") {
