@@ -1,11 +1,15 @@
 package graft.dev
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev-only: per-Spark-job breakdown of one gated query's wall time.
   * Installs a listener recording every job's (id, label — the job
-  * description, else its result stage's call site —, wall seconds,
+  * description, else its result stage's call site, else, when that
+  * call site is a thread-pool frame (AQE submits its query-stage jobs
+  * from Spark's pool), the call site of the job's SQL execution —,
+  * wall seconds,
   * stage task-time sum) while the query runs at bench
   * parallelism, then prints the jobs in submission order plus the
   * driver-side gap (wall not covered by any job = planning, commit
@@ -35,18 +39,37 @@ object JobProfileProbe {
     final case class Job(id: Int, var desc: String, start: Long,
                          var end: Long = -1L, var taskMs: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    // SQL execution id -> its call site (description, else the first
+    // non-pool line of the long form)
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    def poolFrame(site: String): Boolean =
+      site.contains("CompletableFuture.java")
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         // the result stage (the job's last) is named after the
         // action's call site, e.g. "collect at GraftTable.scala:3648"
-        val d = Option(e.properties)
+        val props = Option(e.properties)
+        val site = e.stageInfos.maxBy(_.stageId).name
+        val d = props
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(e.stageInfos.maxBy(_.stageId).name)
+          .getOrElse(
+            if (!poolFrame(site)) site
+            else props
+              .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+              .flatMap(id => Option(execSite.get(id.toLong)))
+              .getOrElse(site))
         jobs.put(e.jobId, Job(e.jobId, d, e.time))
         order.add(e.jobId)
         e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val site = (s.description +: s.details.split("\n").toSeq)
+            .map(_.trim).find(l => l.nonEmpty && !poolFrame(l))
+          site.foreach(execSite.put(s.executionId, _))
+        case _ => ()
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.get(e.jobId); if (j != null) j.end = e.time

@@ -43,7 +43,7 @@ private[table] object CommitArbiter {
 
   /** single-object manifest via atomic create-if-absent (see trait
     * doc). The prepared directory holds exactly one parquet part
-    * (tryCommit coalesces to 1); its bytes PUT at the slot name —
+    * ([[SlotIO]] writes one); its bytes PUT at the slot name —
     * manifest-scale, one round trip. */
   final class ConditionalPut(io: TableIO) extends CommitArbiter {
     def publish(tmp: String, target: String): Boolean = {

@@ -36,7 +36,7 @@ import org.apache.spark.sql.graftglue.PredicateTree
   * O(change), not O(files), and readers fold back at most
   * MaxManifestChain slots to the nearest checkpoint (Delta's
   * JSON-actions-plus-checkpoint log, expressed in slot files; see
-  * [[manifestSnap]]/[[tryCommit]]). A manifest row is `(file, kind,
+  * [[manifestSnap]]/[[writeSlot]]). A manifest row is `(file, kind,
   * lo, hi, txn, stats)`: `kind` is `data` or `dv` (an x29-style
   * deletion-vector
   * sidecar of `(dv_file, dv_pos)` positions readers anti-join),
@@ -194,7 +194,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   /** the folded snapshot a version denotes, plus its delta-chain depth
     * and commit-level (txn id, in-commit stamp) — the read half of the
     * DELTA-ENCODED manifest format (Delta's log-of-actions idea,
-    * folded into the slot files; see [[tryCommit]] for the writer):
+    * folded into the slot files; see [[writeSlot]] for the writer):
     * a slot is either FULL (the entire manifest — v1 and every
     * [[GraftTable.MaxManifestChain]]-cadence or
     * bigger-than-half-rewrite checkpoint) or a DELTA against the
@@ -412,16 +412,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
         else Some(StructType(declared.map(a =>
           StructField(a.name, a.dataType, nullable = true))))
       } else schemaOf(refs)
-    phys.map { st =>
-      val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
-      StructType(st.fields.toSeq.flatMap { f =>
-        byPhys.get(f.name) match {
-          case Some("") => None // dropped
-          case Some(l)  => Some(f.copy(name = l))
-          case None     => Some(f)
-        }
-      })
-    }
+    val logical = logicalOf(refs)
+    phys.map(st => StructType(st.fields.toSeq.flatMap(f =>
+      logical(f.name).map(l => f.copy(name = l)))))
   }
 
   /** rows of `files` under the manifest-resolved snapshot schema —
@@ -446,9 +439,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def count(version: Long = -1L): Long = {
     val v = if (version < 0) head else version
     if (v == 0) return 0L
-    val refs = manifestOf(v)
-    refs.filter(_.kind == "data").map(_.rows).sum -
-      refs.filter(_.kind == "dv").map(_.hi).sum
+    liveRows(manifestOf(v))
   }
 
   /** version `v`'s commit timestamp (epoch millis): the manifest's
@@ -556,6 +547,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
     }
   }
 
+  /** physical→logical name resolution under `refs`' mapping: the
+    * logical name, None for a DROPPED column, identity for every
+    * unmapped name (names that are already logical included) */
+  private def logicalOf(refs: Seq[FileRef]): String => Option[String] = {
+    val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
+    p => byPhys.get(p) match {
+      case Some("") => None
+      case Some(l)  => Some(l)
+      case None     => Some(p)
+    }
+  }
+
   /** the key column's PHYSICAL (storage) name — what manifest `lo`/`hi`
     * ranges, stats maps, and staged files key on. Physical names are
     * immutable, so this is stable across versions. */
@@ -571,17 +574,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * project OUT, everything else (`__file`/`__pos` provenance
     * included) passes through untouched */
   private def toLogical(refs: Seq[FileRef], df: DataFrame): DataFrame = {
-    val rows = colRows(refs)
-    if (rows.isEmpty) return df
-    val byPhys = rows.map { case (l, p) => p -> l }.toMap
-    val cols = df.columns.toSeq.flatMap { c =>
-      byPhys.get(c) match {
-        case Some("") => None // dropped
-        case Some(l)  => Some(col(c).as(l))
-        case None     => Some(col(c))
-      }
-    }
-    df.select(cols: _*)
+    if (colRows(refs).isEmpty) return df
+    val logical = logicalOf(refs)
+    df.select(df.columns.toSeq.flatMap(c =>
+      logical(c).map(l => if (l == c) col(c) else col(c).as(l))): _*)
   }
 
   /** logical frame → PHYSICAL column names for staging. Rejects a
@@ -621,14 +617,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
   private def fillDefaults(refs: Seq[FileRef], df: DataFrame): DataFrame = {
     val added = GraftTable.parseAddColRows(refs)
     if (added.isEmpty) return df
-    val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
+    val logical = logicalOf(refs)
     added.foldLeft(df) { (out, a) =>
-      val logicalName = byPhys.get(a.name) match {
-        case Some("") => None // dropped since: nothing to fill
-        case Some(l)  => Some(l)
-        case None     => Some(a.name)
-      }
-      logicalName match {
+      // a column dropped since has nothing to fill
+      logical(a.name) match {
         // presence check is CASE-INSENSITIVE to match withColumn's
         // resolution (default spark.sql.caseSensitive=false): an
         // explicit "Tier" column must count as supplying "tier", or
@@ -654,13 +646,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
         schemaOf(refs).map(_.fieldNames.toSeq).getOrElse(
           readFiles(refs, data.map(_.file)).schema.fieldNames.toSeq)
       else GraftTable.parseAddColRows(refs).map(_.name)
-    if (phys.isEmpty) return Seq.empty
-    val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
-    phys.flatMap(c => byPhys.get(c) match {
-      case Some("") => None
-      case Some(l)  => Some(l)
-      case None     => Some(c)
-    })
+    phys.flatMap(logicalOf(refs))
   }
 
   /** RENAME a column (Delta's `ALTER TABLE ... RENAME COLUMN`): an
@@ -772,15 +758,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * that OMIT the column; Spark's NULL padding makes it present). */
   private[graft] def declaredDefaults(): Map[String, String] = {
     val refs = headRefs
-    val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
-    GraftTable.parseAddColRows(refs).flatMap { a =>
-      val logical = byPhys.get(a.name) match {
-        case Some("") => None // dropped since: no default to expose
-        case Some(l)  => Some(l)
-        case None     => Some(a.name)
-      }
-      for { l <- logical; d <- a.defaultSql } yield l -> d
-    }.toMap
+    val logical = logicalOf(refs)
+    // a column dropped since has no default to expose
+    GraftTable.parseAddColRows(refs).flatMap(a =>
+      for { l <- logical(a.name); d <- a.defaultSql } yield l -> d).toMap
   }
 
   /** the CURRENT LOGICAL name of this handle's key column, treating
@@ -796,16 +777,10 @@ final class GraftTable private (spark: SparkSession, val root: String,
   /** the CURRENT LOGICAL name behind a PHYSICAL column name (identity
     * when unmapped — including names that are already logical); used
     * for the key and for compound-key parts, both persisted physical */
-  private[graft] def logicalNameOf(physical: String): String = {
-    val byPhys = colRows(headRefs).map { case (l, p) => p -> l }.toMap
-    byPhys.get(physical) match {
-      case Some("") => throw new IllegalStateException(
-        s"column (physical '$physical') is marked dropped but is " +
-          "still referenced as a key component")
-      case Some(l) => l
-      case None    => physical
-    }
-  }
+  private[graft] def logicalNameOf(physical: String): String =
+    logicalOf(headRefs)(physical).getOrElse(throw new IllegalStateException(
+      s"column (physical '$physical') is marked dropped but is " +
+        "still referenced as a key component"))
 
   /** `rows` plus the feature flag (idempotent) — every verb that makes
     * the table depend on a reader capability stamps it (see
@@ -950,9 +925,16 @@ final class GraftTable private (spark: SparkSession, val root: String,
         regexp_replace(col("_metadata.file_path"), "^file:(//)?", ""))
       .withColumn("__pos", col("_metadata.row_index"))
 
-  /** total recorded positions across DV refs (each DV ref's `hi`
-    * carries its footer row count) */
-  private def dvPositions(refs: Seq[FileRef]): Long = refs.map(_.hi).sum
+  /** total recorded positions across the DV refs of `refs` (each DV
+    * ref's `hi` carries its footer row count) */
+  private def dvPositions(refs: Seq[FileRef]): Long =
+    refs.collect { case r if r.kind == "dv" => r.hi }.sum
+
+  /** a manifest's live rows off its counters: Σ data rows − Σ DV
+    * positions (exact — see [[count]]) */
+  private def liveRows(refs: Seq[FileRef]): Long =
+    refs.collect { case r if r.kind == "data" => r.rows }.sum -
+      dvPositions(refs)
 
   /** the distinct data files a DV sidecar list targets. DV files are
     * immutable once committed, so the set for a given list never
@@ -965,12 +947,15 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val key = dvFiles.sorted
     val c = dvTargetsCache
     if (c != null && c._1 == key) return c._2
-    val t = spark.read.parquet(key: _*)
-      .select(col("dv_file")).distinct()
-      .collect().map(_.getString(0)).toSet // ≤ data-file count rows
+    val t = targetsOf(spark.read.parquet(key: _*), "dv_file")
     dvTargetsCache = (key, t)
     t
   }
+
+  /** the distinct data files sidecar `rows` name in `targetCol`
+    * (≤ data-file count rows) */
+  private def targetsOf(rows: DataFrame, targetCol: String): Set[String] =
+    rows.select(col(targetCol)).distinct().collect().map(_.getString(0)).toSet
 
   /** DV-applied rows of `files` with `__file`/`__pos` provenance
     * columns — the one scan shape every mutation's refinement and
@@ -994,23 +979,30 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val dvRefs = refs.filter(_.kind == "dv")
     if (dvRefs.isEmpty) return withProv(refs, files)
     val dv = spark.read.parquet(dvRefs.map(_.file): _*)
-    def anti(base: DataFrame, side: DataFrame): DataFrame =
-      base.join(side,
-        base("__file") === dv("dv_file") && base("__pos") === dv("dv_pos"),
-        "left_anti")
-    if (dvPositions(dvRefs) <= GraftTable.DvBroadcastPositions)
-      anti(withProv(refs, files), broadcast(dv))
+    val positions = dvPositions(dvRefs)
+    if (positions <= GraftTable.DvBroadcastPositions)
+      dvJoin(withProv(refs, files), dv, positions, "left_anti")
     else {
       val targets = dvTargets(dvRefs.map(_.file))
       val (dirty, clean) = files.partition(targets)
       val applied =
         if (dirty.isEmpty) None
-        else Some(anti(withProv(refs, dirty), dv.hint("shuffle_hash")))
+        else Some(dvJoin(withProv(refs, dirty), dv, positions, "left_anti"))
       val carried = if (clean.isEmpty) None else Some(withProv(refs, clean))
       (carried.toSeq ++ applied.toSeq)
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
+
+  /** `rows` (with `__file`/`__pos` provenance) joined `how` against
+    * the deletion-vector rows `dv` on (file, position) — THE
+    * broadcast-or-shuffle choice of every DV join: `positions` within
+    * the budget broadcasts, past it the join shuffles
+    * ([[GraftTable.keySide]], the same sizing every keyed join uses) */
+  private def dvJoin(rows: DataFrame, dv: DataFrame, positions: Long,
+                     how: String): DataFrame =
+    rows.join(GraftTable.keySide(dv, positions),
+      rows("__file") === dv("dv_file") && rows("__pos") === dv("dv_pos"), how)
 
   /** zero-row frame with the table's schema (for all-insert merges) —
     * built from the manifest-recorded schema when present, so an
@@ -1094,9 +1086,24 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * selects a NULL row under three-valued logic, and min/max over the
     * non-NULL rows bounds exactly the rows a comparison can select. */
   private[table] def pruneByPredicate(data: Seq[FileRef],
-                                      predicate: Column): Seq[String] = {
-    val tree = statsTree(PredicateTree.parse(predicate), data)
-    data.filter(r => mayMatch(tree, r)).map(_.file).sorted
+                                      predicate: Column): Seq[String] =
+    predicateCandidates(data, PredicateTree.parse(predicate),
+      bloom = false)._1
+
+  /** THE candidate step of every predicate consumer (readWhere, the
+    * predicate verbs, compact's WHERE scope): the data files of `refs`
+    * whose per-file stats may satisfy the LOGICAL skeleton `tree0`
+    * (resolved and mapped physical by [[statsTree]]), then — with
+    * `bloom` — refined by the bloom sidecars ([[bloomRefine]]). Returns
+    * the sorted candidates and the resolved skeleton. */
+  private def predicateCandidates(refs: Seq[FileRef],
+                                  tree0: PredicateTree.Node,
+                                  bloom: Boolean)
+      : (Seq[String], PredicateTree.Node) = {
+    val tree = statsTree(tree0, refs)
+    val data = refs.filter(_.kind == "data")
+    val cand = data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted
+    (if (bloom) bloomRefine(refs, data, cand, tree) else cand, tree)
   }
 
   /** a parsed predicate skeleton, resolved for evaluation against
@@ -1121,10 +1128,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
       case Some(st) =>
         import org.apache.spark.sql.types.{DataType, StructField, StructType}
         val resolver = spark.sessionState.conf.resolver
-        val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
-        val tops: Seq[(String, StructField)] = st.fields.toSeq
-          .map(f => (byPhys.getOrElse(f.name, f.name), f))
-          .filter(_._1.nonEmpty)
+        val logical = logicalOf(refs)
+        val tops: Seq[(String, StructField)] =
+          st.fields.toSeq.flatMap(f => logical(f.name).map(_ -> f))
         def canon(c: String): String =
           if (!c.contains('.')) c
           else tops.find(t => resolver(t._1, c)) match {
@@ -1167,9 +1173,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * bloom bytes on executors */
   private val eval = StatsEval(keyCol)
 
-  private def mayMatch(e: PredicateTree.Node, r: FileRef): Boolean =
-    eval.mayMatch(e, r)
-
   // ---- write path -----------------------------------------------------
 
   /** land `df` as immutable files under a fresh uuid dir, lift each
@@ -1199,22 +1202,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val df = alignColumns(base, df0)
     enforceSchema(base, df) // BEFORE the write: nothing to clean up
     stageCounter.incrementAndGet()
-    io.mkdirs(dataDir)
-    val uuid = java.util.UUID.randomUUID().toString
-    val marker = s"$dataDir/.staging-$uuid"
-    io.touch(marker) // BEFORE any data file exists (expire skips it)
-    val sub = s"$dataDir/$uuid"
-    // a FAILED write (an ANSI cast mid-job, a dead executor) must not
-    // leave the marker + partial dir as staging orphans until a
-    // stale-staging sweep — clean up like a checks violation does
-    try df.write.parquet(sub)
-    catch { case e: Throwable =>
-      io.deleteTree(sub); io.delete(marker); throw e
-    }
-    val listed = io.list(sub)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .map(st => io.canon(st.getPath.toString) -> st.getLen)
-      .sortBy(_._1)
+    val (written, listed) = writeStaged(df)
     val files = listed.map(_._1)
     val sizes = listed.toMap
     // stats leaves: every top-level integral/string column PLUS every
@@ -1251,9 +1239,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // staged files (vacuum-safe — marker cleared after the delete) and
     // throws before any manifest exists
     try validateChecks(files, df.schema, GraftTable.parseChecks(base))
-    catch { case e: Throwable =>
-      io.deleteTree(sub); io.delete(marker); throw e
-    }
+    catch { case e: Throwable => discardStaged(written); throw e }
     val perFile = FooterStats.readAll(spark, files, intCols, strCols)
     // each data ref records the schema it was WRITTEN under, so every
     // later read resolves the snapshot schema from the manifest alone
@@ -1261,7 +1247,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // action, per-file-provenanced) instead of sweeping every footer
     val schemaJson = df.schema.json
     val pk = physKeyOf(base) // staged frames are PHYSICAL (x53)
-    val dataStaged = Staged(sub, files.map { f =>
+    val dataStaged = written.copy(refs = files.map { f =>
       val st = perFile.get(f)
       val (lo, hi) = st.flatMap(_.intStats.get(pk))
         .getOrElse((Long.MinValue, Long.MaxValue))
@@ -1272,7 +1258,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
         bytes = sizes.getOrElse(f, -1L),
         nstats = st.map(_.nulls).getOrElse(Map.empty),
         schemaJson = schemaJson)
-    }, marker)
+    })
     GraftTable.parseBloom(base) match {
       case Some((cols, fpp)) =>
         val rowsByFile = dataStaged.refs.map(r => r.file -> r.rows).toMap
@@ -1298,8 +1284,32 @@ final class GraftTable private (spark: SparkSession, val root: String,
     else df.select(order.map(c => col(s"`${c.replace("`", "``")}`")): _*)
   }
 
-  /** stage a deletion-vector sidecar (`dv_file`, `dv_pos` rows).
-    * Written with the positions frame's NATURAL partitioning — it
+  /** THE staging write every stage shares (data, DV and bloom
+    * sidecar): a fresh uuid dir under `data/`, its `.staging-<uuid>`
+    * marker touched BEFORE any file exists (`expire` skips marked
+    * dirs), the parquet write, and the written part files with their
+    * byte sizes. A FAILED write (an ANSI cast mid-job, a dead
+    * executor) deletes the dir and the marker before rethrowing, so it
+    * leaves no staging orphan for a stale-staging sweep. Returns the
+    * stage with no refs yet: each caller turns the files into refs. */
+  private def writeStaged(df: DataFrame): (Staged, Seq[(String, Long)]) = {
+    io.mkdirs(dataDir)
+    val uuid = java.util.UUID.randomUUID().toString
+    val marker = s"$dataDir/.staging-$uuid"
+    io.touch(marker)
+    val sub = s"$dataDir/$uuid"
+    val st = Staged(sub, Nil, marker)
+    try df.write.parquet(sub)
+    catch { case e: Throwable => discardStaged(st); throw e }
+    val listed = io.list(sub)
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map(f => io.canon(f.getPath.toString) -> f.getLen)
+      .sortBy(_._1)
+    (st, listed)
+  }
+
+  /** stage a deletion-vector sidecar (`dv_file`, `dv_pos` rows)
+    * through [[writeStaged]]. Written with the positions frame's NATURAL partitioning — it
     * comes out of the matched-files scan, so the sidecars land
     * roughly one per matched data file (Delta's per-file-DV shape)
     * and a 10⁸-position delete isn't funneled through one writer.
@@ -1307,29 +1317,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * estimate `scan`'s adaptive DV application keys on. */
   private def stageDv(df: DataFrame): Staged = {
     stageCounter.incrementAndGet()
-    io.mkdirs(dataDir)
-    val uuid = java.util.UUID.randomUUID().toString
-    val marker = s"$dataDir/.staging-$uuid"
-    io.touch(marker)
-    val sub = s"$dataDir/$uuid"
-    // a FAILED write (an ANSI cast mid-job, a dead executor) must not
-    // leave the marker + partial dir as staging orphans until a
-    // stale-staging sweep — clean up like a checks violation does
-    try df.write.parquet(sub)
-    catch { case e: Throwable =>
-      io.deleteTree(sub); io.delete(marker); throw e
-    }
-    val listed = io.list(sub)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .map(st => io.canon(st.getPath.toString) -> st.getLen)
-      .sortBy(_._1)
+    val (st, listed) = writeStaged(df)
     val conf = spark.sessionState.newHadoopConf()
-    Staged(sub,
-      listed.map { case (f, len) =>
-        val n = FooterStats.rowCount(f, conf)
-        FileRef(f, "dv", 0L, n, rows = n, bytes = len)
-      },
-      marker)
+    st.copy(refs = listed.map { case (f, len) =>
+      val n = FooterStats.rowCount(f, conf)
+      FileRef(f, "dv", 0L, n, rows = n, bytes = len)
+    })
   }
 
   // ---- table properties -----------------------------------------------
@@ -1604,28 +1597,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
   private def readSidecars(files: Seq[String]): DataFrame =
     spark.read.parquet(files: _*)
 
-  /** stage a bloom sidecar parquet of (data_file, idx_col, bloom) rows
-    * under its own uuid dir + staging marker (vacuum-safe like any
-    * stage) */
+  /** stage a bloom sidecar parquet of (data_file, idx_col, bloom,
+    * hash_kind) rows ([[writeStaged]]) */
   private def stageSidecarDf(df: DataFrame): Staged = {
-    io.mkdirs(dataDir)
-    val uuid = java.util.UUID.randomUUID().toString
-    val marker = s"$dataDir/.staging-$uuid"
-    io.touch(marker)
-    val sub = s"$dataDir/$uuid"
-    // a FAILED write (an ANSI cast mid-job, a dead executor) must not
-    // leave the marker + partial dir as staging orphans until a
-    // stale-staging sweep — clean up like a checks violation does
-    try df.write.parquet(sub)
-    catch { case e: Throwable =>
-      io.deleteTree(sub); io.delete(marker); throw e
-    }
-    val listed = io.list(sub)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .map(st => io.canon(st.getPath.toString) -> st.getLen)
-      .sortBy(_._1)
-    Staged(sub, listed.map { case (f, len) =>
-      FileRef(f, "bloom", 0L, 0L, bytes = len) }, marker)
+    val (st, listed) = writeStaged(df)
+    st.copy(refs = listed.map { case (f, len) =>
+      FileRef(f, "bloom", 0L, 0L, bytes = len) })
   }
 
   /** SIDECAR DEFRAGMENTATION, compact()'s bloom half: every commit on
@@ -1642,32 +1619,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val rows = readSidecars(bRefs.map(_.file)).coalesce(1)
     val st = stageSidecarDf(rows)
     (refs.filterNot(_.kind == "bloom") ++ st.refs, staged :+ st)
-  }
-
-  /** BLOOM RETIREMENT (the DV-retirement pattern): a commit that
-    * removes data files rewrites carried bloom sidecars down to rows
-    * whose target file survives — stale rows would otherwise
-    * accumulate forever and inflate every refinement read. Cost:
-    * sidecar-scale, paid only by file-removing commits on indexed
-    * tables. */
-  private def retireBlooms(base: Seq[FileRef], refs: Seq[FileRef],
-                           staged: Seq[Staged]): (Seq[FileRef], Seq[Staged]) = {
-    val live = refs.collect { case r if r.kind == "data" => r.file }.toSet
-    val removed = base.collect {
-      case r if r.kind == "data" && !live(r.file) => r.file }.toSet
-    val bRefs = refs.filter(_.kind == "bloom")
-    if (removed.isEmpty || bRefs.isEmpty) return (refs, staged)
-    val rows = readSidecars(bRefs.map(_.file))
-    val targets = rows.select(col("data_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (!targets.exists(removed)) return (refs, staged)
-    val noBloom = refs.filterNot(_.kind == "bloom")
-    if (targets.forall(removed)) return (noBloom, staged)
-    val liveDf = live.intersect(targets).toSeq.toDF("__live_file")
-    val survivors = rows.join(broadcast(liveDf),
-      rows("data_file") === col("__live_file"), "left_semi")
-    val st = stageSidecarDf(survivors)
-    (noBloom ++ st.refs, staged :+ st)
   }
 
   /** drop candidate files whose bloom filters prove the predicate's
@@ -1727,13 +1678,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val v = if (version < 0) head else version
     if (v == 0) return spark.emptyDataFrame
     val refs = manifestOf(v)
-    val data = refs.filter(_.kind == "data")
-    // the predicate arrives over LOGICAL names; stats/sstats/bloom
-    // rows are keyed physically — resolve struct paths, then map the
-    // skeleton across (x53)
-    val tree = statsTree(PredicateTree.parse(predicate), refs)
-    val cand0 = data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted
-    val cand = bloomRefine(refs, data, cand0, tree)
+    val (cand, _) = predicateCandidates(refs, PredicateTree.parse(predicate),
+      bloom = true)
     if (cand.isEmpty) read(v).limit(0).where(predicate)
     else toLogical(refs, scan(refs, cand).drop("__file", "__pos"))
       .where(predicate)
@@ -1745,13 +1691,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     st.extra.foreach(discardStaged)
   }
 
-  /** one CAS attempt: prepare the manifest at a temp name, publish by
-    * an atomic no-overwrite rename onto v{expected+1} ([[TableIO
-    * .publish]] — NIO ATOMIC_MOVE on local paths, FileContext rename
-    * with Rename.NONE on DFS URIs). Only the slot-taken race (another
-    * writer won) returns false; any other I/O failure is rethrown so a
-    * broken filesystem surfaces instead of livelocking the retry
-    * loop.
+  /** one CAS attempt's manifest, prepared at a temp name (returned)
+    * for [[publish]] to move onto v{expected+1}.
     *
     * DELTA-ENCODED when it pays: a commit whose change is small
     * relative to the snapshot writes only its adds, its `rm` rows,
@@ -1765,19 +1706,19 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * and whenever the delta wouldn't be smaller than half the full
     * manifest (compact, restore, cluster rewrites), so the heuristic
     * never writes a delta LARGER than the checkpoint it replaces. */
-  private def tryCommit(expected: Long, refs: Seq[FileRef],
+  private def writeSlot(expected: Long, refs: Seq[FileRef],
                         txn: Long, ts: Long,
-                        base: GraftTable.Snap): Boolean = {
+                        base: GraftTable.Snap): String = {
     val tmp = s"$commitsDir/.tmp-${java.util.UUID.randomUUID()}"
     // DRIVER-LOCAL encode (round-18, guide §1: the old toDF+coalesce(1)
     // +write paid a whole Spark job per commit for KB of metadata; the
     // on-disk format is unchanged — see [[SlotIO]])
     SlotIO.write(tmp, encodeSlot(expected, refs, base), txn, ts,
       spark.sessionState.newHadoopConf())
-    arbiter.publish(tmp, s"$commitsDir/v${expected + 1}")
+    tmp
   }
 
-  /** the delta-vs-checkpoint choice (see [[tryCommit]]) — `refs` is
+  /** the delta-vs-checkpoint choice (see [[writeSlot]]) — `refs` is
     * the commit's FULL manifest (txn rows included); returns the rows
     * the slot physically stores */
   private def encodeSlot(expected: Long, refs: Seq[FileRef],
@@ -1802,11 +1743,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * staged THIS attempt — a losing attempt's staged files are deleted
     * before the retry (no orphan accumulation under contention); the
     * winning attempt's staging markers clear after the publish.
-    * Stage-once mutators (append) pass their files outside the loop and
-    * re-compose metadata only. `compose` may return None to abort as a
-    * no-op (e.g. an already-committed streaming batch), in which case
-    * the current head is returned. */
-  private def commitLoop(txn: Long = -1L)(
+    * Stage-once mutators (append, replace) stage outside the loop, pass
+    * those files as `held` and re-compose metadata only: `held`
+    * survives a lost race, and a failure before the publish discards
+    * it with the attempt's own ([[publish]]). `compose` may return
+    * None to abort as a no-op (e.g. an already-committed streaming
+    * batch), in which case the current head is returned. */
+  private def commitLoop(txn: Long = -1L, held: Seq[Staged] = Nil)(
       compose: Seq[FileRef] => Option[(Seq[FileRef], Seq[Staged])]): Long = {
     while (true) {
       val h = head
@@ -1815,7 +1758,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       compose(base) match {
         case None => return h
         case Some((refs, staged)) =>
-          if (publish(h, baseSnap, refs, staged, txn)) return h + 1
+          if (publish(h, baseSnap, refs, held ++ staged, txn)) return h + 1
           staged.foreach(discardStaged)
       }
     }
@@ -1824,9 +1767,19 @@ final class GraftTable private (spark: SparkSession, val root: String,
 
   /** one publish attempt of `refs0` onto `baseSnap` (head `h`; null
     * at 0), shared by both CAS loops: retire stale DV/bloom rows, add
-    * the txn checkpoint and in-commit timestamp, try the slot. A win
-    * clears every staging marker; a loss discards only what the
-    * retirements staged — `staged` is the caller's.
+    * the txn checkpoint and in-commit timestamp, write the slot at a
+    * temp name ([[writeSlot]]), and move it onto v{h+1} through the
+    * [[CommitArbiter]] (an atomic no-overwrite rename or a conditional
+    * put). Only the slot-taken race (another writer won) returns
+    * false; any other I/O failure is rethrown so a broken filesystem
+    * surfaces instead of livelocking the retry loop. A win clears
+    * every staging marker; a loss discards only what the retirements
+    * staged — `staged` is the caller's. A failure BEFORE the arbiter
+    * runs (a retirement read, [[beforePublishHook]], the temp-slot
+    * write) discards every stage of the attempt, `staged` included,
+    * and rethrows: no slot can name those files. A throw from the
+    * arbiter itself keeps them — under conditional-put its outcome is
+    * unknown, and the slot may already reference them.
     *
     * TXN CHECKPOINT (Delta's snapshot `txn` actions): every manifest
     * published here carries the FULL set of txn ids committed so far
@@ -1841,21 +1794,28 @@ final class GraftTable private (spark: SparkSession, val root: String,
                       refs0: Seq[FileRef], staged: Seq[Staged],
                       txn: Long): Boolean = {
     val base = if (baseSnap == null) Seq.empty[FileRef] else baseSnap.refs
-    val (refs1, staged1) = retireDvs(base, refs0, staged)
-    val (refs, stagedAll) = retireBlooms(base, refs1, staged1)
-    val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
-    val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
-      txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
-    // IN-COMMIT TIMESTAMP (Delta's ICT): strictly monotonic past the
-    // base's stamp, so timestamp time travel binary-searches soundly
-    // even under clock skew or same-millisecond commits
-    val ts = math.max(System.currentTimeMillis(),
-      base.foldLeft(0L)((m, r) => math.max(m, r.ts)) + 1)
-    beforePublishHook()
-    val won = tryCommit(h, refs.filterNot(_.kind == "txn") ++ txnRefs,
-      txn, ts, baseSnap)
-    if (won) stagedAll.foreach(s => s.markers.foreach(io.delete))
-    else stagedAll.filterNot(staged.contains).foreach(discardStaged)
+    var attempt = staged // every stage a pre-publish failure discards
+    val tmp = try {
+      val refs = Seq("dv", "bloom").foldLeft(refs0) { (r, kind) =>
+        val (out, st) = retireSidecars(kind, base, r, attempt)
+        attempt = st
+        out
+      }
+      val txns = txnsIn(base) ++ (if (txn >= 0) Set(txn) else Set.empty)
+      val txnRefs = FileRef("txn:ckpt", "txn", -1L, -1L) +:
+        txns.toSeq.sorted.map(t => FileRef(s"txn:$t", "txn", t, t))
+      // IN-COMMIT TIMESTAMP (Delta's ICT): strictly monotonic past the
+      // base's stamp, so timestamp time travel binary-searches soundly
+      // even under clock skew or same-millisecond commits
+      val ts = math.max(System.currentTimeMillis(),
+        base.foldLeft(0L)((m, r) => math.max(m, r.ts)) + 1)
+      beforePublishHook()
+      writeSlot(h, refs.filterNot(_.kind == "txn") ++ txnRefs, txn, ts,
+        baseSnap)
+    } catch { case e: Throwable => attempt.foreach(discardStaged); throw e }
+    val won = arbiter.publish(tmp, s"$commitsDir/v${h + 1}")
+    if (won) attempt.foreach(s => s.markers.foreach(io.delete))
+    else attempt.filterNot(staged.contains).foreach(discardStaged)
     won
   }
 
@@ -1975,33 +1935,42 @@ final class GraftTable private (spark: SparkSession, val root: String,
     wNewDvs.isEmpty || !dvTargets(wNewDvs).exists(depends)
   }
 
-  /** DV RETIREMENT (the round-11 advisor's monotonic-growth fix): a
-    * commit that REMOVES data files (COW merge/delete rewrite, compact
-    * fold) rewrites the carried deletion vectors down to the rows
-    * whose target file survives — a rewritten file already applied its
-    * DV rows, so they are dead weight that would otherwise accumulate
-    * forever, inflate `dvPositions`, and permanently force every scan
-    * onto the shuffle path. Cost: DV-scale (never table-scale), paid
-    * only by file-removing commits on tables that HAVE DVs; a commit
-    * whose DV targets all survive keeps its refs untouched. A DV
-    * emptied entirely just drops. */
-  private def retireDvs(base: Seq[FileRef], refs: Seq[FileRef],
-                        staged: Seq[Staged]): (Seq[FileRef], Seq[Staged]) = {
+  /** SIDECAR RETIREMENT, one routine for both sidecar kinds (it keeps
+    * sidecars from growing monotonically): a commit that REMOVES
+    * data files (COW merge/delete rewrite, compact fold) rewrites the
+    * carried `kind` sidecars — deletion vectors (`dv`, rows keyed by
+    * `dv_file`) or bloom filters (`bloom`, keyed by `data_file`) — down
+    * to the rows whose target file survives. A rewritten file already
+    * applied its DV rows and re-indexed its bloom rows, so stale rows
+    * are dead weight that would otherwise accumulate forever: DVs
+    * inflate `dvPositions` and permanently force every scan onto the
+    * shuffle path, blooms inflate every refinement read. Cost:
+    * sidecar-scale (never table-scale), and ZERO reads unless the
+    * commit removes a file and the table has sidecars of the kind; a
+    * commit whose targets all survive keeps its refs untouched, and a
+    * sidecar set emptied entirely just drops. */
+  private def retireSidecars(kind: String, base: Seq[FileRef],
+                             refs: Seq[FileRef], staged: Seq[Staged])
+      : (Seq[FileRef], Seq[Staged]) = {
     val live = refs.collect { case r if r.kind == "data" => r.file }.toSet
     val removed = base.collect {
       case r if r.kind == "data" && !live(r.file) => r.file }.toSet
-    val dvRefs = refs.filter(_.kind == "dv")
-    if (removed.isEmpty || dvRefs.isEmpty) return (refs, staged)
-    val dv = spark.read.parquet(dvRefs.map(_.file): _*)
-    val targets = dvTargets(dvRefs.map(_.file))
+    val side = refs.filter(_.kind == kind).map(_.file)
+    if (removed.isEmpty || side.isEmpty) return (refs, staged)
+    val rows = spark.read.parquet(side: _*)
+    val (targetCol, restage) =
+      if (kind == "dv") ("dv_file", stageDv _)
+      else ("data_file", stageSidecarDf _)
+    val targets =
+      if (kind == "dv") dvTargets(side) else targetsOf(rows, targetCol)
     if (!targets.exists(removed)) return (refs, staged)
-    val noDv = refs.filterNot(_.kind == "dv")
-    if (targets.forall(removed)) return (noDv, staged) // all stale: drop
+    val kept = refs.filterNot(_.kind == kind)
+    if (targets.forall(removed)) return (kept, staged) // all stale: drop
     val liveDf = live.intersect(targets).toSeq.toDF("__live_file")
-    val survivors = dv.join(broadcast(liveDf),
-      dv("dv_file") === col("__live_file"), "left_semi")
-    val st = stageDv(survivors)
-    (noDv ++ st.refs, staged :+ st)
+    val survivors = rows.join(broadcast(liveDf),
+      rows(targetCol) === col("__live_file"), "left_semi")
+    val st = restage(survivors)
+    (kept ++ st.refs, staged :+ st)
   }
 
   /** the committed-txn set a manifest's checkpoint rows witness */
@@ -2047,14 +2016,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
       var stale = false
       var done = false
       var refs = Seq.empty[FileRef] // the manifest the last attempt composed
-      val v = commitLoop(txn) { base =>
+      val v = commitLoop(txn, held = Seq(st)) { base =>
         if (alreadyDone()) { done = true; None }
         else if (metaStamp(base) != stamp) { stale = true; None }
         else { refs = compose(base, st.refs); Some((refs, Seq.empty)) }
       }
       if (done) { discardStaged(st); return v }
       if (!stale) {
-        st.markers.foreach(io.delete)
         if (autoCompactAfter)
           maybeAutoCompact(refs) // may advance head past the returned version
         return v
@@ -2106,29 +2074,13 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * makes MERGE-in-foreachBatch exactly-once — a replayed micro-batch
     * must not double-apply its upserts (plain Delta MERGE in
     * foreachBatch is NOT replay-safe without a txn guard; w20 gates
-    * the safe pattern). */
+    * the safe pattern). A caller that already counted the delta (x69's
+    * one-aggregate duplicate guard) passes the count as
+    * `preCountedKeys`; otherwise the key pass counts it. The keyed
+    * apply [[applyKeyed]] runs it, every delta row a postimage. */
   def merge(delta: DataFrame, txn: Long = -1L,
-            preCountedKeys: Long = -1L): Long = {
-    if (txn >= 0 && committedTxns().contains(txn)) return head
-    // materialize the delta ONCE (round-18, guide §1/§5): the key
-    // pass, the matched-file join and the staged rewrite each act on
-    // it — an unpersisted delta (often a join or subquery output)
-    // re-executed its whole plan per action, for zero benefit; delta
-    // frames are change-scale, the same budget GraftSqlMergeCommand's
-    // source materialization already assumes
-    val mat = delta.persist(org.apache.spark.storage.StorageLevel
-      .MEMORY_AND_DISK)
-    try {
-      val dkeys = mat.select(col(keyCol))
-      // callers that already counted the delta (x69's one-aggregate
-      // duplicate guard) pass the count in; otherwise the key pass
-      // counts it
-      commitLoopMutate(txn = txn) { (_, base) =>
-        if (txn >= 0 && committedTxns().contains(txn)) None
-        else composeApply(base, mat, dkeys, preCountedKeys)
-      }
-    } finally mat.unpersist()
-  }
+            preCountedKeys: Long = -1L): Long =
+    applyKeyed(delta, identity, txn, preCountedKeys, None)
 
   /** a keyed statement's candidate read at the head — Delta's
     * findTouchedFiles input: ONE key pass ([[keyPass]]) prunes the
@@ -2144,11 +2096,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   def readCandidates(keys: DataFrame): GraftTable.KeyedRead = {
     val v = head
     val base = refsAt(v)
-    val data = base.filter(_.kind == "data")
-    val dkeys = keys.select(col(keyCol))
-    val pk = physKeyOf(base)
-    val (pruned, nKeys) = keyPass(data, dkeys, pk, countKeys = true)
-    val cand = bloomRefineKeys(base, data, pruned, dkeys, nKeys, pk)
+    val (cand, nKeys) = keyCandidates(base, keys.select(col(keyCol)), -1L)
     val rows =
       if (cand.isEmpty)
         read(v).limit(0).withColumn("__file", lit(null).cast("string"))
@@ -2182,10 +2130,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * it is one commit a reader can never observe a half-applied state
     * (an upsert-then-delete split across two versions could).
     *
-    * Planning is stats-pruned over every feed key regardless of its
-    * change type (each may touch an existing file) and refined to the
-    * exactly-matched files — the same two-phase read-set as `merge`,
-    * so a day's CDC volume against a 100 TB table rewrites only the
+    * It is the keyed apply `merge` runs ([[applyKeyed]]), with only
+    * the non-delete rows as postimages: planning is stats-pruned over
+    * every feed key regardless of its change type (each may touch an
+    * existing file) and refined to the exactly-matched files, so a
+    * day's CDC volume against a 100 TB table rewrites only the
     * files holding affected keys. Deletes of keys the table never had
     * are no-ops (the feed may be a superset replay).
     *
@@ -2213,27 +2162,38 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * identity rows under the same key. */
   def applyChanges(feed: DataFrame, txn: Long = -1L,
                    preCountedKeys: Long = -1L,
-                   touched: Option[GraftTable.Touched] = None): Long = {
+                   touched: Option[GraftTable.Touched] = None): Long =
+    applyKeyed(feed,
+      _.where(col("change_type") =!= "delete").drop("change_type"),
+      txn, preCountedKeys, touched)
+
+  /** the one entry of the KEYED apply, shared by [[merge]] (every
+    * delta row is a postimage: `post` is identity) and [[applyChanges]]
+    * (`post` keeps the feed's non-delete rows): the txn replay guard,
+    * then ONE materialization of the feed — the key pass, the
+    * matched-file join and the staged rewrite each act on it, and an
+    * unpersisted feed (often a join, a subquery output, or a pruned
+    * sibling scan + exceptAll) would re-execute its whole plan per
+    * action; feeds are change-scale by contract. A caller with a
+    * `touched` footprint took it by evaluating the feed, so it holds
+    * the feed materialized already: a second cache would only cost a
+    * job. Then the CAS loop, with the replay guard re-checked inside,
+    * runs [[composeApply]] over ALL feed keys; `touched` skips the
+    * planning for a commit composed against its version. */
+  private def applyKeyed(feed: DataFrame, post: DataFrame => DataFrame,
+                         txn: Long, preCountedKeys: Long,
+                         touched: Option[GraftTable.Touched]): Long = {
     if (txn >= 0 && committedTxns().contains(txn)) return head
-    // materialize the feed ONCE (round-18, guide §1/§5): the subquery
-    // DML commands build feeds whose plans embed a pruned sibling
-    // scan + exceptAll — re-executing that per action (key pass,
-    // matched files, staged rewrite) multiplied the mutation's read
-    // cost; feeds are change-scale by contract, the same budget the
-    // MERGE source materialization assumes. A caller with a footprint
-    // took it by evaluating the feed, so it holds the feed
-    // materialized already: a second cache would only cost a job.
     val mat =
       if (touched.isDefined) feed
       else feed.persist(org.apache.spark.storage.StorageLevel
         .MEMORY_AND_DISK)
     try {
-      val post = mat.where(col("change_type") =!= "delete")
-        .drop("change_type")
-      val fkeys = mat.select(col(keyCol))
+      val postimages = post(mat)
+      val keys = mat.select(col(keyCol))
       commitLoopMutate(txn = txn) { (v, base) =>
         if (txn >= 0 && committedTxns().contains(txn)) None
-        else composeApply(base, post, fkeys, preCountedKeys,
+        else composeApply(base, postimages, keys, preCountedKeys,
           matched0 = touched.collect { case t if t.version == v => t.files })
       }
     } finally if (touched.isEmpty) mat.unpersist()
@@ -2277,8 +2237,8 @@ final class GraftTable private (spark: SparkSession, val root: String,
     *
     * The files to rewrite are `matched0` when the caller holds the
     * exact footprint for THIS base (applyChanges' `touched`; no
-    * planning job at all), else planned here: the key pass prunes and
-    * counts `allKeys`, bloom sidecars refine, and one scan of the
+    * planning job at all), else planned here: [[keyCandidates]] prunes
+    * and counts `allKeys`, and one scan of the
     * candidates finds the files holding a key. `nKeys0` is the key
     * frame's row count when the caller has it (-1 = take the key
     * pass's); it sizes the key-side joins ([[GraftTable.keySide]]). */
@@ -2289,15 +2249,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
                            matched0: Option[Seq[String]] = None)
       : Option[GraftTable.Mutation] = {
       val data = base.filter(_.kind == "data")
-      val pk = physKeyOf(base)
       val (matched, nKeys) = matched0 match {
         case Some(fs) =>
           (fs.sorted, if (nKeys0 >= 0) nKeys0 else allKeys.count())
         case None =>
-          val (pruned, n) =
-            keyPass(data, allKeys, pk, countKeys = nKeys0 < 0)
-          val nk = if (nKeys0 >= 0) nKeys0 else n
-          val cand = bloomRefineKeys(base, data, pruned, allKeys, nk, pk)
+          val (cand, nk) = keyCandidates(base, allKeys, nKeys0)
           (if (cand.isEmpty) Seq.empty[String]
            else matchedFiles(base, cand, allKeys, nk), nk)
       }
@@ -2350,7 +2306,21 @@ final class GraftTable private (spark: SparkSession, val root: String,
       // OUR keys (a kept foreign file with a delta key would duplicate
       // it against our staged upsert row)
       Some(GraftTable.Mutation(ms, st.refs, Seq(st), ms,
-        wAdded => pruneByKeys(wAdded, allKeys, pk).nonEmpty))
+        wAdded => pruneByKeys(wAdded, allKeys, physKeyOf(base)).nonEmpty))
+  }
+
+  /** THE candidate step of every keyed statement (readCandidates and
+    * the keyed apply): the [[keyPass]] over `keys` (a frame carrying
+    * the key column), then [[bloomRefineKeys]]. `nKeys0` is the key
+    * frame's row count when the caller has it (-1 = the key pass
+    * counts). Returns the candidate files and the key count. */
+  private def keyCandidates(base: Seq[FileRef], keys: DataFrame,
+                            nKeys0: Long): (Seq[String], Long) = {
+    val data = base.filter(_.kind == "data")
+    val pk = physKeyOf(base)
+    val (pruned, n) = keyPass(data, keys, pk, countKeys = nKeys0 < 0)
+    val nKeys = if (nKeys0 >= 0) nKeys0 else n
+    (bloomRefineKeys(base, data, pruned, keys, nKeys, pk), nKeys)
   }
 
   /** bloom refinement of a MERGE's key-pruned candidates — Delta's
@@ -2365,13 +2335,11 @@ final class GraftTable private (spark: SparkSession, val root: String,
     * unless the key column is bloom-indexed. */
   private def bloomRefineKeys(base: Seq[FileRef], data: Seq[FileRef],
                               cand: Seq[String], allKeys: DataFrame,
-                              nKeys: Long,
-                              physKey: String = null): Seq[String] = {
+                              nKeys: Long, pk: String): Seq[String] = {
     if (cand.isEmpty || nKeys > GraftTable.BloomKeyPushdown ||
         !base.exists(_.kind == "bloom")) return cand
     // the IN skeleton probes bloom sidecars + stats, both keyed by the
-    // key's PHYSICAL name (identity on unmapped tables)
-    val pk = if (physKey == null) keyCol else physKey
+    // key's PHYSICAL name `pk` (identity on unmapped tables)
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     val tree = allKeys.schema.fields.find(_.name == keyCol)
       .map(_.dataType) match {
@@ -2407,11 +2375,12 @@ final class GraftTable private (spark: SparkSession, val root: String,
     matchedFilesPlan(base, cand, allKeys, nKeys)
       .collect().map(_.getString(0)).toSeq.sorted
 
-  /** the predicate verbs' shared planning (delete / update /
-    * overwriteWhere): stats-prune the base's data files, bloom-refine
-    * the candidates, then scan ONLY the candidates for the files
-    * holding a row where `predicate` is TRUE (one Spark job, none when
-    * nothing survives pruning). The predicate speaks LOGICAL names:
+  /** the predicate verbs' matched files (delete / update /
+    * overwriteWhere): [[predicateCandidates]] stats-prunes and
+    * bloom-refines the base's data files, then ONE scan of the
+    * candidates finds the files holding a row where `predicate` is
+    * TRUE (one Spark job, none when nothing survives pruning). The
+    * predicate speaks LOGICAL names:
     * its skeleton `tree0` maps to physical for stats/bloom pruning,
     * and rows evaluate on the logically-projected scan (x53). Also
     * returns the foreign-add conflict test for the rebase check: a
@@ -2422,10 +2391,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
   private def matchPredicate(base: Seq[FileRef], tree0: PredicateTree.Node,
                              predicate: Column)
       : (Seq[String], Seq[FileRef] => Boolean) = {
-    val tree = statsTree(tree0, base)
-    val data = base.filter(_.kind == "data")
-    val cand = bloomRefine(base, data,
-      data.filter(r => eval.mayMatch(tree, r)).map(_.file).sorted, tree)
+    val (cand, tree) = predicateCandidates(base, tree0, bloom = true)
     val matched =
       if (cand.isEmpty) Seq.empty[String]
       else toLogical(base, scan(base, cand)).where(predicate)
@@ -2629,7 +2595,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
       else shaped.repartitionByRange(clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
     val st = stage(Seq.empty, laidOut)
-    val v = commitLoop() { _ =>
+    commitLoop(held = Seq(st)) { _ =>
       // the replacement ignores the base snapshot entirely: fresh
       // declarations + staged files ARE the table (txn rows are
       // re-attached canonically by the loop); the NEW stamps ride the
@@ -2639,8 +2605,6 @@ final class GraftTable private (spark: SparkSession, val root: String,
       Some((withFeature(addRows, "addcol") ++ st.refs
         ++ GraftTable.catalogStamps(keyRecord, upsert, clusterBy), Seq.empty))
     }
-    st.markers.foreach(io.delete)
-    v
   }
 
   /** small-file compaction (OPTIMIZE): bin-packs only files under
@@ -2662,11 +2626,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
       // no matching rows is harmless (rows are unchanged either way).
       val scoped = where match {
         case Some(p) =>
-          // logical predicate vs physical-name-keyed stats (x53),
-          // struct paths and qualifiers resolved like every other
-          // predicate consumer
-          val tree = statsTree(PredicateTree.parse(p), base)
-          data.filter(r => eval.mayMatch(tree, r))
+          val cand = predicateCandidates(base, PredicateTree.parse(p),
+            bloom = false)._1.toSet
+          data.filter(r => cand(r.file))
         case None => data
       }
       // size off the manifest's byte counters — zero FileSystem RPCs
@@ -2772,14 +2734,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
   private def layoutFor(refs: Seq[FileRef], df: DataFrame): DataFrame = {
     val phys = GraftTable.parseCluster(refs)
     if (phys.isEmpty) return df
-    val byPhys = colRows(refs).map { case (l, p) => p -> l }.toMap
-    val cols = phys.flatMap { p =>
-      byPhys.get(p) match {
-        case Some("") => None // dropped since: stops participating
-        case Some(l)  => Some(l)
-        case None     => Some(p)
-      }
-    }.filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
+    // a column dropped since stops participating
+    val cols = phys.flatMap(logicalOf(refs))
+      .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
     if (cols.isEmpty) df
     else df.repartitionByRange(cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
@@ -3096,11 +3053,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
       val snap = manifestSnap(v)
       val data = snap.refs.filter(_.kind == "data")
       val dvs = snap.refs.filter(_.kind == "dv")
-      // live rows = Σ data rows − Σ dv positions; bytes of every file
-      // the snapshot references (data, DV and bloom sidecars)
-      val nRows: Option[Long] =
-        if (data.isEmpty) None
-        else Some(data.map(_.rows).sum - dvs.map(_.rows).sum)
+      // bytes of every file the snapshot references (data, DV and
+      // bloom sidecars)
+      val nRows = if (data.isEmpty) None else Some(liveRows(snap.refs))
       val bytes = snap.refs.collect {
         case r if r.kind == "data" || r.kind == "dv" || r.kind == "bloom" =>
           r.bytes
@@ -3181,16 +3136,7 @@ final class GraftTable private (spark: SparkSession, val root: String,
         val hit = carried.filter(targets)
         if (hit.isEmpty) schema
         else {
-          val c = scan(from, hit)
-          // same adaptive shape as scan(): a window whose deletes
-          // exceed the broadcast budget semi-joins via shuffle
-          val side =
-            if (dvPositions(newDvRefs) <= GraftTable.DvBroadcastPositions)
-              broadcast(dv)
-            else dv.hint("shuffle_hash")
-          c.join(side,
-              c("__file") === dv("dv_file") && c("__pos") === dv("dv_pos"),
-              "left_semi")
+          dvJoin(scan(from, hit), dv, dvPositions(newDvRefs), "left_semi")
             .drop("__file", "__pos")
         }
       }
@@ -3212,13 +3158,9 @@ final class GraftTable private (spark: SparkSession, val root: String,
     // a feed window spanning a rename boundary still joins); output
     // rows project to toV's LOGICAL mapping, dropped columns omitted
     val pk = physKeyOf(to)
-    val byPhys = colRows(to).map { case (lg, p) => p -> lg }.toMap
-    val outCols: Seq[(String, String)] = dataCols.flatMap(c =>
-      byPhys.get(c) match {
-        case Some("") => None
-        case Some(lg) => Some(c -> lg)
-        case None     => Some(c -> c)
-      })
+    val logical = logicalOf(to)
+    val outCols: Seq[(String, String)] =
+      dataCols.flatMap(c => logical(c).map(c -> _))
     val l = leftC.select(dataCols.map(c => col(c).as(s"__l_$c")): _*)
     val r = rightC.select(dataCols.map(c => col(c).as(s"__r_$c")): _*)
     val same = dataCols
@@ -3272,23 +3214,18 @@ final class GraftTable private (spark: SparkSession, val root: String,
     val toData = to.filter(_.kind == "data")
     val avgRowBytes = math.max(64L,
       toData.map(_.bytes).sum / math.max(1L, toData.map(_.rows).sum))
-    val newDvPositions = to.collect {
-      case r if r.kind == "dv" && !fdv(r.file) => r.hi } // footer counts
     (f.keySet -- t.keySet).toSeq.map(f).sum +
       (t.keySet -- f.keySet).toSeq.map(t).sum +
-      newDvPositions.sum * avgRowBytes
+      dvPositions(to.filterNot(r => fdv(r.file))) * avgRowBytes
   }
 
   // test seam: a completed-but-uncommitted stage IS the mid-commit state
-  // the vacuum-safety race is about (stage() returns, tryCommit hasn't
+  // the vacuum-safety race is about (stage() returns, publish hasn't
   // run) — exposed so the spec can hold a table in exactly that state
   private[table] def stageForTest(df: DataFrame): Staged =
     stage(headRefs, df)
-  private[table] def adoptForTest(st: Staged): Long = {
-    val v = commitLoop() (base => Some((base ++ st.refs, Seq.empty)))
-    st.markers.foreach(io.delete)
-    v
-  }
+  private[table] def adoptForTest(st: Staged): Long =
+    commitLoop(held = Seq(st)) (base => Some((base ++ st.refs, Seq.empty)))
 }
 
 object GraftTable {
@@ -3599,8 +3536,9 @@ object GraftTable {
     * would strain the driver) */
   private[table] val DvBroadcastPositions: Long = 1L << 20
 
-  /** the key-side of a keyed join, sized ADAPTIVELY the way `scan`
-    * sizes DV application: a side of `nKeys` rows within
+  /** the key-side of a keyed join, sized ADAPTIVELY — the one
+    * broadcast-or-shuffle choice of the keyed joins and of every DV
+    * join (`dvJoin`): a side of `nKeys` rows within
     * [[DvBroadcastPositions]] ships as one cheap hash side; past it the
     * join shuffles (shuffled-hash, never a driver-memory-bound
     * broadcast) — a day's CDC backfill of 10⁸ keys against a 100 TB

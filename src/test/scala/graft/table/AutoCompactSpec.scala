@@ -99,5 +99,14 @@ class AutoCompactSpec extends AnyFunSuite {
     assert(publishes == 2, "the append must have attempted the fold")
     assert(v >= 2 && t.read().count() == 8,
       "ingest succeeds even though the best-effort compaction failed")
+    // the fold failed before its publish: its staged files are gone —
+    // no `.staging-*` marker and no unreferenced data file remain
+    val markers = new java.io.File(s"${t.root}/data").listFiles()
+      .filter(_.getName.startsWith(".staging-"))
+    assert(markers.isEmpty,
+      s"left-behind staging markers: ${markers.map(_.getName).toSeq}")
+    assert(GraftTable.open(spark, t.root, "k")
+      .expire(keepLast = t.head.toInt).isEmpty,
+      "every physical file must be referenced by a retained manifest")
   }
 }

@@ -194,4 +194,39 @@ class ColumnMappingSpec extends AnyFunSuite {
     val data = refs.filter(_.kind == "data")
     assert(t2.pruneByKeys(data, Seq(2L).toDF("id"), "k").size < data.size)
   }
+
+  test("standing clustering follows a rename and stops at a drop") {
+    val t = GraftTable.create(spark,
+      graft.util.Scratch.dir("graft-colmap-cluster"), "k",
+      Seq((1L, 1L, "s1")).toDF("k", "c", "v"))
+    t.setClusterBy(Seq("c"))
+    t.renameColumn("c", "d")
+    // one file per range partition: AQE would coalesce this tiny
+    // append into a single partition
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      val before = t.filesOf(t.head).toSet
+      t.append((100L until 140L).map(i => (i, (i * 37) % 40, s"s$i"))
+        .toDF("k", "d", "v").repartition(4))
+      val added = t.manifestOf(t.head)
+        .filter(r => r.kind == "data" && !before(r.file))
+      assert(added.size > 1, "the append must land several files")
+      // stats stay keyed by the physical name behind the rename
+      val ranges = added.map(_.stats("c")).sortBy(_._1)
+      ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
+        assert(hi < lo, s"the new files overlap on c: $ranges")
+      }
+      t.dropColumn("d")
+      val v = t.append(Seq((200L, "s200"), (201L, "s201")).toDF("k", "v")
+        .repartition(2))
+      assert(t.count(v) == 43L)
+      assert(t.clusterBy() == Seq("c"),
+        "the standing clustering still names the physical column")
+    } finally prior match {
+      case Some(p) => spark.conf.set(coalesce, p)
+      case None => spark.conf.unset(coalesce)
+    }
+  }
 }
