@@ -44,11 +44,13 @@ object WordCountPipeline {
     * maintains the per-word running total but emits one record per
     * *stamped* input token only (`ts != -1`), carrying the timestamp and
     * sourceId through for the latency sink — the reference's sampled
-    * latency channel. Append-mode compatible. */
+    * latency channel. Append-mode compatible. Keyed by the `word`
+    * column itself: `groupByKey(_.word)` would add an `AppendColumns`
+    * step and ship every word twice through the shuffle. */
   def statefulCounts(tokens: Dataset[Token]): Dataset[WordCount] = {
     import tokens.sparkSession.implicits._
     tokens
-      .groupByKey(_.word)
+      .groupBy(col("word")).as[String, Token]
       .flatMapGroupsWithState[Long, WordCount](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (word: String, it: Iterator[Token], state: GroupState[Long]) =>

@@ -24,7 +24,11 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
   *    to moving the source INTO an existing destination directory
   *    (HDFS-style semantics), so two racing writers can both "win" a
   *    slot — reproduced by this round's concurrency spec before the
-  *    scheme routing, losing 1-2 of 6 concurrent commits;
+  *    scheme routing, losing 1-2 of 6 concurrent commits. (Every
+  *    other local operation here does use that connector, which
+  *    `core-site.xml` maps to [[graft.util.NioLocalFileSystem]] so a
+  *    create or mkdir starts no `chmod` process; the java.nio publish
+  *    is about atomicity, not forks);
   *  - DFS URIs (hdfs:// and rename-atomic peers) use
   *    `FileContext.rename(Options.Rename.NONE)` — the primitive
   *    Delta's HDFSLogStore is built on: the NameNode serializes it,
